@@ -66,7 +66,10 @@ DASHBOARD_TICKS = 480  # 80 min of history
 DASHBOARD_POSITIONS = 10
 INGEST_HISTORY_TICKS = 180  # 30 min
 CYCLE_TICKS = 6  # one landed file = 60 s of envelopes
-INGEST_CYCLES = 60  # staged at set-up; more than any run lands
+#: ingest_with_reads lands this many cycles in its warm-up, after reading
+#: the history once with the probe and each rotation panel: the stream's
+#: first batch after the history still runs on a cold JVM
+INGEST_WARM_CYCLES = 1
 #: a run measures round(--seconds / this) iterations (at least one, two
 #: when tracing), so every run of a seed measures the same work; one
 #: iteration (a refresh, or one ingest cycle per rotation panel) takes
@@ -145,11 +148,20 @@ def start_session(work: str):
         shuffle_partitions=CORES,
         extra_conf={
             # a fixed 1 GiB heap: the JVM's resident size then tracks what
-            # the run touches, not how far the collector let the heap grow
+            # the run touches, not how far the collector let the heap grow;
+            # the JVM sizes its compiler and collector threads for CORES
+            # processors and collects on one, so the run's own threads
+            # leave a core to the Python driver
             "spark.driver.memory": "1g",
             "spark.driver.extraJavaOptions":
-                f"-Xms1g -XX:-UsePerfData -Djava.io.tmpdir={local}",
+                f"-Xms1g -XX:-UsePerfData -XX:ActiveProcessorCount={CORES} "
+                f"-XX:+UseSerialGC -Djava.io.tmpdir={local}",
             "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
+            # an idle stream lists its directory every pollingDelay (10 ms
+            # by default, about half a core here), beside every probe and
+            # panel read; at 100 ms it costs little and adds at most
+            # 0.1 s to a file's wait for its batch
+            "spark.sql.streaming.pollingDelay": "100ms",
             # keep every job and stage of a run for the per-query counts
             "spark.ui.retainedJobs": "100000",
             "spark.ui.retainedStages": "100000",
@@ -190,6 +202,14 @@ def calibrate(spark) -> tuple[float, float]:
         median(cpu_once() for _ in range(3)),
         median(spark_once() for _ in range(3)),
     )
+
+
+def cpu_ticks() -> tuple[int, int]:
+    """(steal, total) clock ticks of all CPUs so far, from /proc/stat:
+    steal is time the host ran something else on this machine's CPUs."""
+    with open("/proc/stat") as f:
+        fields = [int(x) for x in f.readline().split()[1:9]]
+    return fields[7], sum(fields)
 
 
 def peak_rss_mb(spark) -> tuple[float, float]:
@@ -257,6 +277,7 @@ class Run:
         self.seed = seed
         self.seconds = seconds
         self.trace = trace
+        self.n_iter = max(2 if trace else 1, round(seconds / NOMINAL_ITERATION_S))
         self.tracer = Tracer()
         self.queries: list[QueryRecord] = []
         self.iterations: list[tuple[float, bool]] = []  # (ms, traced)
@@ -476,7 +497,9 @@ class Run:
             n_ticks = self.history
         else:
             self.history = INGEST_HISTORY_TICKS
-            n_ticks = self.history + INGEST_CYCLES * CYCLE_TICKS
+            # staged at set-up: exactly the cycles this run lands
+            n_cycles = INGEST_WARM_CYCLES + self.n_iter * len(INGEST_ROTATION)
+            n_ticks = self.history + n_cycles * CYCLE_TICKS
         self.timeline = gen.generate(self.seed, FLEET, n_ticks)
         env_path = os.path.join(self.work, "envelopes.parquet")
         gen.write_parquet(self.timeline, env_path)
@@ -493,10 +516,11 @@ class Run:
             cycle = F.when(F.col("tick") < self.history, -1).otherwise(
                 F.floor((F.col("tick") - self.history) / CYCLE_TICKS)
             )
+            # one task writes every cycle: one file per cycle, no shuffle
             (
                 env.withColumn("cycle", cycle)
                 .drop("tick")
-                .repartition("cycle")
+                .coalesce(1)
                 .write.partitionBy("cycle")
                 .parquet(self.stage)
             )
@@ -602,17 +626,15 @@ class Run:
         return ((t_proc - t0) * 1000, (t_seen - t0) * 1000, (t_end - t0) * 1000, attempts)
 
     def rotation(self, i: int, traced: bool) -> float:
-        """One ingest cycle per rotation panel."""
+        """One ingest cycle per rotation panel, after the warm-up's."""
         t0 = time.perf_counter()
         for j, panel in enumerate(INGEST_ROTATION):
-            n = i * len(INGEST_ROTATION) + j
-            if n >= INGEST_CYCLES:
-                raise RuntimeError("staged cycles exhausted")
+            n = self.first_cycle + i * len(INGEST_ROTATION) + j
             self.cycles.append(self.cycle(n, panel, traced) + (traced,))
         return (time.perf_counter() - t0) * 1000.0
 
     def loop(self) -> None:
-        """Warm-up iteration (discarded), then the timed iterations; "now"
+        """Warm-up (discarded), then the timed iterations; "now"
         moves on every refresh. With tracing, every other iteration is
         traced, so the untraced ones measure the tracing overhead."""
         self.files_per_batch: list[int] = []
@@ -626,14 +648,17 @@ class Run:
                 resp = self.call(self.read_store(), panel, newest, False)
                 if resp is not None and panel is not PROBE:
                     self.check_panel(panel, resp, newest, self.history - 1)
+            for n in range(INGEST_WARM_CYCLES):
+                self.cycle(n, INGEST_ROTATION[n % len(INGEST_ROTATION)], False)
+            self.first_cycle = self.landed
             self.warm_points = self.count_store()
             self.warm_bytes = store_bytes(self.store)
         self.queries.clear()
         self.attempted = self.failed = 0
         t0 = time.perf_counter()
         self.phases["warm-up"] = t0 - t_warm
-        n_iter = max(2 if self.trace else 1, round(self.seconds / NOMINAL_ITERATION_S))
-        for i in range(n_iter):
+        ticks0 = cpu_ticks()
+        for i in range(self.n_iter):
             if time.perf_counter() - t0 > LOOP_CAP * self.seconds:
                 break
             traced = self.trace and i % 2 == 0
@@ -645,6 +670,8 @@ class Run:
             self.iterations.append((ms, traced))
         self.loop_s = time.perf_counter() - t0
         self.phases["loop"] = self.loop_s
+        steal, total = (b - a for a, b in zip(ticks0, cpu_ticks()))
+        self.loop_steal_pct = 100.0 * steal / max(total, 1)
 
     def count_store(self) -> int:
         from metric_store_release_spark.sources.storage import read_samples
@@ -685,10 +712,12 @@ class Run:
             f"query_p50_ms {median(q.ms for q in untraced):.1f} ms n={len(untraced)}",
             f"query_qps {len(panels) / self.loop_s:.4f} 1/s n={len(panels)}",
             f"peak_rss python={py_mb:.1f} MB jvm={jvm_mb:.1f} MB",
+            f"cpu_steal_in_loop {self.loop_steal_pct:.1f} % of all CPU time",
             "iterations_ms " + " ".join(f"{ms:.0f}" for ms, _ in self.iterations),
         ]
         if self.cycles:
-            self.extra.append("cycles_ms " + " ".join(f"{c[2]:.0f}" for c in self.cycles))
+            self.extra.append("cycles_ms processed/seen/done " + " ".join(
+                f"{c[0]:.0f}/{c[1]:.0f}/{c[2]:.0f}" for c in self.cycles))
         try:
             p90 = percentile([q.ms for q in untraced], 0.9)
             self.extra.append(f"query_p90_ms {p90:.1f} ms n={len(untraced)}")
@@ -696,7 +725,8 @@ class Run:
             self.extra.append(f"query_p90_ms not reported: {e}")
         if self.workload == "ingest_with_reads":
             h = self.history
-            lo, hi = h, h + len(self.cycles) * CYCLE_TICKS
+            lo = h + self.first_cycle * CYCLE_TICKS
+            hi = lo + len(self.cycles) * CYCLE_TICKS
             self.ingest_points = sum(tl.points[lo:hi])
             self.ingest_envelopes = sum(1 for t in tl.columns["tick"] if lo <= t < hi)
             self.ingest_points_per_s = self.ingest_points / (
@@ -752,7 +782,8 @@ class Run:
         ingest = self.workload == "ingest_with_reads"
         progress = [
             p for p in (self.stream.recentProgress if ingest else [])
-            if p["batchId"] >= 1 and p["numInputRows"] > 0  # 0 is the history
+            # batch 0 is the history, batch n + 1 lands cycle n
+            if p["batchId"] > self.first_cycle and p["numInputRows"] > 0
         ]
         for name, key in _STREAM_PHASES:
             m.put(f"streaming.{name}", med(p["durationMs"].get(key, 0) for p in progress),
