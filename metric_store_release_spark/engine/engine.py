@@ -138,9 +138,12 @@ class PromQLEngine:
 
         if any(not os.path.isdir(p) for p in paths):
             # a result-cache chunk was invalidated (caller dropped the
-            # directory) — the cached plan reads dead paths; rebuild
+            # directory) — the cached plan reads dead paths; rebuild. Pop
+            # only the entry read above: a concurrent put may have
+            # refreshed the key since, and its entry is valid
             with self._split_plan_lock:
-                self._split_plan_cache.pop(key, None)
+                if self._split_plan_cache.get(key) is hit:
+                    del self._split_plan_cache[key]
             return None
         try:
             same = samples.sameSemantics(src)

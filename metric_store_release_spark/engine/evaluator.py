@@ -37,6 +37,7 @@ from metric_store_release_spark.engine.results import (
     RangeFrame,
     ScalarResult,
     StringResult,
+    UniqueSeries,
     VectorResult,
 )
 from metric_store_release_spark.engine import scalar_functions as sf
@@ -290,7 +291,15 @@ class Evaluator:
         if name == "histogram_quantile":
             q = self._const_scalar(node.args[0], "histogram_quantile quantile")
             vec = self._vector_arg(node.args[1])
-            return VectorResult(self._check_unique(histogram_quantile(vec.df, q)))
+            out = histogram_quantile(vec.df, q)
+            if vec.unique is None:
+                return VectorResult(self._check_unique(out))
+            # grouped by labels minus le; with no __name__ to strip, no two
+            # groups can end on one labelset
+            keys = vec.unique.keys
+            return VectorResult(
+                out, unique=UniqueSeries(None if keys is None else keys - {"le"})
+            )
         if name == "time":
             return ScalarResult(
                 df=self.steps_df().select(
@@ -329,12 +338,10 @@ class Evaluator:
             # the output is a COMPUTED vector: its samples exist at eval
             # time, so sample_ts must not leak (timestamp(timestamp(v @ 10))
             # is the eval step, not 10 — at_modifier.test)
-            out = self._drop_name(
-                df.withColumn("value", src.cast("double") / 1000.0)
-            )
+            out = df.withColumn("value", src.cast("double") / 1000.0)
             if "sample_ts" in df.columns:
                 out = out.drop("sample_ts")
-            return VectorResult(out)
+            return self._drop_name(out, vec.unique)
         if name in ("sort", "sort_desc"):
             vec = self._vector_arg(node.args[0])
             # functions.go:349-364: both sorts put NaN LAST. Spark orders
@@ -363,10 +370,9 @@ class Evaluator:
                 if len(node.args) > 1
                 else 1.0
             )
-            return VectorResult(
-                self._drop_name(
-                    vec.df.withColumn("value", sf.promql_round(F.col("value"), nearest))
-                )
+            return self._drop_name(
+                vec.df.withColumn("value", sf.promql_round(F.col("value"), nearest)),
+                vec.unique,
             )
         if name in sf.DATE_FUNCS:
             if node.args:
@@ -382,10 +388,9 @@ class Evaluator:
                         self.ctx,
                     )
                 )
-            return VectorResult(
-                self._drop_name(
-                    vec.df.withColumn("value", sf.date_part(name, F.col("value")))
-                )
+            return self._drop_name(
+                vec.df.withColumn("value", sf.date_part(name, F.col("value"))),
+                vec.unique,
             )
         if name in sf.SIMPLE_MATH:
             arg = self.eval(node.args[0])
@@ -399,12 +404,11 @@ class Evaluator:
                         "value", sf.apply_simple_math(name, F.col("value"))
                     )
                 )
-            return VectorResult(
-                self._drop_name(
-                    arg.df.withColumn(
-                        "value", sf.apply_simple_math(name, F.col("value"))
-                    )
-                )
+            return self._drop_name(
+                arg.df.withColumn(
+                    "value", sf.apply_simple_math(name, F.col("value"))
+                ),
+                arg.unique,
             )
         raise PromQLEvalError(f"unsupported function {name!r}")
 
@@ -428,9 +432,13 @@ class Evaluator:
             range_arg = node.args[0]
         frame = self.build_range_frame(range_arg, name in NEEDS_ORDER_COLS, func=name)
         out = apply_range_func(name, frame, params)
-        if name != "last_over_time":  # keeps __name__ — cannot collide
-            out = self._check_unique(out)
-        return VectorResult(out)
+        if name == "last_over_time":  # keeps __name__ — cannot collide
+            return VectorResult(out)
+        if _name_pinned(range_arg):
+            # one row per (t, series), and every series shares one
+            # __name__: stripping it merges none
+            return VectorResult(out, unique=UniqueSeries())
+        return VectorResult(self._check_unique(out))
 
     def _eval_absent(self, arg: ast.Node) -> VectorResult:
         vec = self._vector_arg(arg)
@@ -564,7 +572,7 @@ class Evaluator:
             mn = F.lit(self._const_scalar(node.args[1], "min"))
             mx = F.lit(float("inf"))
         out = vec.df.withColumn("value", sf.promql_clamp(F.col("value"), mn, mx))
-        return VectorResult(self._drop_name(out))
+        return self._drop_name(out, vec.unique)
 
     # ----------------------------------------------------------- aggregation
     def eval_aggregation(self, node: AggregateExpr) -> VectorResult:
@@ -578,6 +586,14 @@ class Evaluator:
             else labels_keep(F.col("labels"), node.grouping)
         )
         df = df.withColumn("gsig", gsig).withColumn("glabels", glabels)
+        # every output below but topk/bottomk is one row per (t, gsig),
+        # labelled by gsig: unique, and nameless unless grouped by __name__
+        if node.without:
+            unique = UniqueSeries()
+        elif NAME_LABEL not in node.grouping:
+            unique = UniqueSeries(frozenset(node.grouping))
+        else:
+            unique = None
 
         op = node.op
         if op in ("topk", "bottomk"):
@@ -622,6 +638,10 @@ class Evaluator:
                     F.create_map(F.lit(lbl), formatted),
                 ),
             ).withColumn("gsig", sig(F.col("glabels")))
+            if lbl == NAME_LABEL or unique is None:
+                unique = None
+            elif unique.keys is not None:
+                unique = UniqueSeries(unique.keys | {lbl})
             # aggregate primitives only; glabels == map_from_entries(gsig),
             # so rebuilding it post-agg keeps the buffer hash-aggregable
             # (a map-typed any_value buffer forces SortAggregate)
@@ -635,7 +655,7 @@ class Evaluator:
                     "value",
                 )
             )
-            return VectorResult(out)
+            return VectorResult(out, unique=unique)
 
         if op == "avg":
             # reference avg is an incremental mean (no intermediate-sum
@@ -666,7 +686,7 @@ class Evaluator:
                     value.alias("value"),
                 )
             )
-            return VectorResult(out)
+            return VectorResult(out, unique=unique)
 
         agg = {
             "sum": F.sum("value"),
@@ -734,7 +754,7 @@ class Evaluator:
                         "value",
                     )
                 )
-                return VectorResult(out)
+                return VectorResult(out, unique=unique)
         if agg is None:
             raise PromQLEvalError(f"unsupported aggregation {op!r}")
         out = (
@@ -747,7 +767,7 @@ class Evaluator:
                 "value",
             )
         )
-        return VectorResult(out)
+        return VectorResult(out, unique=unique)
 
     # ------------------------------------------------------------ binary ops
     def eval_binary(self, node: BinaryExpr):
@@ -803,19 +823,14 @@ class Evaluator:
         l, r = (s, v) if scalar_on_left else (v, s)
         if op in ast.COMPARE_OPS:
             keep = sf.ieee_compare(l, r, op)
-            if node.return_bool:
-                out = df.withColumn(
-                    "value", F.when(keep, F.lit(1.0)).otherwise(F.lit(0.0))
-                )
-                out = self._drop_name(out)
-            else:
-                out = df.filter(keep)
+            if not node.return_bool:
+                return VectorResult(df.filter(keep).drop("__sv"), unique=vec.unique)
+            out = df.withColumn(
+                "value", F.when(keep, F.lit(1.0)).otherwise(F.lit(0.0))
+            )
         else:
             out = df.withColumn("value", sf.arith_op(l, r, op))
-            out = self._drop_name(out)
-        if "__sv" in out.columns:
-            out = out.drop("__sv")
-        return VectorResult(out)
+        return self._drop_name(out.drop("__sv"), vec.unique)
 
     def _match_sig(self, node: BinaryExpr) -> tuple[str, list[str]]:
         m = node.matching
@@ -890,9 +905,13 @@ class Evaluator:
                     ).otherwise(F.col("__v")),
                 ).drop("__c", "__v")
 
-            if card in (VectorMatchCard.ONE_TO_ONE, VectorMatchCard.MANY_TO_ONE):
+            if card in (
+                VectorMatchCard.ONE_TO_ONE, VectorMatchCard.MANY_TO_ONE
+            ) and not _unique_per_match(rhs, mode, keys):
                 r = _unique_one_side(r, "rlabels", "rv")
-            if card in (VectorMatchCard.ONE_TO_ONE, VectorMatchCard.ONE_TO_MANY):
+            if card in (
+                VectorMatchCard.ONE_TO_ONE, VectorMatchCard.ONE_TO_MANY
+            ) and not _unique_per_match(lhs, mode, keys):
                 l = _unique_one_side(l, "llabels", "lv")
         joined = l.join(r, ["t", "msig"], "inner")
 
@@ -976,8 +995,9 @@ class Evaluator:
                 return ScalarResult(const=-inner.const)
             return ScalarResult(df=inner.df.withColumn("value", -F.col("value")))
         if isinstance(inner, VectorResult):
-            out = self._drop_name(inner.df.withColumn("value", -F.col("value")))
-            return VectorResult(out)
+            return self._drop_name(
+                inner.df.withColumn("value", -F.col("value")), inner.unique
+            )
         raise PromQLEvalError("cannot negate a string")
 
     # ------------------------------------------------------------------ misc
@@ -1016,24 +1036,30 @@ class Evaluator:
             F.col("value").alias("value"),
         )
 
-    def _drop_name(self, df: DataFrame, check: bool | None = None) -> DataFrame:
+    def _drop_name(
+        self, df: DataFrame, unique: UniqueSeries | None = None
+    ) -> VectorResult:
         """Drop __name__ from series identity (function/operator output).
 
         When duplicate detection is on, assert no two series collapse onto
         the same labelset (engine.go's "vector cannot contain metrics with
         the same labelset", raised for e.g. ceil({__name__=~'a|b'}) —
         collision.test). Hash-aggregation assertion like the binop matching
-        check — no window sort in the plan tail."""
+        check — no window sort in the plan tail. A `unique` proof of the
+        input makes both steps no-ops: its series carry no __name__, and
+        the proof carries over to the output."""
+        if unique is not None:
+            return VectorResult(df, unique=unique)
         labels = F.map_filter(F.col("labels"), lambda k, _: k != F.lit(NAME_LABEL))
         out = df.withColumn("labels", labels).withColumn("sig", sig(F.col("labels")))
-        return self._check_unique(out, check)
+        return VectorResult(self._check_unique(out))
 
-    def _check_unique(self, df: DataFrame, check: bool | None = None) -> DataFrame:
+    def _check_unique(self, df: DataFrame) -> DataFrame:
         """Lazy assertion that no two output series share a labelset at a
         step — engine.go's ContainsSameLabelset() check, applied to every
         function-call output (engine.go:1601-1602, also raised for e.g.
         changes({__name__=~'a|b'}[5m]) and collapsing label_replace —
-        functions.test).
+        functions.test) that no UniqueSeries proof shows collision-free.
 
         Expressed as a hash aggregation on (t, sig) — NOT a window: a
         window count forces exchange + full sort in the plan tail, while
@@ -1042,8 +1068,7 @@ class Evaluator:
         (measured on the binop path in round 3; same shape here). With no
         duplicates — the only passing case — first() per group is the
         identity, so results are bit-identical."""
-        do_check = self.ctx.check_matching if check is None else check
-        if do_check and "value" in df.columns and "t" in df.columns:
+        if self.ctx.check_matching and "value" in df.columns and "t" in df.columns:
             cols = df.columns
             # labels == map_from_entries(sig) by construction; rebuilding it
             # post-agg keeps every buffer primitive (a map-typed first()
@@ -1069,6 +1094,31 @@ class Evaluator:
                 ).otherwise(F.col("value")),
             ).select(*cols)
         return df
+
+
+def _name_pinned(node: ast.Node) -> bool:
+    """True for a matrix selector whose metric name is fixed by equality,
+    so that all of its series share one __name__."""
+    while isinstance(node, ParenExpr):
+        node = node.expr
+    if not isinstance(node, MatrixSelector):
+        return False
+    sel = node.selector
+    return sel.name is not None or any(
+        m.name == NAME_LABEL and m.op == MatchOp.EQ for m in sel.matchers
+    )
+
+
+def _unique_per_match(side: VectorResult, mode: str, keys: list[str]) -> bool:
+    """True when `side` provably holds one row per (t, matching signature):
+    it is unique and nameless, and the signature keeps every label key its
+    series can carry, so it equals the series' own sig."""
+    u = side.unique
+    if u is None:
+        return False
+    if mode == "on":
+        return u.keys is not None and u.keys <= set(keys)
+    return not keys or (u.keys is not None and u.keys.isdisjoint(keys))
 
 
 def _format_float(value: Column) -> Column:

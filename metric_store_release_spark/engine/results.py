@@ -45,6 +45,17 @@ class StringResult:
     value: str
 
 
+@dataclass(frozen=True)
+class UniqueSeries:
+    """Static proof that a vector holds at most one row per (t, sig) and
+    that none of its series carries __name__. On such a vector the runtime
+    same-labelset and matching-uniqueness assertions can never fire, so the
+    evaluator leaves them out of the plan."""
+
+    #: every series' label keys lie within this set; None when unknown
+    keys: frozenset[str] | None = None
+
+
 @dataclass
 class VectorResult:
     df: DataFrame  # t, labels, sig, value [, sample_ts]
@@ -52,6 +63,8 @@ class VectorResult:
     #: separately so the engine can re-assert it after plan additions (e.g.
     #: the admission guard join) that void SQL ordering guarantees
     order_by: list | None = None
+    #: the uniqueness proof, or None when the plan does not guarantee it
+    unique: UniqueSeries | None = None
 
 
 @dataclass

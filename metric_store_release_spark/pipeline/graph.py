@@ -76,15 +76,26 @@ def _scaled_npart(
     hash-aggregation state bounded while AQE's partition coalescing
     (enabled session-wide) folds the small per-round shuffles back
     together at bench scale — at sf0.1 the derived count stays at the
-    ``floor`` and plans are unchanged."""
+    ``floor`` and plans are unchanged.
+
+    A leaf without computed stats (an RDD-backed ``LogicalRDD``, e.g. a
+    ``createDataFrame`` over local rows) reports
+    ``spark.sql.defaultSizeInBytes``: its size is unknown, not huge, so the
+    count falls back to the floor."""
     try:
+        unknown = int(
+            df.sparkSession._jsparkSession.sessionState().conf().defaultSizeInBytes()
+        )
         total = 0
         stack = [df._jdf.queryExecution().optimizedPlan()]
         while stack:
             node = stack.pop()
             n = node.children().size()
             if n == 0:
-                total += int(node.stats().sizeInBytes())
+                size = int(node.stats().sizeInBytes())
+                if size >= unknown:
+                    return floor
+                total += size
             else:
                 for i in range(n):
                     stack.append(node.children().apply(i))

@@ -12,7 +12,7 @@ import numpy as np
 import pytest
 
 from metric_store_release_spark.pipeline.dedup import remove_duplicate_spans
-from metric_store_release_spark.pipeline.graph import pagerank
+from metric_store_release_spark.pipeline.graph import _scaled_npart, pagerank
 
 
 def _np_pagerank(edges, iterations=5, d=0.85):
@@ -37,6 +37,19 @@ def _np_pagerank(edges, iterations=5, d=0.85):
 def _ranks(spark, edges, **kw):
     df = spark.createDataFrame(edges, ["src", "dst"])
     return {r["node"]: r["rank"] for r in pagerank(df, **kw).collect()}
+
+
+def test_scaled_npart_unknown_stats_fall_back_to_floor(spark):
+    """A createDataFrame edge list is an RDD-backed leaf whose size stat is
+    spark.sql.defaultSizeInBytes (Long.MaxValue): unknown, not huge. The
+    partition count must fall back to the floor, not jump to the cap."""
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 1), (1, 3), (4, 1)], ["src", "dst"]
+    )
+    assert _scaled_npart(edges, 4) == 4
+    # a leaf with real stats still scales: 1 GiB of range → 64 x 16 MiB
+    big = spark.range(1 << 27)  # 8 B/row
+    assert _scaled_npart(big, 4) == 64
 
 
 def test_pagerank_matches_numpy_reference(spark):

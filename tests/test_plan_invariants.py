@@ -98,6 +98,79 @@ def test_no_sort_aggregate_in_plan(spark, samples, query):
     assert "SortAggregate" not in plan, f"SortAggregate regressed for {query!r}"
 
 
+def _dashboard_series() -> list[str]:
+    """The perfbench dashboard's series shapes, two sources x two
+    instances: HTTP counters split by status, a latency histogram, and
+    cpu/memory gauges that differ only in name and unit."""
+    out = []
+    for src in ("a", "b"):
+        for inst in ("0", "1"):
+            sel = f'source_id="{src}", instance_id="{inst}"'
+            out += [
+                f'http_total{{{sel}, status_code="200"}} 0+9x90',
+                f'http_total{{{sel}, status_code="500"}} 0+1x90',
+                f'cpu{{{sel}, unit="percentage"}} 1+1x90',
+                f'memory{{{sel}, unit="bytes"}} 10+5x90',
+            ]
+        for le, rate in (("0.1", 1), ("1", 2), ("+Inf", 3)):
+            out.append(
+                f'http_duration_seconds_bucket{{source_id="{src}", le="{le}"}}'
+                f" 0+{rate}x90"
+            )
+    return out
+
+
+@pytest.fixture(scope="module")
+def dashboard(spark):
+    df = corpus.load(spark, MIN, _dashboard_series())
+    df.cache().count()
+    return df
+
+
+def _exchanges(df) -> int:
+    return df._jdf.queryExecution().executedPlan().toString().count("Exchange")
+
+
+@pytest.mark.parametrize(
+    "query, range_min, exchanges, skipped, kept",
+    [
+        ("sum by (source_id) (rate(http_total[5m]))", 60, 2, 1, 0),
+        ('sum by (source_id) (rate(http_total{status_code="500"}[5m]))'
+         " / sum by (source_id) (rate(http_total[5m]))", 60, 5, 4, 0),
+        ("histogram_quantile(0.99, sum by (le) "
+         "(rate(http_duration_seconds_bucket[5m])))", 60, 3, 2, 0),
+        ('avg_over_time(cpu{source_id="a"}[10m])', 60, 1, 1, 0),
+        ("sum(count_over_time(cpu[2h]))", 0, 2, 1, 0),
+        # controls the proof cannot reach: topk keeps its input's labels,
+        # and both sides of the ratio are raw, named selectors
+        ("topk(5, memory)", 0, 3, 0, 0),
+        ("cpu / ignoring(unit) memory", 30, 5, 0, 2),
+    ],
+)
+def test_dashboard_plans_skip_only_vacuous_assertions(
+    spark, dashboard, query, range_min, exchanges, skipped, kept
+):
+    """Each runtime uniqueness assertion is one hash aggregation, so one
+    Exchange. Where the static proof shows an assertion can never fire it
+    leaves the plan: `skipped` of them per shape, so the plan had
+    `exchanges + skipped` Exchanges before the proof existed. The `kept`
+    ones are exactly what the default plan holds beyond a plan built with
+    every assertion off."""
+    end = 90 * MIN
+
+    def plan_exchanges(config):
+        eng = PromQLEngine(spark, config)
+        if range_min:
+            out = eng.query_range(dashboard, query, end - range_min * MIN, end, MIN)
+        else:
+            out = eng.query_instant(dashboard, query, end)
+        return _exchanges(out)
+
+    n = plan_exchanges(EngineConfig())
+    assert n == exchanges, (query, skipped)
+    assert n == plan_exchanges(EngineConfig(check_matching=False)) + kept
+
+
 # ---------------------------------------------------------------------------
 # pipeline operators: shuffle/scan-shape invariants at 100 TB
 # ---------------------------------------------------------------------------

@@ -281,3 +281,32 @@ def test_split_cached_plan_survives_cache_dir_wipe(engine, metric, tmp_path):
     )
     assert rebuilt is not a
     assert rows_to_dict(rebuilt, []) == pytest.approx(want)
+
+
+def test_split_plan_get_keeps_entry_refreshed_during_dead_path_check(
+    spark, monkeypatch
+):
+    # a put that refreshes the key between _split_plan_get's read and its
+    # dead-path pop must survive: only the stale entry that was read may
+    # be dropped. The dead-path probe is where the put is made to land.
+    import os
+
+    from metric_store_release_spark import PromQLEngine
+
+    eng = PromQLEngine(spark)
+    key = ("q",)
+    stale, fresh = object(), object()
+    eng._split_plan_put(key, stale, stale, paths=["/dead/chunk"])
+
+    def isdir_after_concurrent_put(path):
+        eng._split_plan_put(key, fresh, fresh)
+        return False
+
+    monkeypatch.setattr(os.path, "isdir", isdir_after_concurrent_put)
+    assert eng._split_plan_get(key, stale) is None
+    monkeypatch.undo()
+    assert eng._split_plan_cache[key] == (fresh, fresh, ())
+    # with no put in between, the dead entry itself is dropped
+    eng._split_plan_put(key, stale, stale, paths=["/dead/chunk"])
+    assert eng._split_plan_get(key, stale) is None
+    assert key not in eng._split_plan_cache
