@@ -18,7 +18,6 @@ Conventions:
 from __future__ import annotations
 
 import os
-import weakref
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -44,24 +43,17 @@ def _prepare(spark: SparkSession) -> SparkSession:
     return spark
 
 
-#: session-lifetime engine memo (round 11): PromQLEngine now carries the
-#: split-evaluation PLAN cache, which only pays off if repeated queries
-#: reach the SAME engine instance — the query-frontend shape (plans are
-#: memoized, results recompute from the source on every action).
-#: WEAK-keyed on the session (advisor r11): a stopped/replaced
-#: SparkSession must not pin its engines — and their cached DataFrame
-#: py4j handles — for process lifetime; the nested per-lookback dict
-#: dies with its session entry.
-_ENGINES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
-
-
 def _engine(spark: SparkSession, lookback_ms: int = LOOKBACK):
+    """Session-lifetime engine memo: PromQLEngine carries the split
+    evaluation PLAN cache, which only pays off if repeated queries reach
+    the SAME engine instance — the query-frontend shape (plans are
+    memoized, results recompute from the source on every action). The
+    per-lookback dict lives on the session itself, so it dies with the
+    session: a module-level map keyed by the session would pin it, since
+    every engine holds a strong reference back to its session."""
     from metric_store_release_spark import EngineConfig, PromQLEngine
 
-    per_session = _ENGINES.get(spark)
-    if per_session is None:
-        per_session = {}
-        _ENGINES[spark] = per_session
+    per_session = spark.__dict__.setdefault("_msrs_engines", {})
     eng = per_session.get(lookback_ms)
     if eng is None:
         eng = PromQLEngine(spark, EngineConfig(lookback_ms=lookback_ms))

@@ -109,11 +109,6 @@ def labels_keep(labels: Column, keys: list[str]) -> Column:
     return F.map_filter(labels, lambda k, _: F.array_contains(keyset, k))
 
 
-def map_from_sig(sig_col: Column) -> Column:
-    """Rebuild a label map from a signature array."""
-    return F.map_from_entries(sig_col)
-
-
 def sanitize_metric_name(col: Column) -> Column:
     """PromQL charset sanitization ([a-zA-Z_:][a-zA-Z0-9_:]*).
 

@@ -60,13 +60,6 @@ class EngineConfig:
     #: Each execute() appends its query line and removes it on completion —
     #: leftovers after a crash are the queries that were running.
     active_query_log_path: str | None = None
-    #: tumbling-partial (two-level) threshold for sliding range functions;
-    #: 0 disables (default). Measured: Spark's map-side partial aggregation
-    #: already compresses the window fan-out before the shuffle, so the
-    #: explicit two-level plan only helps when partial aggregation cannot —
-    #: e.g. extreme range/step with wide value structs; keep it available as
-    #: an explicit strategy rather than a default.
-    bucketed_range_threshold: int = 0
 
 
 class PromQLEngine:
@@ -116,7 +109,6 @@ class PromQLEngine:
             c.default_subquery_step_ms,
             c.max_samples,
             c.check_matching,
-            c.bucketed_range_threshold,
         )
 
     def invalidate_split_plans(self) -> None:
@@ -200,7 +192,6 @@ class PromQLEngine:
             query_start_ms=q_start,
             query_end_ms=q_end,
             check_matching=self.config.check_matching,
-            bucketed_range_threshold=self.config.bucketed_range_threshold,
         )
         res = Evaluator(ctx).eval(node)
 

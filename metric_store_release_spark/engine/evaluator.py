@@ -12,7 +12,7 @@ literal column, evaluated once.
 from __future__ import annotations
 
 import math
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -28,7 +28,6 @@ from metric_store_release_spark.datamodel import (
 from metric_store_release_spark.engine import selectors
 from metric_store_release_spark.engine.histogram import histogram_quantile
 from metric_store_release_spark.engine.range_functions import (
-    BUCKETED_FUNCS,
     NEEDS_ORDER_COLS,
     RANGE_FUNCS,
     apply_range_func,
@@ -74,10 +73,6 @@ class EvalContext:
     query_start_ms: int = 0  # for @ start()/end()
     query_end_ms: int = 0
     check_matching: bool = True  # runtime duplicate/many-to-many assertions
-    #: use tumbling-partial (two-level) evaluation for combinable range
-    #: functions when range/step >= this ratio (0 = disabled, the default:
-    #: map-side combine already compresses the direct fan-out pre-shuffle)
-    bucketed_range_threshold: int = 0
 
     @property
     def n_steps(self) -> int:
@@ -142,33 +137,13 @@ class Evaluator:
             )
         return VectorResult(self._selector_cache[key])
 
-    def build_range_frame(
-        self, node: ast.Node, order_cols: bool, func: str | None = None
-    ) -> RangeFrame:
+    def build_range_frame(self, node: ast.Node, order_cols: bool) -> RangeFrame:
         """Materialize a range vector (matrix selector or subquery)."""
         c = self.ctx
         if isinstance(node, ParenExpr):
-            return self.build_range_frame(node.expr, order_cols, func)
+            return self.build_range_frame(node.expr, order_cols)
         if isinstance(node, MatrixSelector):
             self._resolve_at(node.selector)
-            if self._use_bucketed(node, func):
-                df = selectors.bucketed_range_frame(
-                    c.samples,
-                    node.selector,
-                    node.range_ms,
-                    c.start_ms,
-                    c.end_ms,
-                    c.step_ms,
-                    order_cols=order_cols,
-                )
-                return RangeFrame(
-                    df,
-                    node.range_ms,
-                    node.selector.offset_ms,
-                    order_cols,
-                    at_ms=None,
-                    bucketed=True,
-                )
             df = selectors.range_frame(
                 c.samples,
                 node.selector,
@@ -179,25 +154,11 @@ class Evaluator:
                 order_cols=order_cols,
             )
             return RangeFrame(
-                df,
-                node.range_ms,
-                node.selector.offset_ms,
-                order_cols,
-                at_ms=node.selector.at_ms,
+                df, node.range_ms, node.selector.offset_ms, at_ms=node.selector.at_ms
             )
         if isinstance(node, SubqueryExpr):
             return self.eval_subquery_frame(node, order_cols)
         raise PromQLEvalError("expected a range vector argument")
-
-    def _use_bucketed(self, node: MatrixSelector, func: str | None) -> bool:
-        thr = self.ctx.bucketed_range_threshold
-        return (
-            thr > 0
-            and func in BUCKETED_FUNCS
-            and node.selector.at_ms is None
-            and node.range_ms % self.ctx.step_ms == 0
-            and node.range_ms // self.ctx.step_ms >= thr
-        )
 
     def eval_subquery_frame(self, node: SubqueryExpr, order_cols: bool) -> RangeFrame:
         """engine.go:1730-1768 — inner grid aligned to absolute multiples of
@@ -214,17 +175,7 @@ class Evaluator:
             inner_start += interval
         inner_end_raw = outer_end - node.offset_ms
         inner_end = inner_start + ((inner_end_raw - inner_start) // interval) * interval
-        inner_ctx = EvalContext(
-            spark=c.spark,
-            samples=c.samples,
-            start_ms=inner_start,
-            end_ms=inner_end,
-            step_ms=interval,
-            lookback_ms=c.lookback_ms,
-            default_subquery_step_ms=c.default_subquery_step_ms,
-            query_start_ms=c.query_start_ms,
-            query_end_ms=c.query_end_ms,
-        )
+        inner_ctx = replace(c, start_ms=inner_start, end_ms=inner_end, step_ms=interval)
         inner = Evaluator(inner_ctx).eval(node.expr)
         if isinstance(inner, ScalarResult):
             inner = VectorResult(self._scalar_to_vector(inner, inner_ctx))
@@ -233,55 +184,17 @@ class Evaluator:
         pts = inner.df.select(
             F.col("t").alias("ts"), "sig", "labels", "value"
         )
-        if order_cols:
-            w = Window.partitionBy("sig").orderBy("ts")
-            pts = (
-                pts.withColumn("prev_value", F.lag("value").over(w))
-                .withColumn("prev_ts", F.lag("ts").over(w))
-                .withColumn(
-                    "drop",
-                    F.when(
-                        F.col("value") < F.col("prev_value"), F.col("prev_value")
-                    ).otherwise(F.lit(0.0)),
-                )
-                .withColumn(
-                    "change",
-                    F.when(F.col("prev_value").isNull(), F.lit(0))
-                    .when(
-                        (F.col("value") != F.col("prev_value"))
-                        & ~(F.isnan("value") & F.isnan("prev_value")),
-                        F.lit(1),
-                    )
-                    .otherwise(F.lit(0)),
-                )
-                .withColumn(
-                    "reset",
-                    F.when(F.col("value") < F.col("prev_value"), F.lit(1)).otherwise(
-                        F.lit(0)
-                    ),
-                )
-            )
-        off = node.offset_ms
-        if node.at_ms is not None:
-            n_steps = (c.end_ms - c.start_ms) // c.step_ms
-            exploded = (
-                pts.withColumn("__k", F.explode(F.sequence(F.lit(0), F.lit(n_steps))))
-                .withColumn(
-                    "t",
-                    (F.lit(c.start_ms) + F.col("__k") * F.lit(c.step_ms)).cast("long"),
-                )
-                .drop("__k")
-            )
-        else:
-            exploded = selectors._explode_to_steps(
-                pts,
-                c.start_ms,
-                c.end_ms,
-                c.step_ms,
-                F.col("ts") + F.lit(off),
-                F.col("ts") + F.lit(off + node.range_ms),
-            )
-        return RangeFrame(exploded, node.range_ms, off, order_cols, at_ms=node.at_ms)
+        df = selectors.window_frame(
+            pts,
+            node.range_ms,
+            node.offset_ms,
+            c.start_ms,
+            c.end_ms,
+            c.step_ms,
+            pinned=node.at_ms is not None,
+            order_cols=order_cols,
+        )
+        return RangeFrame(df, node.range_ms, node.offset_ms, at_ms=node.at_ms)
 
     # ----------------------------------------------------------------- calls
     def eval_call(self, node: Call):
@@ -430,7 +343,7 @@ class Evaluator:
         else:
             params = []
             range_arg = node.args[0]
-        frame = self.build_range_frame(range_arg, name in NEEDS_ORDER_COLS, func=name)
+        frame = self.build_range_frame(range_arg, name in NEEDS_ORDER_COLS)
         out = apply_range_func(name, frame, params)
         if name == "last_over_time":  # keeps __name__ — cannot collide
             return VectorResult(out)
@@ -791,16 +704,14 @@ class Evaluator:
             raise PromQLEvalError("comparisons between scalars must use bool")
         if lhs.is_const and rhs.is_const:
             return ScalarResult(const=_py_binop(op, lhs.const, rhs.const, node.return_bool))
-        ldf = lhs.df if lhs.df is not None else None
         l = F.lit(lhs.const) if lhs.is_const else F.col("lv")
         r = F.lit(rhs.const) if rhs.is_const else F.col("rv")
-        base = (
-            (ldf.withColumnRenamed("value", "lv") if ldf is not None else None)
-        )
-        if not lhs.is_const and not rhs.is_const:
-            base = base.join(rhs.df.withColumnRenamed("value", "rv"), "t")
-        elif lhs.is_const:
+        if lhs.is_const:
             base = rhs.df.withColumnRenamed("value", "rv")
+        else:
+            base = lhs.df.withColumnRenamed("value", "lv")
+            if not rhs.is_const:
+                base = base.join(rhs.df.withColumnRenamed("value", "rv"), "t")
         if op in ast.COMPARE_OPS:
             value = F.when(sf.ieee_compare(l, r, op), F.lit(1.0)).otherwise(F.lit(0.0))
         else:
@@ -953,10 +864,6 @@ class Evaluator:
                 ).otherwise(
                     F.map_filter(out_labels, lambda k, _: k != F.lit(ln))
                 )
-
-        if card == VectorMatchCard.ONE_TO_MANY:
-            # swap so that lv is the "left" operand per PromQL semantics
-            pass  # lv/rv keep expression order: lhs op rhs
 
         if op in ast.COMPARE_OPS:
             keep = sf.ieee_compare(lv, rv, op)

@@ -40,14 +40,11 @@ def _grouped(frame: RangeFrame, *aggs: Column, keep_name: bool = False) -> DataF
     return out if keep_name else _strip_name(out)
 
 
-def _simple(agg_fn, bucketed_fn=None, keep_name: bool = False):
-    """agg_fn: () -> Column — lazily built (Columns need an active session).
-    bucketed_fn: combine expression over tumbling partials (see
-    selectors.bucketed_range_frame) for the two-level sliding-window path."""
+def _simple(agg_fn):
+    """agg_fn: () -> Column — lazily built (Columns need an active session)."""
 
     def handler(frame: RangeFrame, params: list[float]) -> DataFrame:
-        fn = bucketed_fn if (frame.bucketed and bucketed_fn is not None) else agg_fn
-        return _grouped(frame, fn().alias("value"), keep_name=keep_name).select(
+        return _grouped(frame, agg_fn().alias("value")).select(
             "t", "labels", "sig", "value"
         )
 
@@ -60,33 +57,19 @@ def _simple(agg_fn, bucketed_fn=None, keep_name: bool = False):
 _AVG_DOWN, _AVG_UP = 2.0 ** -600, 2.0 ** 600
 
 
-def _safe_avg(sum_col: Column, scaled_sum: Column, cnt: Column) -> Column:
+def _avg_over_time() -> Column:
     """funcAvgOverTime (functions.go:453-510) computes an incremental mean
     precisely so that values near ±MaxFloat64 don't overflow the sum into
     ±Inf. Same outcome, one aggregation pass: use the naive sum/count unless
     the sum overflowed, then fall back to the exponent-shifted sum (exact
     power-of-two rescale). A genuine ±Inf sample makes BOTH sums infinite —
     result ±Inf/NaN exactly like the reference's fold."""
-    naive = sum_col / cnt
+    total = F.sum("value")
+    cnt = F.count(F.lit(1)).cast("double")
+    scaled = F.sum(F.col("value") * F.lit(_AVG_DOWN))
     return F.when(
-        F.abs(sum_col) == F.lit(float("inf")), scaled_sum / cnt * F.lit(_AVG_UP)
-    ).otherwise(naive)
-
-
-def _avg_over_time() -> Column:
-    return _safe_avg(
-        F.sum("value"),
-        F.sum(F.col("value") * F.lit(_AVG_DOWN)),
-        F.count(F.lit(1)).cast("double"),
-    )
-
-
-def _b_avg_over_time() -> Column:
-    return _safe_avg(
-        F.sum("p_sum"),
-        F.sum(F.col("p_sum") * F.lit(_AVG_DOWN)),
-        F.sum("p_cnt").cast("double"),
-    )
+        F.abs(total) == F.lit(float("inf")), scaled / cnt * F.lit(_AVG_UP)
+    ).otherwise(total / cnt)
 
 
 def _nan_aware_min() -> Column:
@@ -118,29 +101,17 @@ def _extrapolated_rate(
     # aggregation buffers demote the whole group-by to SortAggregate, while
     # primitive buffers keep HashAggregate (ts is unique per series, so the
     # independent extremum picks all land on the same sample)
-    if frame.bucketed:
-        grouped = _grouped(
-            frame,
-            F.min("p_first_ts").alias("first_ts"),
-            F.min_by("p_first_v", "p_first_ts").alias("first_v"),
-            F.min_by("p_first_drop", "p_first_ts").alias("first_drop"),
-            F.max("p_last_ts").alias("last_ts"),
-            F.max_by("p_last_v", "p_last_ts").alias("last_v"),
-            F.sum("p_cnt").alias("cnt"),
-            F.sum("p_dropsum").alias("dropsum"),
-        ).filter(F.col("cnt") >= 2)
-    else:
-        drop_col = F.col("drop") if is_counter else F.lit(0.0)
-        grouped = _grouped(
-            frame,
-            F.min("ts").alias("first_ts"),
-            F.min_by("value", "ts").alias("first_v"),
-            F.min_by(drop_col, "ts").alias("first_drop"),
-            F.max("ts").alias("last_ts"),
-            F.max_by("value", "ts").alias("last_v"),
-            F.count(F.lit(1)).alias("cnt"),
-            F.sum(drop_col).alias("dropsum"),
-        ).filter(F.col("cnt") >= 2)
+    drop_col = F.col("drop") if is_counter else F.lit(0.0)
+    grouped = _grouped(
+        frame,
+        F.min("ts").alias("first_ts"),
+        F.min_by("value", "ts").alias("first_v"),
+        F.min_by(drop_col, "ts").alias("first_drop"),
+        F.max("ts").alias("last_ts"),
+        F.max_by("value", "ts").alias("last_v"),
+        F.count(F.lit(1)).alias("cnt"),
+        F.sum(drop_col).alias("dropsum"),
+    ).filter(F.col("cnt") >= 2)
 
     first_t = F.col("first_ts") + F.lit(frame.offset_ms)
     last_t = F.col("last_ts") + F.lit(frame.offset_ms)
@@ -271,21 +242,11 @@ def _resets(frame: RangeFrame, params: list[float]) -> DataFrame:
 
 
 def _sum_minus_first(col: str, frame: RangeFrame) -> DataFrame:
-    if frame.bucketed:
-        pcol = {"change": "p_chgsum", "reset": "p_rstsum"}[col]
-        grouped = _grouped(
-            frame,
-            F.sum(pcol).alias("total"),
-            F.min_by(F.col(f"p_first_{col}"), F.col("p_first_ts")).alias(
-                "first_contrib"
-            ),
-        )
-    else:
-        grouped = _grouped(
-            frame,
-            F.sum(col).alias("total"),
-            F.min_by(F.col(col), "ts").alias("first_contrib"),
-        )
+    grouped = _grouped(
+        frame,
+        F.sum(col).alias("total"),
+        F.min_by(F.col(col), "ts").alias("first_contrib"),
+    )
     return grouped.select(
         "t",
         "labels",
@@ -363,19 +324,8 @@ def _holt_winters(frame: RangeFrame, params: list[float]) -> DataFrame:
 def _ts_seconds(frame: RangeFrame, params: list[float]) -> DataFrame:
     # last_over_time keeps the metric name (it returns the sample itself);
     # scalar max_by keeps the aggregation hash-based
-    if frame.bucketed:
-        last = F.max_by("p_last_v", "p_last_ts")
-    else:
-        last = F.max_by("value", "ts")
-    grouped = _grouped(frame, last.alias("value"), keep_name=True)
+    grouped = _grouped(frame, F.max_by("value", "ts").alias("value"), keep_name=True)
     return grouped.select("t", "labels", "sig", "value")
-
-
-def _b_var_pop() -> Column:
-    n = F.sum("p_cnt").cast("double")
-    s_ = F.sum("p_sum")
-    ss = F.sum("p_sumsq")
-    return F.greatest(ss / n - (s_ / n) * (s_ / n), F.lit(0.0))
 
 
 RANGE_FUNCS = {
@@ -384,27 +334,15 @@ RANGE_FUNCS = {
     "delta": lambda f, p: _extrapolated_rate(f, False, False),
     "irate": lambda f, p: _instant_value(f, True),
     "idelta": lambda f, p: _instant_value(f, False),
-    "sum_over_time": _simple(lambda: F.sum("value"), lambda: F.sum("p_sum")),
-    "avg_over_time": _simple(_avg_over_time, _b_avg_over_time),
-    "min_over_time": _simple(
-        _nan_aware_min, lambda: F.coalesce(F.min("p_min"), F.lit(float("nan")))
-    ),
-    "max_over_time": _simple(
-        _nan_aware_max, lambda: F.coalesce(F.max("p_max"), F.lit(float("nan")))
-    ),
-    "count_over_time": _simple(
-        lambda: F.count(F.lit(1)).cast("double"),
-        lambda: F.sum("p_cnt").cast("double"),
-    ),
+    "sum_over_time": _simple(lambda: F.sum("value")),
+    "avg_over_time": _simple(_avg_over_time),
+    "min_over_time": _simple(_nan_aware_min),
+    "max_over_time": _simple(_nan_aware_max),
+    "count_over_time": _simple(lambda: F.count(F.lit(1)).cast("double")),
     "last_over_time": _ts_seconds,
-    "present_over_time": _simple(lambda: F.lit(1.0), lambda: F.lit(1.0)),
-    "stddev_over_time": _simple(
-        lambda: F.coalesce(F.stddev_pop("value"), F.lit(0.0)),
-        lambda: F.sqrt(_b_var_pop()),
-    ),
-    "stdvar_over_time": _simple(
-        lambda: F.coalesce(F.var_pop("value"), F.lit(0.0)), _b_var_pop
-    ),
+    "present_over_time": _simple(lambda: F.lit(1.0)),
+    "stddev_over_time": _simple(lambda: F.coalesce(F.stddev_pop("value"), F.lit(0.0))),
+    "stdvar_over_time": _simple(lambda: F.coalesce(F.var_pop("value"), F.lit(0.0))),
     "quantile_over_time": _quantile_over_time,
     "deriv": _deriv,
     "predict_linear": _predict_linear,
@@ -415,26 +353,6 @@ RANGE_FUNCS = {
 
 #: functions whose math needs the per-series lag columns
 NEEDS_ORDER_COLS = {"rate", "increase", "irate", "idelta", "changes", "resets"}
-
-#: functions whose aggregation decomposes into tumbling partials (two-level
-#: sliding-window path — selectors.bucketed_range_frame)
-BUCKETED_FUNCS = {
-    "rate",
-    "increase",
-    "delta",
-    "sum_over_time",
-    "avg_over_time",
-    "min_over_time",
-    "max_over_time",
-    "count_over_time",
-    "last_over_time",
-    "present_over_time",
-    "stddev_over_time",
-    "stdvar_over_time",
-    "changes",
-    "resets",
-}
-
 
 def apply_range_func(name: str, frame: RangeFrame, params: list[float]) -> DataFrame:
     return RANGE_FUNCS[name](frame, params)

@@ -74,6 +74,4 @@ class RangeFrame:
     df: DataFrame  # t, sig, labels, ts, value [, drop, reset, change]
     range_ms: int
     offset_ms: int
-    has_order_cols: bool = False
     at_ms: int | None = None  # @-pinned evaluation time (window geometry)
-    bucketed: bool = False  # df holds tumbling partials, not raw samples

@@ -160,7 +160,9 @@ def instant_vector(
     if selector.at_ms is not None:
         # @ pins evaluation: evaluate once at at_ms, replicate across steps.
         pinned = _instant_at(samples, selector, selector.at_ms - off, lookback_ms)
-        return _replicate_over_grid(pinned, start_ms, end_ms, step_ms)
+        return _replicate_over_grid(pinned, start_ms, end_ms, step_ms).select(
+            "t", "labels", "sig", "value", "sample_ts"
+        )
     min_ts = start_ms - off - lookback_ms
     max_ts = end_ms - off
     base = base_scan(samples, selector, min_ts, max_ts)
@@ -225,13 +227,14 @@ def _instant_at(
 def _replicate_over_grid(
     df: DataFrame, start_ms: int, end_ms: int, step_ms: int
 ) -> DataFrame:
+    """@-pinned evaluation: copy every row of `df` onto every grid step
+    (adds the step column t; callers pick the columns they keep)."""
     n_steps = (end_ms - start_ms) // step_ms
     grid = F.sequence(F.lit(0), F.lit(n_steps))
     return (
         df.withColumn("__k", F.explode(grid))
         .withColumn("t", (F.lit(start_ms) + F.col("__k") * F.lit(step_ms)).cast("long"))
         .drop("__k")
-        .select("t", "labels", "sig", "value", "sample_ts")
     )
 
 
@@ -244,12 +247,66 @@ def range_frame(
     step_ms: int,
     order_cols: bool = False,
 ) -> DataFrame:
-    """Range selector m[d]: all samples with ts in (t-off-d, t-off], one row
+    """Range selector m[d]: all samples with ts in [t-off-d, t-off], one row
     per (window t, sample). Stale markers are excluded outright
     (vendor promql/engine.go:2056-2059 matrixIterSlice skips stale NaN).
+    """
+    off = selector.offset_ms
+    pinned = selector.at_ms is not None
+    if pinned:
+        min_ts, max_ts = selector.at_ms - off - range_ms, selector.at_ms - off
+    else:
+        min_ts, max_ts = start_ms - off - range_ms, end_ms - off
+    base = base_scan(samples, selector, min_ts, max_ts)
+    base = base.filter(~F.coalesce(F.col("stale"), F.lit(False)))
+    if pinned:
+        base = base.select("sig", "labels", "ts", "value")
+    return window_frame(
+        base, range_ms, off, start_ms, end_ms, step_ms,
+        pinned=pinned, order_cols=order_cols,
+    )
+
+
+def window_frame(
+    points: DataFrame,
+    range_ms: int,
+    offset_ms: int,
+    start_ms: int,
+    end_ms: int,
+    step_ms: int,
+    *,
+    pinned: bool,
+    order_cols: bool,
+) -> DataFrame:
+    """Fan the points of a range vector (one row per sample: sig, labels,
+    ts, value — from a matrix selector's scan or a subquery's inner grid)
+    out to one row per (window t, sample).
+
+    pinned (@): `points` already holds exactly the pinned window, so every
+    point serves every step. Otherwise v0.47 windows are CLOSED
+    [t-off-range, t-off] (engine.go:2056 t >= mint; changed to left-open
+    only in Prometheus 3.x) — a sample serves windows
+      ts + off <= t <= ts + off + range
 
     order_cols=True precomputes order-dependent per-sample columns ONCE
-    (before the fan-out) via a lag window over each series:
+    (before the fan-out) — see _with_order_cols.
+    """
+    if order_cols:
+        points = _with_order_cols(points)
+    if pinned:
+        return _replicate_over_grid(points, start_ms, end_ms, step_ms)
+    return _explode_to_steps(
+        points,
+        start_ms,
+        end_ms,
+        step_ms,
+        F.col("ts") + F.lit(offset_ms),
+        F.col("ts") + F.lit(offset_ms + range_ms),
+    )
+
+
+def _with_order_cols(base: DataFrame) -> DataFrame:
+    """Per-sample columns from a lag window over each series:
       prev_value, prev_ts — previous sample of the series (global order)
       drop  — reset adjustment: prev_value if value < prev_value else 0
               (rate/increase add the pre-reset level, functions.go:107-112)
@@ -257,45 +314,6 @@ def range_frame(
     Window sums then subtract the first-in-window sample's contribution,
     whose prev lies outside the window.
     """
-    off = selector.offset_ms
-    if selector.at_ms is not None:
-        ref = selector.at_ms - off
-        base = base_scan(samples, selector, ref - range_ms, ref)
-        base = base.filter(~F.coalesce(F.col("stale"), F.lit(False)))
-        if order_cols:
-            base = _with_order_cols(base)
-        pinned = base.select(
-            "sig", "labels", "ts", "value",
-            *(["prev_value", "prev_ts", "drop", "change", "reset"] if order_cols else []),
-        )
-        n_steps = (end_ms - start_ms) // step_ms
-        return (
-            pinned.withColumn("__k", F.explode(F.sequence(F.lit(0), F.lit(n_steps))))
-            .withColumn(
-                "t", (F.lit(start_ms) + F.col("__k") * F.lit(step_ms)).cast("long")
-            )
-            .drop("__k")
-        )
-    min_ts = start_ms - off - range_ms
-    max_ts = end_ms - off
-    base = base_scan(samples, selector, min_ts, max_ts)
-    base = base.filter(~F.coalesce(F.col("stale"), F.lit(False)))
-    if order_cols:
-        base = _with_order_cols(base)
-    # v0.47 windows are CLOSED [t-off-range, t-off] (engine.go:2056 t >= mint;
-    # changed to left-open only in Prometheus 3.x) — sample serves windows
-    #   ts + off <= t <= ts + off + range
-    return _explode_to_steps(
-        base,
-        start_ms,
-        end_ms,
-        step_ms,
-        F.col("ts") + F.lit(off),
-        F.col("ts") + F.lit(off + range_ms),
-    )
-
-
-def _with_order_cols(base: DataFrame) -> DataFrame:
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("sig").orderBy("ts")
@@ -326,84 +344,3 @@ def _with_order_cols(base: DataFrame) -> DataFrame:
         )
     )
 
-
-def bucketed_range_frame(
-    samples: DataFrame,
-    selector: VectorSelector,
-    range_ms: int,
-    start_ms: int,
-    end_ms: int,
-    step_ms: int,
-    order_cols: bool = False,
-) -> DataFrame:
-    """Two-level sliding-window evaluation (tumbling partials).
-
-    When range ≫ step, the direct fan-out duplicates every sample
-    range/step times. Instead, samples are first PARTIALLY AGGREGATED per
-    (series, service-window-set): every sample with offset-shifted position
-    x serves exactly windows k ∈ [⌈x/step⌉, ⌊(x+range)/step⌋], and that
-    interval is identical for all samples sharing (⌈x/step⌉, ⌊(x+range)/step⌋)
-    — so grouping by it is safe. One partial row per series-bucket then
-    fans out instead of every sample: the shuffle shrinks by the
-    samples-per-bucket factor (e.g. 10 s scrapes, 1 h window, 1 m step →
-    60× fewer shuffled rows).
-
-    Emits per (t, sig): labels plus combinable partials
-      p_cnt p_sum p_sumsq p_min p_max (NaN-aware, nullable)
-      p_first_{ts,v,drop,change,reset}  p_last_{ts,v}
-      p_dropsum p_chgsum p_rstsum
-    (first/last partials are FLAT scalar columns, not structs: scalar
-    min_by/max_by buffers keep the partial aggregation a HashAggregate)
-    Final combination happens in range_functions (bucketed variants).
-    Exact for all combinable functions — same samples, same math, only the
-    aggregation tree is two-level.
-    """
-    off = selector.offset_ms
-    min_ts = start_ms - off - range_ms
-    max_ts = end_ms - off
-    base = base_scan(samples, selector, min_ts, max_ts)
-    base = base.filter(~F.coalesce(F.col("stale"), F.lit(False)))
-    base = _with_order_cols(base) if order_cols else base.withColumn(
-        "drop", F.lit(0.0)
-    ).withColumn("change", F.lit(0)).withColumn("reset", F.lit(0))
-
-    x = (F.col("ts") + F.lit(off) - F.lit(start_ms)).cast("double")
-    kmin = F.ceil(x / F.lit(step_ms)).cast("long")
-    kmax = F.floor((x + F.lit(range_ms)) / F.lit(step_ms)).cast("long")
-    n_steps = (end_ms - start_ms) // step_ms
-
-    nn = F.when(~F.isnan("value"), F.col("value"))
-    partial = (
-        base.withColumn("__kmin", kmin)
-        .withColumn("__kmax", kmax)
-        .groupBy("sig", "__kmin", "__kmax")
-        .agg(
-            F.count(F.lit(1)).alias("p_cnt"),
-            F.sum("value").alias("p_sum"),
-            F.sum(F.col("value") * F.col("value")).alias("p_sumsq"),
-            F.min(nn).alias("p_min"),
-            F.max(nn).alias("p_max"),
-            F.min("ts").alias("p_first_ts"),
-            F.min_by("value", "ts").alias("p_first_v"),
-            F.min_by("drop", "ts").alias("p_first_drop"),
-            F.min_by("change", "ts").alias("p_first_change"),
-            F.min_by("reset", "ts").alias("p_first_reset"),
-            F.max("ts").alias("p_last_ts"),
-            F.max_by("value", "ts").alias("p_last_v"),
-            F.sum("drop").alias("p_dropsum"),
-            F.sum("change").alias("p_chgsum"),
-            F.sum("reset").alias("p_rstsum"),
-            F.max(F.isnan("value").cast("int")).alias("p_has_nan"),
-        )
-        .withColumn("labels", F.map_from_entries("sig"))
-    )
-    lo = F.greatest(F.lit(0), F.col("__kmin"))
-    hi = F.least(F.lit(n_steps), F.col("__kmax"))
-    return (
-        partial.withColumn("__lo", lo)
-        .withColumn("__hi", hi)
-        .filter(F.col("__lo") <= F.col("__hi"))
-        .withColumn("__k", F.explode(F.sequence(F.col("__lo"), F.col("__hi"))))
-        .withColumn("t", (F.lit(start_ms) + F.col("__k") * F.lit(step_ms)).cast("long"))
-        .drop("__kmin", "__kmax", "__lo", "__hi", "__k")
-    )

@@ -42,7 +42,7 @@ def dedup_points(points: DataFrame, order_col: str | None = None) -> DataFrame:
     holds downstream. Uniform shuffle on the series key: skew-free at any
     scale because the key includes ts.
     """
-    from metric_store_release_spark.datamodel import map_from_sig, sig
+    from metric_store_release_spark.datamodel import sig
 
     win = (
         F.max_by("value", F.struct(F.col(order_col), F.col("value")))
@@ -55,7 +55,7 @@ def dedup_points(points: DataFrame, order_col: str | None = None) -> DataFrame:
         .agg(win)
     )
     return deduped.select(
-        "ts", "name", "value", map_from_sig(F.col("__sig")).alias("labels")
+        "ts", "name", "value", F.map_from_entries("__sig").alias("labels")
     )
 
 

@@ -353,6 +353,23 @@ def test_many_to_many_detection_default_on(spark, samples, engine):
     assert n > 0
 
 
+def test_check_matching_off_reaches_subqueries(spark):
+    from metric_store_release_spark import EngineConfig, PromQLEngine
+
+    # ceil() strips __name__, so a and b collide on one labelset: the
+    # opt-out must hold inside a subquery's inner evaluation too
+    df = corpus.load(spark, MIN, ['a{x="1"} 1 2 3', 'b{x="1"} 4 5 6'])
+    loose = PromQLEngine(spark, EngineConfig(check_matching=False))
+    # collect(), not count(): count() prunes the value column and with it
+    # the lazy assertion
+    flat = loose.query_range(df, 'ceil({__name__=~"a|b"})', 0, 2 * MIN, MIN)
+    assert len(flat.collect()) == 6
+    out = loose.query_range(
+        df, 'max_over_time(ceil({__name__=~"a|b"})[2m:1m])', 0, 2 * MIN, MIN
+    )
+    assert len(out.collect()) == 3
+
+
 def test_many_to_many_eval_fail_corpus(engine, spark):
     # operators.test "many-to-many matching not allowed" eval_fail cases
     df = corpus.load(

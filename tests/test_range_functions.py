@@ -240,34 +240,3 @@ def test_rate_range_query_multiple_steps(engine, spark):
     got = rows_to_dict(out, [])
     for t in range(10, 31, 5):
         assert got[(t * MIN,)] == pytest.approx(10 / 300), t
-
-
-def test_bucketed_path_matches_direct(spark):
-    """The two-level tumbling-partial strategy is exact: same results as the
-    direct fan-out for every combinable function."""
-    from metric_store_release_spark import EngineConfig, PromQLEngine
-
-    df = corpus.load(
-        spark, MIN, ["ctr 0+10x120 0+7x120", 'g{a="b"} 5 2 8 1 9 0 3 7 4 6 5 2 8']
-    )
-    direct = PromQLEngine(spark, EngineConfig(bucketed_range_threshold=0))
-    bucketed = PromQLEngine(spark, EngineConfig(bucketed_range_threshold=2))
-    for q in [
-        "rate(ctr[20m])",
-        "increase(ctr[30m])",
-        "delta(g[10m])",
-        "sum_over_time(g[10m])",
-        "avg_over_time(g[10m])",
-        "min_over_time(g[10m])",
-        "max_over_time(g[10m])",
-        "count_over_time(g[10m])",
-        "last_over_time(g[10m])",
-        "stdvar_over_time(g[10m])",
-        "changes(g[10m])",
-        "resets(ctr[30m])",
-    ]:
-        a = rows_to_dict(direct.query_range(df, q, 30 * MIN, 120 * MIN, 10 * MIN), ["a"])
-        b = rows_to_dict(bucketed.query_range(df, q, 30 * MIN, 120 * MIN, 10 * MIN), ["a"])
-        assert a.keys() == b.keys(), q
-        for k in a:
-            assert a[k] == pytest.approx(b[k], rel=1e-9, abs=1e-12), (q, k)

@@ -12,7 +12,9 @@ S = 1000
 
 @pytest.fixture(scope="module")
 def metric(spark):
-    df = corpus.load(spark, 10 * S, ["metric 1 2"])
+    # ctr resets between 20s and 30s: order-dependent functions over a
+    # subquery must see the reset through the inner grid's lag columns
+    df = corpus.load(spark, 10 * S, ["metric 1 2", "ctr 0 5 10 2 6"])
     df.cache().count()
     return df
 
@@ -26,6 +28,11 @@ def metric(spark):
         ("sum_over_time(metric[50s:10s])", 360, 2.0),  # staleness at 5m10s
         ("rate(metric[20s:10s])", 10, 0.1),
         ("rate(metric[20s:5s])", 20, 0.05),
+        ("changes(ctr[50s:10s])", 40, 4.0),
+        ("resets(ctr[50s:10s])", 40, 1.0),
+        ("irate(ctr[50s:10s])", 30, 0.2),  # last pair straddles the reset
+        ("increase(ctr[50s:10s])", 40, 16.0),  # 6 - 0 + 10 before the reset
+        ("rate(ctr[50s:10s] @ 40)", 100, 0.32),  # pinned: 16 over 50 s
     ],
 )
 def test_basic_subqueries(engine, metric, expr, at, want):
