@@ -31,7 +31,7 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from metric_store_release_spark.engine.evaluator import PromQLEvalError
+from metric_store_release_spark.engine.evaluator import PromQLEvalError, assert_rows
 from metric_store_release_spark.engine.selectors import base_scan
 from metric_store_release_spark.promql import ast
 from metric_store_release_spark.promql.ast import (
@@ -138,6 +138,28 @@ def _selector_scans(
         children = [node.expr]
     for c in children:
         yield from _selector_scans(c, lookback_ms, extra_before)
+
+
+def _selector_windows(
+    node: ast.Node, start_ms: int, end_ms: int, lookback_ms: int
+) -> Iterator[tuple[VectorSelector, int, int, int, int, bool]]:
+    """Yield (selector, window_ms, extra_scan_before_ms, lo, hi, pinned) for
+    every selector: `_selector_scans` plus the ts bounds [lo, hi] the scan
+    loads. `@ start()`/`@ end()` resolve against [start_ms, end_ms]; a
+    pinned selector loads only the window ending at its @ time."""
+    for sel, window_ms, extra in _selector_scans(node, lookback_ms):
+        at = sel.at_ms
+        if sel.at_preprocessor == "start":
+            at = start_ms
+        elif sel.at_preprocessor == "end":
+            at = end_ms
+        if at is not None:
+            lo = at - sel.offset_ms - window_ms - extra
+            hi = at - sel.offset_ms
+        else:
+            lo = start_ms - window_ms - extra - max(sel.offset_ms, 0)
+            hi = end_ms + max(-sel.offset_ms, 0)
+        yield sel, window_ms, extra, lo, hi, at is not None
 
 
 def _union_all(parts: list[DataFrame]) -> DataFrame:
@@ -320,19 +342,12 @@ def static_sample_bound(
     whole_rows = _plan_row_count(samples)
     file_backed = bool(_source_files(samples))
     total = 0
-    for sel, window_ms, extra in _selector_scans(node, lookback_ms):
-        at = sel.at_ms
-        if sel.at_preprocessor == "start":
-            at = start_ms
-        elif sel.at_preprocessor == "end":
-            at = end_ms
-        if at is not None:
-            lo = at - sel.offset_ms - window_ms - extra
-            hi = at - sel.offset_ms
+    for sel, window_ms, extra, lo, hi, pinned in _selector_windows(
+        node, start_ms, end_ms, lookback_ms
+    ):
+        if pinned:
             per_sample = n_steps + 1
         else:
-            lo = start_ms - window_ms - extra - max(sel.offset_ms, 0)
-            hi = end_ms + max(-sel.offset_ms, 0)
             per_sample = min(n_steps, (window_ms + extra) // step_ms + 2) + 1
         rows = whole_rows
         if rows is None:
@@ -369,19 +384,12 @@ def attach_sample_guard(
     """
     n_steps = (end_ms - start_ms) // step_ms
     parts: list[DataFrame] = []
-    for sel, window_ms, extra in _selector_scans(node, lookback_ms):
-        at = sel.at_ms
-        if sel.at_preprocessor == "start":
-            at = start_ms
-        elif sel.at_preprocessor == "end":
-            at = end_ms
-        if at is not None:
-            lo = at - sel.offset_ms - window_ms - extra
-            hi = at - sel.offset_ms
+    for sel, window_ms, _, lo, hi, pinned in _selector_windows(
+        node, start_ms, end_ms, lookback_ms
+    ):
+        if pinned:
             per_sample = F.lit(n_steps + 1)
         else:
-            lo = start_ms - window_ms - extra - max(sel.offset_ms, 0)
-            hi = end_ms + max(-sel.offset_ms, 0)
             shifted = F.col("ts") + F.lit(sel.offset_ms)
             k0 = F.greatest(
                 F.lit(0),
@@ -401,17 +409,14 @@ def attach_sample_guard(
     total = _union_all(parts).select(
         F.coalesce(F.sum("n"), F.lit(0)).alias("n")
     )
-    # the filter's cardinality depends on the assertion, so Catalyst cannot
-    # prune it; one row survives iff under the cap
-    guard = total.filter(
-        F.assert_true(
-            F.col("n") <= F.lit(max_samples),
-            F.concat(
-                F.lit(f"{GUARD_MESSAGE}: query fans out "),
-                F.col("n").cast("string"),
-                F.lit(f" samples onto the step grid (cap {max_samples}, "
-                      "metric_store.go:296)"),
-            ),
-        ).isNull()
+    guard = assert_rows(
+        total,
+        F.col("n") <= F.lit(max_samples),
+        F.concat(
+            F.lit(f"{GUARD_MESSAGE}: query fans out "),
+            F.col("n").cast("string"),
+            F.lit(f" samples onto the step grid (cap {max_samples}, "
+                  "metric_store.go:296)"),
+        ),
     ).select(F.lit(True).alias("__adm"))
     return result.crossJoin(F.broadcast(guard)).drop("__adm")

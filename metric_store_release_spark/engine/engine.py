@@ -38,15 +38,6 @@ from metric_store_release_spark.promql import parse
 class EngineConfig:
     lookback_ms: int = DEFAULT_LOOKBACK_MS
     default_subquery_step_ms: int = 60_000
-    #: the reference's duplicate-series / many-to-many matching errors
-    #: (engine.go:2228-2246,2290-2309) as lazy runtime assertions — ON by
-    #: default to match the reference, which rejects on() collisions
-    #: unconditionally. Cost (measured, sf0.1 binop_add, best-of-6): +28%
-    #: (0.75 s vs 0.59 s) — a hash aggregation per checked binop side whose
-    #: exchange is the same one a shuffle join needs (so ~free at scale);
-    #: on broadcast-sized sides it is two extra small stages, which is
-    #: where the whole measured delta comes from
-    check_matching: bool = True
     #: reference admission envelope (metric_store.go:296,300,109):
     #: max step-grid sample fan-out per query, enforced INSIDE the plan as a
     #: lazy assertion (None disables; execute() maps the failure to
@@ -108,7 +99,6 @@ class PromQLEngine:
             c.lookback_ms,
             c.default_subquery_step_ms,
             c.max_samples,
-            c.check_matching,
         )
 
     def invalidate_split_plans(self) -> None:
@@ -191,7 +181,6 @@ class PromQLEngine:
             default_subquery_step_ms=self.config.default_subquery_step_ms,
             query_start_ms=q_start,
             query_end_ms=q_end,
-            check_matching=self.config.check_matching,
         )
         res = Evaluator(ctx).eval(node)
 

@@ -72,7 +72,6 @@ class EvalContext:
     default_subquery_step_ms: int = 60_000
     query_start_ms: int = 0  # for @ start()/end()
     query_end_ms: int = 0
-    check_matching: bool = True  # runtime duplicate/many-to-many assertions
 
     @property
     def n_steps(self) -> int:
@@ -206,7 +205,7 @@ class Evaluator:
             vec = self._vector_arg(node.args[1])
             out = histogram_quantile(vec.df, q)
             if vec.unique is None:
-                return VectorResult(self._check_unique(out))
+                return VectorResult(_assert_one_row_per(out, "sig", _SAME_LABELSET))
             # grouped by labels minus le; with no __name__ to strip, no two
             # groups can end on one labelset
             keys = vec.unique.keys
@@ -351,7 +350,7 @@ class Evaluator:
             # one row per (t, series), and every series shares one
             # __name__: stripping it merges none
             return VectorResult(out, unique=UniqueSeries())
-        return VectorResult(self._check_unique(out))
+        return VectorResult(_assert_one_row_per(out, "sig", _SAME_LABELSET))
 
     def _eval_absent(self, arg: ast.Node) -> VectorResult:
         vec = self._vector_arg(arg)
@@ -443,7 +442,7 @@ class Evaluator:
         out = vec.df.withColumn("labels", new_labels).withColumn(
             "sig", sig(F.col("labels"))
         )
-        return VectorResult(self._check_unique(out))
+        return VectorResult(_assert_one_row_per(out, "sig", _SAME_LABELSET))
 
     def _eval_label_join(self, node: Call) -> VectorResult:
         import re as _re
@@ -466,7 +465,7 @@ class Evaluator:
         out = vec.df.withColumn("labels", new_labels).withColumn(
             "sig", sig(F.col("labels"))
         )
-        return VectorResult(self._check_unique(out))
+        return VectorResult(_assert_one_row_per(out, "sig", _SAME_LABELSET))
 
     def _eval_clamp(self, node: Call) -> VectorResult:
         vec = self._vector_arg(node.args[0])
@@ -786,44 +785,17 @@ class Evaluator:
             F.col("labels").alias("rlabels"),
             F.col("value").alias("rv"),
         )
-        if self.ctx.check_matching:
-            # engine.go:2228-2246: the 'one' side must be unique per match
-            # group (both sides for one-to-one). Lazy runtime assertion,
-            # expressed as a hash aggregation on the join key rather than a
-            # window: partial map-side counts collapse the side to one row
-            # per (t, msig) with no sort, and the join downstream reuses the
-            # aggregation's hash partitioning. At shuffle-join scale the
-            # exchange this adds is the same one the join needs, so the
-            # check is ~free; for broadcast-sized sides it adds two small
-            # exchanges. Measured on the sf0.1 binop bench (best-of-6):
-            # window version +46%, this version +28% (0.75s vs 0.59s off),
-            # all of it stage-scheduling latency on tiny inputs.
-            def _unique_one_side(df, labels_col, val_col):
-                agged = df.groupBy("t", "msig").agg(
-                    F.count(F.lit(1)).alias("__c"),
-                    F.first(labels_col).alias(labels_col),
-                    F.first(val_col).alias("__v"),
-                )
-                return agged.withColumn(
-                    val_col,
-                    F.when(
-                        F.col("__c") > 1,
-                        F.assert_true(
-                            F.lit(False),
-                            F.lit("many-to-many matching not allowed: matching "
-                                  "labels must be unique on one side"),
-                        ).cast("double"),
-                    ).otherwise(F.col("__v")),
-                ).drop("__c", "__v")
-
-            if card in (
-                VectorMatchCard.ONE_TO_ONE, VectorMatchCard.MANY_TO_ONE
-            ) and not _unique_per_match(rhs, mode, keys):
-                r = _unique_one_side(r, "rlabels", "rv")
-            if card in (
-                VectorMatchCard.ONE_TO_ONE, VectorMatchCard.ONE_TO_MANY
-            ) and not _unique_per_match(lhs, mode, keys):
-                l = _unique_one_side(l, "llabels", "lv")
+        # engine.go:2228-2246: the 'one' side must be unique per match group
+        # (both sides for one-to-one). The aggregation on the join key is
+        # the one the join's own exchange needs at shuffle-join scale.
+        if card in (
+            VectorMatchCard.ONE_TO_ONE, VectorMatchCard.MANY_TO_ONE
+        ) and not _unique_per_match(rhs, mode, keys):
+            r = _assert_one_row_per(r, "msig", _MANY_TO_MANY)
+        if card in (
+            VectorMatchCard.ONE_TO_ONE, VectorMatchCard.ONE_TO_MANY
+        ) and not _unique_per_match(lhs, mode, keys):
+            l = _assert_one_row_per(l, "msig", _MANY_TO_MANY)
         joined = l.join(r, ["t", "msig"], "inner")
 
         lv, rv = F.col("lv"), F.col("rv")
@@ -946,61 +918,54 @@ class Evaluator:
     def _drop_name(
         self, df: DataFrame, unique: UniqueSeries | None = None
     ) -> VectorResult:
-        """Drop __name__ from series identity (function/operator output).
-
-        When duplicate detection is on, assert no two series collapse onto
-        the same labelset (engine.go's "vector cannot contain metrics with
-        the same labelset", raised for e.g. ceil({__name__=~'a|b'}) —
-        collision.test). Hash-aggregation assertion like the binop matching
-        check — no window sort in the plan tail. A `unique` proof of the
+        """Drop __name__ from series identity (function/operator output) and
+        assert no two series collapse onto the same labelset (e.g.
+        ceil({__name__=~'a|b'}), collision.test). A `unique` proof of the
         input makes both steps no-ops: its series carry no __name__, and
         the proof carries over to the output."""
         if unique is not None:
             return VectorResult(df, unique=unique)
         labels = F.map_filter(F.col("labels"), lambda k, _: k != F.lit(NAME_LABEL))
         out = df.withColumn("labels", labels).withColumn("sig", sig(F.col("labels")))
-        return VectorResult(self._check_unique(out))
+        return VectorResult(_assert_one_row_per(out, "sig", _SAME_LABELSET))
 
-    def _check_unique(self, df: DataFrame) -> DataFrame:
-        """Lazy assertion that no two output series share a labelset at a
-        step — engine.go's ContainsSameLabelset() check, applied to every
-        function-call output (engine.go:1601-1602, also raised for e.g.
-        changes({__name__=~'a|b'}[5m]) and collapsing label_replace —
-        functions.test) that no UniqueSeries proof shows collision-free.
 
-        Expressed as a hash aggregation on (t, sig) — NOT a window: a
-        window count forces exchange + full sort in the plan tail, while
-        the groupBy keeps map-side partial counts, skips the sort, and
-        lets downstream (t, sig)-keyed stages reuse its partitioning
-        (measured on the binop path in round 3; same shape here). With no
-        duplicates — the only passing case — first() per group is the
-        identity, so results are bit-identical."""
-        if self.ctx.check_matching and "value" in df.columns and "t" in df.columns:
-            cols = df.columns
-            # labels == map_from_entries(sig) by construction; rebuilding it
-            # post-agg keeps every buffer primitive (a map-typed first()
-            # buffer would demote the whole aggregation to SortAggregate)
-            others = [c for c in cols if c not in ("t", "sig", "labels")]
-            grouped = df.groupBy("t", "sig").agg(
-                F.count(F.lit(1)).alias("__dup_n"),
-                *[F.first(c).alias(c) for c in others],
-            )
-            if "labels" in cols:
-                grouped = grouped.withColumn(
-                    "labels", F.map_from_entries("sig")
-                )
-            df = grouped.withColumn(
-                "value",
-                F.when(
-                    F.col("__dup_n") > 1,
-                    F.assert_true(
-                        F.lit(False),
-                        F.lit("vector cannot contain metrics with the "
-                              "same labelset"),
-                    ).cast("double"),
-                ).otherwise(F.col("value")),
-            ).select(*cols)
-        return df
+#: engine.go:1601-1602 ContainsSameLabelset(), checked on every function
+#: output that no UniqueSeries proof shows collision-free
+_SAME_LABELSET = "vector cannot contain metrics with the same labelset"
+_MANY_TO_MANY = (
+    "many-to-many matching not allowed: matching labels must be unique on "
+    "one side"
+)
+
+
+def assert_rows(df: DataFrame, ok: Column, message: Column | str) -> DataFrame:
+    """Keep `df`'s rows, failing the query on the first row where `ok` is
+    false. The filter's output depends on the assertion, so Catalyst can
+    prune it from no action, whatever columns the action reads."""
+    return df.filter(F.assert_true(ok, message).isNull())
+
+
+def _assert_one_row_per(df: DataFrame, key: str, message: str) -> DataFrame:
+    """`df` as one row per (t, key), failing the query with `message` where
+    a group holds more than one.
+
+    An aggregation rather than a window: map-side partial counts, and
+    (t, key)-keyed stages downstream reuse its partitioning. With one row
+    per group, first() is the identity, so passing results are
+    bit-identical."""
+    cols = df.columns
+    # labels == map_from_entries(sig) by construction; rebuilding it post-agg
+    # keeps the buffers primitive, so the aggregation stays a HashAggregate
+    # (a map-typed first() buffer demotes it to SortAggregate)
+    by_sig = key == "sig"
+    others = [c for c in cols if c not in ("t", key) and not (by_sig and c == "labels")]
+    grouped = df.groupBy("t", key).agg(
+        F.count(F.lit(1)).alias("__n"), *[F.first(c).alias(c) for c in others]
+    )
+    if by_sig:
+        grouped = grouped.withColumn("labels", F.map_from_entries("sig"))
+    return assert_rows(grouped, F.col("__n") <= 1, message).select(*cols)
 
 
 def _name_pinned(node: ast.Node) -> bool:

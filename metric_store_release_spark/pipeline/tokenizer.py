@@ -133,17 +133,6 @@ def bpe_train_merges(
         base.unpersist()
 
 
-def bpe_merge_table(
-    spark, df: DataFrame, text_col: str = "text", n_merges: int = 8
-) -> DataFrame:
-    """DataFrame form of :func:`bpe_train_merges`:
-    (merge_rank, left, right, pair_count)."""
-    rows = bpe_train_merges(df, text_col, n_merges)
-    return spark.createDataFrame(
-        rows, "merge_rank int, left string, right string, pair_count bigint"
-    )
-
-
 def _bpe_chain_sql(table_sql: str, text_sql: str, n_merges: int) -> str:
     """The WITH-clause replaying the training loop (shared by both
     oracles): enc0..encN vocab states, pairs/best per round."""

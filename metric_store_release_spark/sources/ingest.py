@@ -14,7 +14,7 @@ streams; micro-batches stand in for the 500 ms / 32 KiB client batching.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
@@ -66,37 +66,4 @@ def parse_point_lines(lines: DataFrame, value_col: str = "value") -> DataFrame:
                 F.coalesce(F.col("labels"), F.expr("map()"))
             ).alias("labels"),
         )
-    )
-
-
-def socket_ingest_stream(
-    spark: SparkSession,
-    host: str,
-    port: int,
-    store_path: str,
-    checkpoint: str,
-    trigger_ms: int = 500,
-):
-    """socket JSON-lines → validated points → shard store append.
-
-    500 ms micro-batches mirror the reference's client flush interval
-    (ingressclient.go:15-17). Returns the started StreamingQuery."""
-    lines = (
-        spark.readStream.format("socket")
-        .option("host", host)
-        .option("port", port)
-        .load()
-    )
-    points = parse_point_lines(lines)
-
-    def append(batch: DataFrame, batch_id: int) -> None:
-        from metric_store_release_spark.sources.storage import write_samples
-
-        write_samples(batch, store_path)
-
-    return (
-        points.writeStream.foreachBatch(append)
-        .option("checkpointLocation", checkpoint)
-        .trigger(processingTime=f"{trigger_ms} milliseconds")
-        .start()
     )

@@ -325,11 +325,9 @@ def test_or_with_mixed_schemas(engine, samples):
     assert df.count() == 4  # 2 jobs + 2 vector_matching_a series
 
 
-def test_many_to_many_detection_default_on(spark, samples, engine):
-    from metric_store_release_spark import EngineConfig, PromQLEngine
-
+def test_many_to_many_detection_default_on(samples, engine):
     # engine.go:2228-2246: the reference rejects on() collisions
-    # unconditionally, so the DEFAULT engine must raise
+    # unconditionally
     with pytest.raises(Exception, match="many-to-many"):
         engine.query_instant(
             samples,
@@ -343,31 +341,6 @@ def test_many_to_many_detection_default_on(spark, samples, engine):
         50 * MIN,
     )
     assert out.count() == 4
-    # explicit opt-out restores the permissive join
-    loose = PromQLEngine(spark, EngineConfig(check_matching=False))
-    n = loose.query_instant(
-        samples,
-        'http_requests{group="canary"} + on(job) http_requests{group="production"}',
-        50 * MIN,
-    ).count()
-    assert n > 0
-
-
-def test_check_matching_off_reaches_subqueries(spark):
-    from metric_store_release_spark import EngineConfig, PromQLEngine
-
-    # ceil() strips __name__, so a and b collide on one labelset: the
-    # opt-out must hold inside a subquery's inner evaluation too
-    df = corpus.load(spark, MIN, ['a{x="1"} 1 2 3', 'b{x="1"} 4 5 6'])
-    loose = PromQLEngine(spark, EngineConfig(check_matching=False))
-    # collect(), not count(): count() prunes the value column and with it
-    # the lazy assertion
-    flat = loose.query_range(df, 'ceil({__name__=~"a|b"})', 0, 2 * MIN, MIN)
-    assert len(flat.collect()) == 6
-    out = loose.query_range(
-        df, 'max_over_time(ceil({__name__=~"a|b"})[2m:1m])', 0, 2 * MIN, MIN
-    )
-    assert len(out.collect()) == 3
 
 
 def test_many_to_many_eval_fail_corpus(engine, spark):

@@ -127,8 +127,8 @@ def dashboard(spark):
     return df
 
 
-def _exchanges(df) -> int:
-    return df._jdf.queryExecution().executedPlan().toString().count("Exchange")
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
 
 
 @pytest.mark.parametrize(
@@ -151,33 +151,24 @@ def test_dashboard_plans_skip_only_vacuous_assertions(
     spark, dashboard, query, range_min, exchanges, skipped, kept
 ):
     """Each runtime uniqueness assertion is one hash aggregation, so one
-    Exchange. Where the static proof shows an assertion can never fire it
-    leaves the plan: `skipped` of them per shape, so the plan had
-    `exchanges + skipped` Exchanges before the proof existed. The `kept`
-    ones are exactly what the default plan holds beyond a plan built with
-    every assertion off."""
+    Exchange, under one `raise_error` filter. Where the static proof shows
+    an assertion can never fire it leaves the plan: `skipped` of them per
+    shape, so the plan had `exchanges + skipped` Exchanges before the proof
+    existed. The `kept` ones are the plan's `raise_error` filters."""
     end = 90 * MIN
-
-    def plan_exchanges(config):
-        eng = PromQLEngine(spark, config)
-        if range_min:
-            out = eng.query_range(dashboard, query, end - range_min * MIN, end, MIN)
-        else:
-            out = eng.query_instant(dashboard, query, end)
-        return _exchanges(out)
-
-    n = plan_exchanges(EngineConfig())
-    assert n == exchanges, (query, skipped)
-    assert n == plan_exchanges(EngineConfig(check_matching=False)) + kept
+    eng = PromQLEngine(spark)
+    if range_min:
+        out = eng.query_range(dashboard, query, end - range_min * MIN, end, MIN)
+    else:
+        out = eng.query_instant(dashboard, query, end)
+    plan = _plan(out)
+    assert plan.count("Exchange") == exchanges, (query, skipped)
+    assert plan.count("raise_error(") == kept, plan
 
 
 # ---------------------------------------------------------------------------
 # pipeline operators: shuffle/scan-shape invariants at 100 TB
 # ---------------------------------------------------------------------------
-
-
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_repetition_features_is_map_side_only(spark):

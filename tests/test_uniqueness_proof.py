@@ -3,8 +3,8 @@
 The evaluator leaves the same-labelset and many-to-many assertions out of
 the plan only where the plan itself guarantees one row per (t, match key).
 These tests pin both halves: every collision the reference rejects
-(collision.test, operators.test, histograms.test) still raises, and the
-proof is granted exactly where it holds.
+(collision.test, operators.test, histograms.test) still raises, whatever
+columns the action reads, and the proof is granted exactly where it holds.
 """
 
 from __future__ import annotations
@@ -41,6 +41,16 @@ def collide(spark):
     return df
 
 
+# count() and a labels-only read prune the value column: the assertions
+# must not live there
+ACTIONS = {
+    "collect": lambda df: df.collect(),
+    "count": lambda df: df.count(),
+    "labels": lambda df: df.select("labels").collect(),
+}
+
+
+@pytest.mark.parametrize("action", list(ACTIONS))
 @pytest.mark.parametrize(
     "query, message",
     [
@@ -56,11 +66,15 @@ def collide(spark):
         # range-function output: label keys unknown, so on() keeps the check
         ("rate(x[5m]) / on(job) rate(y[5m])", "many-to-many"),
         ("rate(x[5m]) / ignoring(instance) rate(y[5m])", "many-to-many"),
+        # a collision inside a subquery's inner evaluation
+        ('max_over_time(ceil({__name__=~"a_total|b_total"})[2m:1m])',
+         "same labelset"),
     ],
 )
-def test_collisions_still_raise(engine, collide, query, message):
+def test_collisions_still_raise(engine, collide, query, message, action):
+    out = engine.query_range(collide, query, 10 * MIN, 15 * MIN, MIN)
     with pytest.raises(Exception, match=message):
-        engine.query_range(collide, query, 10 * MIN, 15 * MIN, MIN).collect()
+        ACTIONS[action](out)
 
 
 def _unique(spark, samples, query):
@@ -108,26 +122,29 @@ def test_proof_granted_only_where_it_holds(spark, collide, query, proof):
 
 
 @pytest.mark.parametrize(
-    "query, keys",
+    "query, keys, value",
     [
-        ("sum by (job) (x) / sum by (job) (y)", ["job"]),
-        ("sum by (job) (x) / on(job) sum by (job) (y)", ["job"]),
-        ("sum by (job) (x) / ignoring(instance) sum by (job) (y)", ["job"]),
-        ("rate(a_total[5m]) / rate(b_total[5m])", ["job", "instance"]),
-        ('histogram_quantile(0.9, sum by (le) (rate(a_bucket[5m])))', []),
+        # x sums to 1 + 2 per step, y to 4
+        ("sum by (job) (x) / sum by (job) (y)", ["job"], 0.75),
+        ("sum by (job) (x) / on(job) sum by (job) (y)", ["job"], 0.75),
+        ("sum by (job) (x) / ignoring(instance) sum by (job) (y)", ["job"],
+         0.75),
+        # b_total climbs twice as fast as a_total over the same timestamps
+        ("rate(a_total[5m]) / rate(b_total[5m])", ["job", "instance"], 0.5),
+        # le="+Inf" climbs twice as fast as le="1": rank 0.9 of the total
+        # lands in the +Inf bucket, which answers the highest finite bound
+        ('histogram_quantile(0.9, sum by (le) (rate(a_bucket[5m])))', [], 1.0),
     ],
 )
-def test_proven_shapes_answer_as_unchecked(spark, collide, query, keys):
-    """Where the proof skips an assertion, the default engine answers as
-    one with every assertion off."""
-    from metric_store_release_spark import EngineConfig, PromQLEngine
-
-    on = PromQLEngine(spark)
-    off = PromQLEngine(spark, EngineConfig(check_matching=False))
-    want = rows_to_dict(
-        off.query_range(collide, query, 10 * MIN, 15 * MIN, MIN), keys
-    )
-    got = rows_to_dict(
-        on.query_range(collide, query, 10 * MIN, 15 * MIN, MIN), keys
-    )
-    assert want and got == pytest.approx(want, nan_ok=True)
+def test_proven_shapes_answer_as_unchecked(engine, collide, query, keys, value):
+    """Where the proof skips an assertion, the plan holds none, and the
+    answer is the fixture's: one value per step on the one series."""
+    out = engine.query_range(collide, query, 10 * MIN, 15 * MIN, MIN)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "raise_error(" not in plan, plan
+    labels = {"job": "j", "instance": "0"}
+    want = {
+        (t * MIN,) + tuple(labels[k] for k in keys): value
+        for t in range(10, 16)
+    }
+    assert rows_to_dict(out, keys) == pytest.approx(want)
