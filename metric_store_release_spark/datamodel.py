@@ -23,11 +23,20 @@ Series identity is the full label set; we group/join on a canonical
 *signature*: sorted array of (key, value) entries. Spark cannot group by
 MapType, but array<struct> is both groupable and joinable, and building it is
 a map-side expression (no shuffle).
+
+The engine builds its plans from SQL text (`num`, `sig_sql`, `project`,
+`aggregate` below) and keeps strings from queries as literal Columns
+(`sig_subset`, memoized by `memo_column`); see engine/evaluator.py.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+import functools
+import math
+from collections.abc import Sequence
+
+from pyspark import SparkContext
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BooleanType,
@@ -75,38 +84,113 @@ def sig(labels: Column) -> Column:
     """Canonical series signature: sorted entries of a label map.
 
     Equivalent of the reference's label-set hash
-    (transform/series_set_builder.go:52), except collision-free.
+    (transform/series_set_builder.go:52), except collision-free. Sorted by
+    key, then value, with `sort_array`: `array_sort` plans a default
+    comparator lambda, which falls out of whole-stage codegen.
     """
-    return F.array_sort(F.map_entries(labels))
+    return F.sort_array(F.map_entries(labels))
 
 
-def sig_of(labels: Column, keys: list[str], mode: str) -> Column:
-    """Signature restricted to a label subset.
+def sig_sql(labels: str) -> str:
+    """`sig` as SQL text over the SQL text of a label map."""
+    return f"sort_array(map_entries({labels}))"
 
-    mode='on'/'by'     : keep only `keys`  (absent keys simply missing)
-    mode='ignoring'/'without': drop `keys` (and __name__)
+
+def num(x: int | float) -> str:
+    """A Python number as Spark SQL text.
+
+    The engine writes its structural expressions (step grid, windows,
+    range-function math) as SQL text, and numbers are the only values it
+    formats into that text: label names and values, regexes and every
+    other string from a query stay literal Columns. Ints become BIGINT
+    (`…L`); doubles get the `D` suffix, since `1000.0` alone is a DECIMAL.
     """
-    if mode in ("on", "by"):
-        keyset = F.array(*[F.lit(k) for k in keys])
-        kept = F.map_filter(labels, lambda k, _: F.array_contains(keyset, k))
-    elif mode in ("ignoring", "without"):
-        dropped = F.array(*[F.lit(k) for k in keys], F.lit(NAME_LABEL))
-        kept = F.map_filter(labels, lambda k, _: ~F.array_contains(dropped, k))
-    else:  # pragma: no cover
-        raise ValueError(f"bad sig mode {mode!r}")
-    return F.array_sort(F.map_entries(kept))
+    if isinstance(x, bool) or not isinstance(x, (int, float)):
+        raise TypeError(f"not a number: {x!r}")
+    if isinstance(x, int):
+        text = f"{x}L"
+    elif math.isnan(x):
+        return "double('NaN')"
+    elif math.isinf(x):
+        return "double('Infinity')" if x > 0 else "double('-Infinity')"
+    else:
+        text = f"{x!r}D"
+    return f"({text})" if text.startswith("-") else text
 
 
-def labels_without(labels: Column, keys: list[str]) -> Column:
-    """Label map minus `keys` and __name__ (PromQL `without` projection)."""
-    dropped = F.array(*[F.lit(k) for k in keys], F.lit(NAME_LABEL))
-    return F.map_filter(labels, lambda k, _: ~F.array_contains(dropped, k))
+def sql_string(const: str) -> str:
+    """A constant of the program (a message, a configured tag name) as a
+    SQL string literal; query strings never go through here."""
+    if "'" in const or "\\" in const:
+        raise ValueError(f"not a plain constant: {const!r}")
+    return f"'{const}'"
 
 
-def labels_keep(labels: Column, keys: list[str]) -> Column:
-    """Label map restricted to `keys` (PromQL `by` / `on` projection)."""
-    keyset = F.array(*[F.lit(k) for k in keys])
-    return F.map_filter(labels, lambda k, _: F.array_contains(keyset, k))
+def project(df: DataFrame, *cols: str | Column) -> DataFrame:
+    """One select over `df`: SQL-text items for structural expressions,
+    Column items for anything built from a query string."""
+    if all(isinstance(c, str) for c in cols):
+        return df.selectExpr(*cols)
+    return df.select(*(F.expr(c) if isinstance(c, str) else c for c in cols))
+
+
+def aggregate(df: DataFrame, keys: list[str | Column], aggs: list[str]) -> DataFrame:
+    """One grouped aggregation of `df`: `keys` are its column names or
+    key Columns, `aggs` SQL text."""
+    cols = [df[k] if isinstance(k, str) else k for k in keys]
+    return df.groupBy(*cols).agg(*[F.expr(a) for a in aggs])
+
+
+def memo_column(build):
+    """Memoize a builder of Columns from query strings by its (hashable)
+    arguments.
+
+    A dashboard re-issues the same queries. A Column built from their
+    strings (a matcher, a label-name filter) costs a py4j round trip or
+    more per node, while the tree itself is an immutable, unresolved
+    expression that any number of plans can share. Entries are kept per
+    SparkContext.
+    """
+
+    @functools.lru_cache(maxsize=1024)
+    def cached(sc, *args):
+        return build(*args)
+
+    @functools.wraps(build)
+    def memoized(*args):
+        return cached(SparkContext._active_spark_context, *args)
+
+    return memoized
+
+
+def nameless_sql(labels: str) -> str:
+    """SQL text: a label map without __name__ (function and operator
+    output)."""
+    return f"map_filter({labels}, (k, v) -> k != '{NAME_LABEL}')"
+
+
+#: SQL text: `sig` without __name__ (sorted entries stay sorted)
+NAMELESS_SIG = f"filter(sig, e -> e.key != '{NAME_LABEL}')"
+
+
+def sig_subset(keys: Sequence[str], keep: bool) -> str | Column:
+    """The `sig` column restricted to a label subset: `keep` (by / on)
+    keeps only `keys`; otherwise (without / ignoring) drops `keys` and
+    __name__. Filtering the sorted entries keeps them sorted. Label names
+    come from the query, so non-empty `keys` give a Column holding them
+    as literals; otherwise the result is SQL text."""
+    if not keys:
+        return "filter(sig, e -> false)" if keep else NAMELESS_SIG
+    return _sig_subset(tuple(keys), keep)
+
+
+@memo_column
+def _sig_subset(keys: tuple[str, ...], keep: bool) -> Column:
+    if keep:
+        names = F.array(*[F.lit(k) for k in keys])
+        return F.filter(F.col("sig"), lambda e: F.array_contains(names, e["key"]))
+    names = F.array(*[F.lit(k) for k in keys], F.lit(NAME_LABEL))
+    return F.filter(F.col("sig"), lambda e: ~F.array_contains(names, e["key"]))
 
 
 def sanitize_metric_name(col: Column) -> Column:

@@ -27,12 +27,14 @@ from __future__ import annotations
 
 from collections import OrderedDict
 from collections.abc import Iterator
+from weakref import WeakKeyDictionary
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from metric_store_release_spark.datamodel import num, sql_string
 from metric_store_release_spark.engine.evaluator import PromQLEvalError, assert_rows
-from metric_store_release_spark.engine.selectors import base_scan
+from metric_store_release_spark.engine.selectors import base_scan, step_span
 from metric_store_release_spark.promql import ast
 from metric_store_release_spark.promql.ast import (
     AggregateExpr,
@@ -190,6 +192,21 @@ _FOOTER_CACHE_CAP = 4096
 _MAX_FOOTER_FILES = 4096
 
 
+#: per samples frame: (optimizer row count, input files). Both are fixed
+#: when the frame is created (a file source lists its files then), and a
+#: dashboard asks for them once per panel of every refresh.
+_source_meta: "WeakKeyDictionary[DataFrame, tuple]" = WeakKeyDictionary()
+
+
+def _source(samples: DataFrame) -> tuple[int | None, list[str] | None]:
+    meta = _source_meta.get(samples)
+    if meta is None:
+        meta = _source_meta[samples] = (
+            _plan_row_count(samples), _source_files(samples)
+        )
+    return meta
+
+
 def _plan_row_count(df: DataFrame) -> int | None:
     """Optimizer-known exact row count (LocalRelation / cached relation) —
     free, no job. None when the plan's stats don't carry one (parquet)."""
@@ -272,7 +289,7 @@ def _footer_rows(samples: DataFrame, lo: int, hi: int) -> int | None:
     time-ordered ingest, so this prunes like the reference's shard-by-time
     pruning (influx_adapter.go:372-389) without scanning anything.
     """
-    files = _source_files(samples)
+    _, files = _source(samples)
     if not files or len(files) > _MAX_FOOTER_FILES:
         return None
     key = (hash(tuple(files)), len(files), lo, hi)
@@ -339,8 +356,8 @@ def static_sample_bound(
     reference's ErrTooManySamples). Returns None if no bound is computable.
     """
     n_steps = (end_ms - start_ms) // step_ms
-    whole_rows = _plan_row_count(samples)
-    file_backed = bool(_source_files(samples))
+    whole_rows, files = _source(samples)
+    file_backed = bool(files)
     total = 0
     for sel, window_ms, extra, lo, hi, pinned in _selector_windows(
         node, start_ms, end_ms, lookback_ms
@@ -388,35 +405,24 @@ def attach_sample_guard(
         node, start_ms, end_ms, lookback_ms
     ):
         if pinned:
-            per_sample = F.lit(n_steps + 1)
+            per_sample = num(n_steps + 1)
         else:
-            shifted = F.col("ts") + F.lit(sel.offset_ms)
-            k0 = F.greatest(
-                F.lit(0),
-                F.ceil((shifted - F.lit(start_ms)) / F.lit(step_ms)).cast("long"),
+            k0, k1 = step_span(
+                start_ms, end_ms, step_ms,
+                f"ts + {num(sel.offset_ms)}", f"ts + {num(sel.offset_ms + window_ms)}",
             )
-            k1 = F.least(
-                F.lit(n_steps),
-                F.floor(
-                    (shifted + F.lit(window_ms) - F.lit(start_ms)) / F.lit(step_ms)
-                ).cast("long"),
-            )
-            per_sample = F.when(k1 >= k0, k1 - k0 + 1).otherwise(F.lit(0))
+            per_sample = f"CASE WHEN {k1} >= {k0} THEN {k1} - {k0} + 1 ELSE 0 END"
         scan = base_scan(samples, sel, lo, hi)
-        parts.append(scan.select(per_sample.cast("long").alias("n")))
+        parts.append(scan.selectExpr(f"CAST({per_sample} AS BIGINT) AS n"))
     if not parts:
         return result
-    total = _union_all(parts).select(
-        F.coalesce(F.sum("n"), F.lit(0)).alias("n")
+    total = _union_all(parts).selectExpr("coalesce(sum(n), 0) AS n")
+    message = (
+        f"concat({sql_string(GUARD_MESSAGE + ': query fans out ')}, "
+        f"CAST(n AS STRING), {sql_string(' samples onto the step grid (cap ')}, "
+        f"CAST({num(max_samples)} AS STRING), {sql_string(', metric_store.go:296)')})"
     )
     guard = assert_rows(
-        total,
-        F.col("n") <= F.lit(max_samples),
-        F.concat(
-            F.lit(f"{GUARD_MESSAGE}: query fans out "),
-            F.col("n").cast("string"),
-            F.lit(f" samples onto the step grid (cap {max_samples}, "
-                  "metric_store.go:296)"),
-        ),
-    ).select(F.lit(True).alias("__adm"))
+        total, f"n <= {num(max_samples)}", message
+    ).selectExpr("true AS __adm")
     return result.crossJoin(F.broadcast(guard)).drop("__adm")

@@ -20,8 +20,9 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
-from metric_store_release_spark.datamodel import DEFAULT_LOOKBACK_MS, NAME_LABEL
+from metric_store_release_spark.datamodel import DEFAULT_LOOKBACK_MS, NAME_LABEL, num
 from metric_store_release_spark.engine.evaluator import (
+    EMPTY_LABELS,
     EvalContext,
     Evaluator,
     PromQLEvalError,
@@ -210,20 +211,16 @@ class PromQLEngine:
             return out.orderBy(*order_by) if order_by else out
 
         if isinstance(res, VectorResult):
-            out = _admit(res.df.select("t", "labels", "value"), res.order_by)
+            out = _admit(res.df.selectExpr("t", "labels", "value"), res.order_by)
         elif isinstance(res, ScalarResult):
             if res.is_const:
-                out = Evaluator(ctx).steps_df().select(
-                    "t",
-                    F.expr("cast(map() as map<string,string>)").alias("labels"),
-                    F.lit(float(res.const)).alias("value"),
+                out = Evaluator(ctx).steps_df().selectExpr(
+                    "t", f"{EMPTY_LABELS} AS labels", f"{num(float(res.const))} AS value"
                 )
             else:
-                out = _admit(res.df.select(
-                    "t",
-                    F.expr("cast(map() as map<string,string>)").alias("labels"),
-                    "value",
-                ))
+                out = _admit(
+                    res.df.selectExpr("t", f"{EMPTY_LABELS} AS labels", "value")
+                )
         elif isinstance(res, StringResult):
             raise PromQLEvalError("string results are not materializable")
         else:

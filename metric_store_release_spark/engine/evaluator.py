@@ -7,6 +7,18 @@ Catalyst then owns physical planning (pushdown, partial aggregation, join
 strategy, AQE). Step-invariant subexpressions (the reference's
 StepInvariantExpr rewrite, engine.go:2924+) come for free: a literal is a
 literal column, evaluated once.
+
+Construction rule: structural expressions as SQL text, user strings as
+literals. Each operator adds its plan nodes with one DataFrame call apiece
+(`selectExpr`/`select`, `filter`, `groupBy().agg`, `join`) and writes the
+expressions in them — step grid, window fan-out, lag columns, range-function
+math, label and sig maps, assertion predicates — as SQL text, because the
+driver builds a Column tree with one py4j round trip per node, and parses a
+whole SQL expression in one. Numbers enter that text only through
+`datamodel.num`. Strings from the query — matcher values and regexes, label
+names in by/without/on/ignoring, the arguments of label_replace, label_join
+and count_values — never do: they stay `F.lit` Columns in the same select,
+built once per distinct string (`datamodel.memo_column`).
 """
 
 from __future__ import annotations
@@ -16,14 +28,19 @@ from dataclasses import dataclass, replace
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from metric_store_release_spark.datamodel import (
     NAME_LABEL,
-    labels_keep,
-    labels_without,
+    NAMELESS_SIG,
+    aggregate,
+    memo_column,
+    nameless_sql,
+    num,
+    project,
     sig,
-    sig_of,
+    sig_sql,
+    sig_subset,
+    sql_string,
 )
 from metric_store_release_spark.engine import selectors
 from metric_store_release_spark.engine.histogram import histogram_quantile
@@ -31,6 +48,7 @@ from metric_store_release_spark.engine.range_functions import (
     NEEDS_ORDER_COLS,
     RANGE_FUNCS,
     apply_range_func,
+    nan_aware_agg,
 )
 from metric_store_release_spark.engine.results import (
     RangeFrame,
@@ -55,6 +73,10 @@ from metric_store_release_spark.promql.ast import (
     VectorMatchCard,
     VectorSelector,
 )
+
+#: SQL text: the empty label map, and NaN
+EMPTY_LABELS = "cast(map() as map<string,string>)"
+_NAN = num(math.nan)
 
 
 class PromQLEvalError(Exception):
@@ -89,11 +111,13 @@ class Evaluator:
     # ------------------------------------------------------------------ util
     def steps_df(self) -> DataFrame:
         c = self.ctx
-        return self.ctx.spark.range(c.n_steps).select(
-            (F.lit(c.start_ms) + F.col("id") * F.lit(c.step_ms))
-            .cast("long")
-            .alias("t")
+        return c.spark.range(c.n_steps).selectExpr(
+            f"CAST({num(c.start_ms)} + id * {num(c.step_ms)} AS BIGINT) AS t"
         )
+
+    def time_df(self) -> DataFrame:
+        """time(): the step grid as a scalar, in seconds."""
+        return self.steps_df().selectExpr("t", "t / 1000.0D AS value")
 
     def _resolve_at(self, node: VectorSelector | SubqueryExpr) -> None:
         if node.at_preprocessor == "start":
@@ -180,11 +204,8 @@ class Evaluator:
             inner = VectorResult(self._scalar_to_vector(inner, inner_ctx))
         if not isinstance(inner, VectorResult):
             raise PromQLEvalError("subquery inner expression must be a vector/scalar")
-        pts = inner.df.select(
-            F.col("t").alias("ts"), "sig", "labels", "value"
-        )
         df = selectors.window_frame(
-            pts,
+            inner.df.selectExpr("t AS ts", "sig", "value"),
             node.range_ms,
             node.offset_ms,
             c.start_ms,
@@ -213,27 +234,16 @@ class Evaluator:
                 out, unique=UniqueSeries(None if keys is None else keys - {"le"})
             )
         if name == "time":
-            return ScalarResult(
-                df=self.steps_df().select(
-                    "t", (F.col("t") / 1000.0).alias("value")
-                )
-            )
+            return ScalarResult(df=self.time_df())
         if name == "pi":
             return ScalarResult(const=math.pi)
         if name == "scalar":
             vec = self._vector_arg(node.args[0])
-            per_t = vec.df.groupBy("t").agg(
-                F.count(F.lit(1)).alias("n"), F.first("value").alias("v")
-            )
+            per_t = aggregate(vec.df, ["t"], ["count(1) AS n", "first(value) AS v"])
             out = (
                 self.steps_df()
                 .join(per_t, "t", "left")
-                .select(
-                    "t",
-                    F.when(F.col("n") == 1, F.col("v"))
-                    .otherwise(F.lit(float("nan")))
-                    .alias("value"),
-                )
+                .selectExpr("t", f"CASE WHEN n = 1 THEN v ELSE {_NAN} END AS value")
             )
             return ScalarResult(df=out)
         if name == "vector":
@@ -243,17 +253,13 @@ class Evaluator:
             return VectorResult(self._scalar_to_vector(s, self.ctx))
         if name == "timestamp":
             vec = self._vector_arg(node.args[0])
-            df = vec.df
-            src = (
-                F.col("sample_ts") if "sample_ts" in df.columns else F.col("t")
-            )
+            src = "sample_ts" if "sample_ts" in vec.df.columns else "t"
             # the output is a COMPUTED vector: its samples exist at eval
             # time, so sample_ts must not leak (timestamp(timestamp(v @ 10))
             # is the eval step, not 10 — at_modifier.test)
-            out = df.withColumn("value", src.cast("double") / 1000.0)
-            if "sample_ts" in df.columns:
-                out = out.drop("sample_ts")
-            return self._drop_name(out, vec.unique)
+            return self._drop_name(
+                vec.df, vec.unique, f"CAST({src} AS DOUBLE) / 1000.0D", sample_ts=False
+            )
         if name in ("sort", "sort_desc"):
             vec = self._vector_arg(node.args[0])
             # functions.go:349-364: both sorts put NaN LAST. Spark orders
@@ -282,46 +288,25 @@ class Evaluator:
                 if len(node.args) > 1
                 else 1.0
             )
-            return self._drop_name(
-                vec.df.withColumn("value", sf.promql_round(F.col("value"), nearest)),
-                vec.unique,
-            )
+            return self._drop_name(vec.df, vec.unique, sf.promql_round("value", nearest))
         if name in sf.DATE_FUNCS:
             if node.args:
                 vec = self._vector_arg(node.args[0])
             else:
                 vec = VectorResult(
-                    self._scalar_to_vector(
-                        ScalarResult(
-                            df=self.steps_df().select(
-                                "t", (F.col("t") / 1000.0).alias("value")
-                            )
-                        ),
-                        self.ctx,
-                    )
+                    self._scalar_to_vector(ScalarResult(df=self.time_df()), self.ctx)
                 )
-            return self._drop_name(
-                vec.df.withColumn("value", sf.date_part(name, F.col("value"))),
-                vec.unique,
-            )
+            return self._drop_name(vec.df, vec.unique, sf.date_part(name, "value"))
         if name in sf.SIMPLE_MATH:
             arg = self.eval(node.args[0])
+            value = sf.apply_simple_math(name, "value")
             if isinstance(arg, ScalarResult):
                 # functions like abs() are vector-only in PromQL, but keep
                 # scalar math working for ln(2) style constants
                 if arg.is_const:
                     return ScalarResult(const=_py_simple_math(name, arg.const))
-                return ScalarResult(
-                    df=arg.df.withColumn(
-                        "value", sf.apply_simple_math(name, F.col("value"))
-                    )
-                )
-            return self._drop_name(
-                arg.df.withColumn(
-                    "value", sf.apply_simple_math(name, F.col("value"))
-                ),
-                arg.unique,
-            )
+                return ScalarResult(df=arg.df.selectExpr("t", f"{value} AS value"))
+            return self._drop_name(arg.df, arg.unique, value)
         raise PromQLEvalError(f"unsupported function {name!r}")
 
     def _eval_range_call(self, node: Call):
@@ -352,35 +337,25 @@ class Evaluator:
             return VectorResult(out, unique=UniqueSeries())
         return VectorResult(_assert_one_row_per(out, "sig", _SAME_LABELSET))
 
+    def _absent_vector(self, present: DataFrame, labels: Column) -> VectorResult:
+        """One `labels` sample of value 1 at every step `present` lacks."""
+        missing = self.steps_df().join(present.selectExpr("t").distinct(), "t", "left_anti")
+        return VectorResult(
+            project(missing, "t", labels.alias("labels"), sig(labels).alias("sig"), "1.0D AS value")
+        )
+
     def _eval_absent(self, arg: ast.Node) -> VectorResult:
         vec = self._vector_arg(arg)
-        present = vec.df.select("t").distinct()
-        missing = self.steps_df().join(present, "t", "left_anti")
-        labels = self._absent_labels(arg)
-        out = missing.select(
-            "t",
-            labels.alias("labels"),
-            sig(labels).alias("sig"),
-            F.lit(1.0).alias("value"),
-        )
-        return VectorResult(out)
+        return self._absent_vector(vec.df, self._absent_labels(arg))
 
     def _eval_absent_over_time(self, arg: ast.Node) -> VectorResult:
         frame = self.build_range_frame(arg, False)
-        present = frame.df.select("t").distinct()
-        missing = self.steps_df().join(present, "t", "left_anti")
         inner = arg
         while isinstance(inner, ParenExpr):
             inner = inner.expr
         sel = inner.selector if isinstance(inner, MatrixSelector) else None
-        labels = self._absent_labels(sel) if sel else F.create_map()
-        out = missing.select(
-            "t",
-            labels.alias("labels"),
-            sig(labels).alias("sig"),
-            F.lit(1.0).alias("value"),
-        )
-        return VectorResult(out)
+        labels = self._absent_labels(sel) if sel else F.expr(EMPTY_LABELS)
+        return self._absent_vector(frame.df, labels)
 
     @staticmethod
     def _absent_labels(arg) -> Column:
@@ -405,9 +380,7 @@ class Evaluator:
             for name in dels:
                 b.pop(name, None)
         entries = [x for k, v in b.items() for x in (F.lit(k), F.lit(v))]
-        return F.create_map(*entries) if entries else F.expr(
-            "cast(map() as map<string,string>)"
-        )
+        return F.create_map(*entries) if entries else F.expr(EMPTY_LABELS)
 
     def _eval_label_replace(self, node: Call) -> VectorResult:
         import re as _re
@@ -439,10 +412,9 @@ class Evaluator:
             .when(matched, without_dst)
             .otherwise(F.col("labels"))
         )
-        out = vec.df.withColumn("labels", new_labels).withColumn(
-            "sig", sig(F.col("labels"))
+        return VectorResult(
+            _assert_one_row_per(_relabel(vec.df, new_labels), "sig", _SAME_LABELSET)
         )
-        return VectorResult(_assert_one_row_per(out, "sig", _SAME_LABELSET))
 
     def _eval_label_join(self, node: Call) -> VectorResult:
         import re as _re
@@ -462,42 +434,30 @@ class Evaluator:
         new_labels = F.when(
             joined != "", F.map_concat(without_dst, F.create_map(F.lit(dst), joined))
         ).otherwise(without_dst)
-        out = vec.df.withColumn("labels", new_labels).withColumn(
-            "sig", sig(F.col("labels"))
+        return VectorResult(
+            _assert_one_row_per(_relabel(vec.df, new_labels), "sig", _SAME_LABELSET)
         )
-        return VectorResult(_assert_one_row_per(out, "sig", _SAME_LABELSET))
 
     def _eval_clamp(self, node: Call) -> VectorResult:
         vec = self._vector_arg(node.args[0])
         if node.func == "clamp":
-            mn_v = self._const_scalar(node.args[1], "min")
-            mx_v = self._const_scalar(node.args[2], "max")
+            mn = self._const_scalar(node.args[1], "min")
+            mx = self._const_scalar(node.args[2], "max")
             # funcClamp: max < min → empty vector (NOT NaN; false when
             # either bound is NaN, which instead propagates per-value)
-            if mx_v < mn_v:
-                return VectorResult(vec.df.filter(F.lit(False)))
-            mn, mx = F.lit(mn_v), F.lit(mx_v)
+            if mx < mn:
+                return VectorResult(vec.df.filter("false"))
         elif node.func == "clamp_max":
-            mn = F.lit(float("-inf"))
-            mx = F.lit(self._const_scalar(node.args[1], "max"))
+            mn, mx = -math.inf, self._const_scalar(node.args[1], "max")
         else:
-            mn = F.lit(self._const_scalar(node.args[1], "min"))
-            mx = F.lit(float("inf"))
-        out = vec.df.withColumn("value", sf.promql_clamp(F.col("value"), mn, mx))
-        return self._drop_name(out, vec.unique)
+            mn, mx = self._const_scalar(node.args[1], "min"), math.inf
+        return self._drop_name(vec.df, vec.unique, sf.promql_clamp("value", mn, mx))
 
     # ----------------------------------------------------------- aggregation
     def eval_aggregation(self, node: AggregateExpr) -> VectorResult:
         vec = self._vector_arg(node.expr)
         df = vec.df
-        mode = "without" if node.without else "by"
-        gsig = sig_of(F.col("labels"), node.grouping, mode)
-        glabels = (
-            labels_without(F.col("labels"), node.grouping)
-            if node.without
-            else labels_keep(F.col("labels"), node.grouping)
-        )
-        df = df.withColumn("gsig", gsig).withColumn("glabels", glabels)
+        gsig = sig_subset(node.grouping, keep=not node.without)
         # every output below but topk/bottomk is one row per (t, gsig),
         # labelled by gsig: unique, and nameless unless grouped by __name__
         if node.without:
@@ -516,25 +476,32 @@ class Evaluator:
                 raise PromQLEvalError(f"{op} k must be a scalar")
             # per (step, group) ranked window — keeps ORIGINAL series labels
             # (engine.go:2740-2776); NaN ranks last like the reference heap
+            direction = "DESC" if op == "topk" else "ASC"
             order = [F.isnan("value").asc()]
             order.append(
                 F.col("value").desc() if op == "topk" else F.col("value").asc()
             )
-            w = Window.partitionBy("t", "gsig").orderBy(*order)
-            ranked = df.withColumn("__rn", F.row_number().over(w))
+            ranked = project(
+                df, "t", "labels", "sig", "value", _alias(gsig, "gsig")
+            ).selectExpr(
+                "*",
+                "row_number() OVER (PARTITION BY t, gsig ORDER BY isnan(value) ASC, "
+                f"value {direction}) AS __rn",
+            )
             if kres.is_const:
                 k = int(kres.const)
                 if k < 1:
                     return VectorResult(
-                        df.filter(F.lit(False)).select("t", "labels", "sig", "value")
+                        df.filter("false").selectExpr("t", "labels", "sig", "value")
                     )
+                # a Column comparison with an int literal, as the optimizer's
+                # WindowGroupLimit rule matches it: the per-group limit then
+                # runs before the window's shuffle
                 out = ranked.filter(F.col("__rn") <= k)
             else:
-                kdf = kres.df.select(
-                    "t", F.col("value").cast("long").alias("__k")
-                )
-                out = ranked.join(kdf, "t").filter(F.col("__rn") <= F.col("__k"))
-            out = out.select("t", "labels", "sig", "value")
+                kdf = kres.df.selectExpr("t", "CAST(value AS BIGINT) AS __k")
+                out = ranked.join(kdf, "t").filter("__rn <= __k")
+            out = out.selectExpr("t", "labels", "sig", "value")
             # the reference's heap pops in value order — the result vector
             # is SORTED (desc for topk, asc for bottomk, NaN last;
             # aggregators.test eval_ordered)
@@ -542,14 +509,11 @@ class Evaluator:
 
         if op == "count_values":
             lbl = self._const_string(node.param)
-            formatted = _format_float(F.col("value"))
-            df = df.withColumn(
-                "glabels",
-                F.map_concat(
-                    F.map_filter(F.col("glabels"), lambda k_, _: k_ != F.lit(lbl)),
-                    F.create_map(F.lit(lbl), formatted),
-                ),
-            ).withColumn("gsig", sig(F.col("glabels")))
+            glabels = F.map_from_entries(_column(gsig))
+            counted = F.map_concat(
+                F.map_filter(glabels, lambda k_, _: k_ != F.lit(lbl)),
+                F.create_map(F.lit(lbl), F.expr(_FORMAT_FLOAT)),
+            )
             if lbl == NAME_LABEL or unique is None:
                 unique = None
             elif unique.keys is not None:
@@ -557,63 +521,37 @@ class Evaluator:
             # aggregate primitives only; glabels == map_from_entries(gsig),
             # so rebuilding it post-agg keeps the buffer hash-aggregable
             # (a map-typed any_value buffer forces SortAggregate)
-            out = (
-                df.groupBy("t", "gsig")
-                .agg(F.count(F.lit(1)).cast("double").alias("value"))
-                .select(
-                    "t",
-                    F.map_from_entries("gsig").alias("labels"),
-                    F.col("gsig").alias("sig"),
-                    "value",
-                )
+            return VectorResult(
+                _aggregate(df, sig(counted), ["CAST(count(1) AS DOUBLE) AS value"]),
+                unique=unique,
             )
-            return VectorResult(out, unique=unique)
 
         if op == "avg":
             # reference avg is an incremental mean (no intermediate-sum
             # overflow: aggregators.test 'big'/'bigzero'). Spark analog: a
             # second sum pre-scaled by 2^-64 (exact — exponent shift only)
             # decides the answer when the plain sum overflows to ±Inf.
-            two64 = 2.0**64
-            inf = float("inf")
-            plain = F.col("__s") / F.col("__n")
-            scaled = F.col("__ss") / F.col("__n") * F.lit(two64)
-            value = F.when(
-                F.isnan(F.col("__s")) | (F.abs(F.col("__s")) != F.lit(inf)),
-                plain,
-            ).otherwise(
-                F.when(F.abs(F.col("__ss")) != F.lit(inf), scaled).otherwise(plain)
+            inf = num(math.inf)
+            value = (
+                f"CASE WHEN isnan(__s) OR abs(__s) != {inf} THEN __s / __n "
+                f"ELSE CASE WHEN abs(__ss) != {inf} THEN __ss / __n * {num(2.0**64)} "
+                "ELSE __s / __n END END"
             )
-            out = (
-                df.groupBy("t", "gsig")
-                .agg(
-                    F.sum("value").alias("__s"),
-                    F.sum(F.col("value") * F.lit(2.0**-64)).alias("__ss"),
-                    F.count(F.lit(1)).cast("double").alias("__n"),
-                )
-                .select(
-                    "t",
-                    F.map_from_entries("gsig").alias("labels"),
-                    F.col("gsig").alias("sig"),
-                    value.alias("value"),
-                )
-            )
-            return VectorResult(out, unique=unique)
+            aggs = [
+                "sum(value) AS __s",
+                f"sum(value * {num(2.0**-64)}) AS __ss",
+                "CAST(count(1) AS DOUBLE) AS __n",
+            ]
+            return VectorResult(_aggregate(df, gsig, aggs, value), unique=unique)
 
         agg = {
-            "sum": F.sum("value"),
-            "count": F.count(F.lit(1)).cast("double"),
-            "group": F.lit(1.0),
-            "stddev": F.stddev_pop("value"),
-            "stdvar": F.var_pop("value"),
-            "min": F.coalesce(
-                F.min(F.when(~F.isnan("value"), F.col("value"))),
-                F.lit(float("nan")),
-            ),
-            "max": F.coalesce(
-                F.max(F.when(~F.isnan("value"), F.col("value"))),
-                F.lit(float("nan")),
-            ),
+            "sum": "sum(value)",
+            "count": "CAST(count(1) AS DOUBLE)",
+            "group": "1.0D",
+            "stddev": "stddev_pop(value)",
+            "stdvar": "var_pop(value)",
+            "min": nan_aware_agg("min"),
+            "max": nan_aware_agg("max"),
         }.get(op)
         if op == "quantile":
             qres = self.eval(node.param)
@@ -622,64 +560,36 @@ class Evaluator:
             if qres.is_const:
                 q = float(qres.const)
                 if math.isnan(q):
-                    agg = F.lit(float("nan"))
+                    agg = _NAN
                 elif q < 0:
-                    agg = F.lit(float("-inf"))
+                    agg = num(-math.inf)
                 elif q > 1:
-                    agg = F.lit(float("inf"))
+                    agg = num(math.inf)
                 else:
-                    agg = F.expr(f"percentile(value, {q!r})")
+                    agg = f"percentile(value, {num(q)})"
             else:
                 # per-step φ (e.g. quantile(scalar(foo), v)): join the
                 # scalar by step and interpolate over the sorted group —
                 # Spark's percentile() needs a foldable fraction, so the
                 # rank interpolation (quantile.go:50-75) is spelled out
-                df = df.join(
-                    qres.df.select("t", F.col("value").alias("__q")), "t"
+                df = df.join(qres.df.selectExpr("t", "value AS __q"), "t")
+                vals = "array_sort(collect_list(CAST(value AS DOUBLE)))"
+                q = "first(__q)"
+                n = f"size({vals})"
+                rank = f"({q} * (CAST({n} AS DOUBLE) - 1))"
+                lo = f"CAST(floor({rank}) AS INT)"
+                hi = f"least({lo} + 1, {n} - 1)"
+                frac = f"({rank} - CAST({lo} AS DOUBLE))"
+                agg = (
+                    f"CASE WHEN isnan({q}) THEN {_NAN} "
+                    f"WHEN {q} < 0 THEN {num(-math.inf)} "
+                    f"WHEN {q} > 1 THEN {num(math.inf)} "
+                    f"ELSE element_at({vals}, {lo} + 1) * (1.0D - {frac}) "
+                    f"+ element_at({vals}, {hi} + 1) * {frac} END"
                 )
-                vals = F.array_sort(
-                    F.collect_list(F.col("value").cast("double"))
-                )
-                q = F.first("__q")
-                n = F.size(vals)
-                rank = q * (n.cast("double") - 1)
-                lo = F.floor(rank).cast("int")
-                hi = F.least(lo + 1, n - 1)
-                frac = rank - lo.cast("double")
-                interp = (
-                    F.element_at(vals, lo + 1) * (F.lit(1.0) - frac)
-                    + F.element_at(vals, hi + 1) * frac
-                )
-                agg_expr = (
-                    F.when(F.isnan(q), F.lit(float("nan")))
-                    .when(q < 0, F.lit(float("-inf")))
-                    .when(q > 1, F.lit(float("inf")))
-                    .otherwise(interp)
-                )
-                out = (
-                    df.groupBy("t", "gsig")
-                    .agg(agg_expr.alias("value"))
-                    .select(
-                        "t",
-                        F.map_from_entries("gsig").alias("labels"),
-                        F.col("gsig").alias("sig"),
-                        "value",
-                    )
-                )
-                return VectorResult(out, unique=unique)
         if agg is None:
             raise PromQLEvalError(f"unsupported aggregation {op!r}")
-        out = (
-            df.groupBy("t", "gsig")
-            .agg(agg.alias("value"))
-            .select(
-                "t",
-                F.map_from_entries("gsig").alias("labels"),
-                F.col("gsig").alias("sig"),
-                "value",
-            )
-        )
-        return VectorResult(out, unique=unique)
+        return VectorResult(_aggregate(df, gsig, [f"{agg} AS value"]), unique=unique)
 
     # ------------------------------------------------------------ binary ops
     def eval_binary(self, node: BinaryExpr):
@@ -697,50 +607,47 @@ class Evaluator:
             return self._vector_vector(node, lhs, rhs)
         raise PromQLEvalError(f"bad operand types for {node.op}")
 
+    @staticmethod
+    def _binop_value(node: BinaryExpr, lhs: str, rhs: str) -> str:
+        """SQL text of an arithmetic or `bool` comparison result."""
+        if node.op in ast.COMPARE_OPS:
+            return f"CASE WHEN {sf.ieee_compare(lhs, rhs, node.op)} THEN 1.0D ELSE 0.0D END"
+        return sf.arith_op(lhs, rhs, node.op)
+
     def _scalar_scalar(self, node, lhs: ScalarResult, rhs: ScalarResult):
         op = node.op
         if op in ast.COMPARE_OPS and not node.return_bool:
             raise PromQLEvalError("comparisons between scalars must use bool")
         if lhs.is_const and rhs.is_const:
             return ScalarResult(const=_py_binop(op, lhs.const, rhs.const, node.return_bool))
-        l = F.lit(lhs.const) if lhs.is_const else F.col("lv")
-        r = F.lit(rhs.const) if rhs.is_const else F.col("rv")
+        l = num(float(lhs.const)) if lhs.is_const else "lv"
+        r = num(float(rhs.const)) if rhs.is_const else "rv"
         if lhs.is_const:
-            base = rhs.df.withColumnRenamed("value", "rv")
+            base = rhs.df.selectExpr("t", "value AS rv")
         else:
-            base = lhs.df.withColumnRenamed("value", "lv")
+            base = lhs.df.selectExpr("t", "value AS lv")
             if not rhs.is_const:
-                base = base.join(rhs.df.withColumnRenamed("value", "rv"), "t")
-        if op in ast.COMPARE_OPS:
-            value = F.when(sf.ieee_compare(l, r, op), F.lit(1.0)).otherwise(F.lit(0.0))
-        else:
-            value = sf.arith_op(l, r, op)
-        return ScalarResult(df=base.select("t", value.alias("value")))
+                base = base.join(rhs.df.selectExpr("t", "value AS rv"), "t")
+        return ScalarResult(
+            df=base.selectExpr("t", f"{self._binop_value(node, l, r)} AS value")
+        )
 
     def _vector_scalar(
         self, node, vec: VectorResult, scalar: ScalarResult, scalar_on_left: bool
     ):
-        op = node.op
         df = vec.df
         if scalar.is_const:
-            s = F.lit(scalar.const)
+            s = num(float(scalar.const))
         else:
-            df = df.join(
-                scalar.df.withColumnRenamed("value", "__sv"), "t"
-            )
-            s = F.col("__sv")
-        v = F.col("value")
-        l, r = (s, v) if scalar_on_left else (v, s)
-        if op in ast.COMPARE_OPS:
-            keep = sf.ieee_compare(l, r, op)
-            if not node.return_bool:
-                return VectorResult(df.filter(keep).drop("__sv"), unique=vec.unique)
-            out = df.withColumn(
-                "value", F.when(keep, F.lit(1.0)).otherwise(F.lit(0.0))
-            )
-        else:
-            out = df.withColumn("value", sf.arith_op(l, r, op))
-        return self._drop_name(out.drop("__sv"), vec.unique)
+            df = df.join(scalar.df.selectExpr("t", "value AS __sv"), "t")
+            s = "__sv"
+        l, r = (s, "value") if scalar_on_left else ("value", s)
+        if node.op in ast.COMPARE_OPS and not node.return_bool:
+            out = df.filter(sf.ieee_compare(l, r, node.op))
+            if not scalar.is_const:
+                out = out.drop("__sv")
+            return VectorResult(out, unique=vec.unique)
+        return self._drop_name(df, vec.unique, self._binop_value(node, l, r))
 
     def _match_sig(self, node: BinaryExpr) -> tuple[str, list[str]]:
         m = node.matching
@@ -750,19 +657,19 @@ class Evaluator:
 
     def _set_op(self, node: BinaryExpr, lhs: VectorResult, rhs: VectorResult):
         mode, keys = self._match_sig(node)
-        msig = sig_of(F.col("labels"), keys, mode)
-        l = lhs.df.withColumn("msig", msig)
-        r = rhs.df.withColumn("msig", msig)
+        msig = _alias(sig_subset(keys, keep=mode == "on"), "msig")
+        l = project(lhs.df, "*", msig)
+        r = project(rhs.df, "*", msig)
         if node.op == "and":
-            out = l.join(r.select("t", "msig").distinct(), ["t", "msig"], "left_semi")
+            out = l.join(r.selectExpr("t", "msig").distinct(), ["t", "msig"], "left_semi")
         elif node.op == "unless":
-            out = l.join(r.select("t", "msig").distinct(), ["t", "msig"], "left_anti")
+            out = l.join(r.selectExpr("t", "msig").distinct(), ["t", "msig"], "left_anti")
         else:  # or — engine.go:2150-2175
             extra = r.join(
-                l.select("t", "msig").distinct(), ["t", "msig"], "left_anti"
+                l.selectExpr("t", "msig").distinct(), ["t", "msig"], "left_anti"
             )
             cols = ["t", "labels", "sig", "value", "msig"]
-            out = l.select(*cols).unionByName(extra.select(*cols))
+            out = l.selectExpr(*cols).unionByName(extra.selectExpr(*cols))
         return VectorResult(out.drop("msig"))
 
     def _vector_vector(self, node: BinaryExpr, lhs: VectorResult, rhs: VectorResult):
@@ -771,20 +678,10 @@ class Evaluator:
         m = node.matching
         card = m.card if m else VectorMatchCard.ONE_TO_ONE
         mode, keys = self._match_sig(node)
-        msig = sig_of(F.col("labels"), keys, mode)
+        msig = _alias(sig_subset(keys, keep=mode == "on"), "msig")
 
-        l = lhs.df.select(
-            "t",
-            msig.alias("msig"),
-            F.col("labels").alias("llabels"),
-            F.col("value").alias("lv"),
-        )
-        r = rhs.df.select(
-            "t",
-            msig.alias("msig"),
-            F.col("labels").alias("rlabels"),
-            F.col("value").alias("rv"),
-        )
+        l = project(lhs.df, "t", msig, "labels AS llabels", "value AS lv")
+        r = project(rhs.df, "t", msig, "labels AS rlabels", "value AS rv")
         # engine.go:2228-2246: the 'one' side must be unique per match group
         # (both sides for one-to-one). The aggregation on the join key is
         # the one the join's own exchange needs at shuffle-join scale.
@@ -798,71 +695,43 @@ class Evaluator:
             l = _assert_one_row_per(l, "msig", _MANY_TO_MANY)
         joined = l.join(r, ["t", "msig"], "inner")
 
-        lv, rv = F.col("lv"), F.col("rv")
         should_drop = op in ast.ARITH_OPS or (
             op in ast.COMPARE_OPS and node.return_bool
         )
-
-        # result labels — engine.go resultMetric (2324-2360)
+        # result labels — engine.go resultMetric (2324-2360): the many
+        # side's, minus __name__ when the operation drops it, restricted
+        # to the matching labels for one-to-one, plus group_x's includes
         if card == VectorMatchCard.ONE_TO_MANY:
-            base_labels = F.col("rlabels")  # many side
-            one_labels = F.col("llabels")
+            base_labels, one_labels = "rlabels", "llabels"
         else:
-            base_labels = F.col("llabels")
-            one_labels = F.col("rlabels")
-        out_labels = base_labels
-        if should_drop:
-            out_labels = F.map_filter(out_labels, lambda k, _: k != F.lit(NAME_LABEL))
-        if card == VectorMatchCard.ONE_TO_ONE:
-            if mode == "on":
-                keyset = F.array(*[F.lit(k) for k in keys])
-                out_labels = F.map_filter(
-                    out_labels, lambda k, _: F.array_contains(keyset, k)
-                )
-            elif keys:
-                dropset = F.array(*[F.lit(k) for k in keys])
-                out_labels = F.map_filter(
-                    out_labels, lambda k, _: ~F.array_contains(dropset, k)
-                )
+            base_labels, one_labels = "llabels", "rlabels"
+        out_labels: str | Column = base_labels
+        if card == VectorMatchCard.ONE_TO_ONE and (mode == "on" or keys):
+            out_labels = _matched_labels(base_labels, tuple(keys), mode == "on", should_drop)
+        elif should_drop:
+            out_labels = nameless_sql(base_labels)
         if m and m.include:
+            out_labels = _column(out_labels)
             for ln in m.include:
-                inc = one_labels.getItem(ln)
+                inc = F.col(one_labels).getItem(ln)
+                without = F.map_filter(out_labels, lambda k, _: k != F.lit(ln))
                 out_labels = F.when(
                     inc.isNotNull() & (inc != ""),
-                    F.map_concat(
-                        F.map_filter(out_labels, lambda k, _: k != F.lit(ln)),
-                        F.create_map(F.lit(ln), inc),
-                    ),
-                ).otherwise(
-                    F.map_filter(out_labels, lambda k, _: k != F.lit(ln))
-                )
+                    F.map_concat(without, F.create_map(F.lit(ln), inc)),
+                ).otherwise(without)
 
-        if op in ast.COMPARE_OPS:
-            keep = sf.ieee_compare(lv, rv, op)
-            if node.return_bool:
-                value = F.when(keep, F.lit(1.0)).otherwise(F.lit(0.0))
-                out = joined.select(
-                    "t",
-                    out_labels.alias("labels"),
-                    value.alias("value"),
-                )
-            else:
-                # vectorElemBinop returns the ORIGINAL lhs value even under
-                # group_right (engine.go:2270-2276 double swap)
-                out = joined.filter(keep).select(
-                    "t",
-                    out_labels.alias("labels"),
-                    F.col("lv").alias("value"),
-                )
+        if op in ast.COMPARE_OPS and not node.return_bool:
+            # vectorElemBinop returns the ORIGINAL lhs value even under
+            # group_right (engine.go:2270-2276 double swap)
+            joined = joined.filter(sf.ieee_compare("lv", "rv", op))
+            value = "lv"
         else:
-            value = sf.arith_op(lv, rv, op)
-            out = joined.select(
-                "t", out_labels.alias("labels"), value.alias("value")
-            )
-        out = out.withColumn("sig", sig(F.col("labels"))).select(
-            "t", "labels", "sig", "value"
-        )
-        return VectorResult(out)
+            value = self._binop_value(node, "lv", "rv")
+        if isinstance(out_labels, str):
+            labels = [f"{out_labels} AS labels", f"{sig_sql(out_labels)} AS sig"]
+        else:
+            labels = [out_labels.alias("labels"), sig(out_labels).alias("sig")]
+        return VectorResult(project(joined, "t", *labels, f"{value} AS value"))
 
     # ----------------------------------------------------------------- unary
     def eval_unary(self, node: UnaryExpr):
@@ -872,11 +741,9 @@ class Evaluator:
         if isinstance(inner, ScalarResult):
             if inner.is_const:
                 return ScalarResult(const=-inner.const)
-            return ScalarResult(df=inner.df.withColumn("value", -F.col("value")))
+            return ScalarResult(df=inner.df.selectExpr("t", "-value AS value"))
         if isinstance(inner, VectorResult):
-            return self._drop_name(
-                inner.df.withColumn("value", -F.col("value")), inner.unique
-            )
+            return self._drop_name(inner.df, inner.unique, "-value")
         raise PromQLEvalError("cannot negate a string")
 
     # ------------------------------------------------------------------ misc
@@ -901,32 +768,42 @@ class Evaluator:
         raise PromQLEvalError("expected a string literal")
 
     def _scalar_to_vector(self, s: ScalarResult, ctx: EvalContext) -> DataFrame:
-        empty = F.expr("cast(map() as map<string,string>)")
         if s.is_const:
-            base = Evaluator(ctx).steps_df().select(
-                "t", F.lit(float(s.const)).alias("value")
-            )
+            base, value = Evaluator(ctx).steps_df(), num(float(s.const))
         else:
-            base = s.df
-        return base.select(
+            base, value = s.df, "value"
+        return base.selectExpr(
             "t",
-            empty.alias("labels"),
-            sig(empty).alias("sig"),
-            F.col("value").alias("value"),
+            f"{EMPTY_LABELS} AS labels",
+            f"{sig_sql(EMPTY_LABELS)} AS sig",
+            f"{value} AS value",
         )
 
     def _drop_name(
-        self, df: DataFrame, unique: UniqueSeries | None = None
+        self,
+        df: DataFrame,
+        unique: UniqueSeries | None = None,
+        value: str = "value",
+        sample_ts: bool = True,
     ) -> VectorResult:
-        """Drop __name__ from series identity (function/operator output) and
-        assert no two series collapse onto the same labelset (e.g.
+        """`df` with `value` (SQL text) as its value, __name__ dropped from
+        series identity (function/operator output), asserting that no two
+        series collapse onto the same labelset (e.g.
         ceil({__name__=~'a|b'}), collision.test). A `unique` proof of the
         input makes both steps no-ops: its series carry no __name__, and
-        the proof carries over to the output."""
+        the proof carries over to the output. `sample_ts`: keep the input's
+        sample times, if it has them."""
+        extra = ["sample_ts"] if sample_ts and "sample_ts" in df.columns else []
         if unique is not None:
-            return VectorResult(df, unique=unique)
-        labels = F.map_filter(F.col("labels"), lambda k, _: k != F.lit(NAME_LABEL))
-        out = df.withColumn("labels", labels).withColumn("sig", sig(F.col("labels")))
+            out = df.selectExpr("t", "labels", "sig", f"{value} AS value", *extra)
+            return VectorResult(out, unique=unique)
+        out = df.selectExpr(
+            "t",
+            f"{nameless_sql('labels')} AS labels",
+            f"{NAMELESS_SIG} AS sig",
+            f"{value} AS value",
+            *extra,
+        )
         return VectorResult(_assert_one_row_per(out, "sig", _SAME_LABELSET))
 
 
@@ -939,11 +816,57 @@ _MANY_TO_MANY = (
 )
 
 
-def assert_rows(df: DataFrame, ok: Column, message: Column | str) -> DataFrame:
-    """Keep `df`'s rows, failing the query on the first row where `ok` is
-    false. The filter's output depends on the assertion, so Catalyst can
-    prune it from no action, whatever columns the action reads."""
-    return df.filter(F.assert_true(ok, message).isNull())
+def _column(expr: str | Column) -> Column:
+    return F.expr(expr) if isinstance(expr, str) else expr
+
+
+def _alias(expr: str | Column, name: str) -> str | Column:
+    return f"{expr} AS {name}" if isinstance(expr, str) else expr.alias(name)
+
+
+def _aggregate(
+    df: DataFrame, gsig: str | Column, aggs: list[str], value: str = "value"
+) -> DataFrame:
+    """groupBy(t, gsig) with `aggs`, as (t, labels, sig, value), labels
+    rebuilt from the group signature."""
+    grouped = aggregate(df, ["t", _column(gsig).alias("gsig")], aggs)
+    return grouped.selectExpr(
+        "t", "map_from_entries(gsig) AS labels", "gsig AS sig", f"{value} AS value"
+    )
+
+
+@memo_column
+def _matched_labels(
+    labels: str, keys: tuple[str, ...], on: bool, drop_name: bool
+) -> Column:
+    """The `labels` map restricted to the matching labels `keys` (`on`) or
+    to all others (`ignoring`), without __name__ when `drop_name`."""
+    names = F.array(*[F.lit(k) for k in keys])
+    return F.map_filter(
+        F.col(labels),
+        lambda k, _: (
+            (k != F.lit(NAME_LABEL) if drop_name else F.lit(True))
+            & (F.array_contains(names, k) if on else ~F.array_contains(names, k))
+        ),
+    )
+
+
+def _relabel(df: DataFrame, labels: Column) -> DataFrame:
+    """`df` with new `labels` and their `sig`, other columns in place."""
+    return df.select(
+        *(
+            labels.alias(c) if c == "labels" else sig(labels).alias(c) if c == "sig" else c
+            for c in df.columns
+        )
+    )
+
+
+def assert_rows(df: DataFrame, ok: str, message: str) -> DataFrame:
+    """Keep `df`'s rows, failing the query with `message` on the first row
+    where `ok` is false (both SQL text). The filter's output depends on the
+    assertion, so Catalyst can prune it from no action, whatever columns
+    the action reads."""
+    return df.filter(f"assert_true({ok}, {message}) IS NULL")
 
 
 def _assert_one_row_per(df: DataFrame, key: str, message: str) -> DataFrame:
@@ -960,12 +883,14 @@ def _assert_one_row_per(df: DataFrame, key: str, message: str) -> DataFrame:
     # (a map-typed first() buffer demotes it to SortAggregate)
     by_sig = key == "sig"
     others = [c for c in cols if c not in ("t", key) and not (by_sig and c == "labels")]
-    grouped = df.groupBy("t", key).agg(
-        F.count(F.lit(1)).alias("__n"), *[F.first(c).alias(c) for c in others]
+    grouped = aggregate(
+        df, ["t", key], ["count(1) AS __n", *[f"first({c}) AS {c}" for c in others]]
     )
-    if by_sig:
-        grouped = grouped.withColumn("labels", F.map_from_entries("sig"))
-    return assert_rows(grouped, F.col("__n") <= 1, message).select(*cols)
+    out = [
+        "map_from_entries(sig) AS labels" if by_sig and c == "labels" else c
+        for c in cols
+    ]
+    return assert_rows(grouped, "__n <= 1", sql_string(message)).selectExpr(*out)
 
 
 def _name_pinned(node: ast.Node) -> bool:
@@ -993,51 +918,44 @@ def _unique_per_match(side: VectorResult, mode: str, keys: list[str]) -> bool:
     return not keys or (u.keys is not None and u.keys.isdisjoint(keys))
 
 
-def _format_float(value: Column) -> Column:
-    """Go strconv.FormatFloat(v, 'f', -1, 64)-style rendering for
-    count_values label values: integral floats print without a decimal, and
-    NOTHING prints in scientific notation.
+def _format_float_sql() -> str:
+    """Go strconv.FormatFloat(v, 'f', -1, 64)-style rendering of `value`
+    for count_values label values, as SQL text: integral floats print
+    without a decimal, and NOTHING prints in scientific notation.
 
     Java's double→string (what a plain cast gives) switches to "d.fffE±x"
     outside [1e-3, 1e7); Go's 'f' format never does. Expand the scientific
     form to positional decimal with pure string ops — the digits are
     unchanged, so the shortest-round-trip property is preserved.
     """
-    as_long = value.try_cast("long")  # overflows (|v| > 2^63) → null
-    s = value.cast("string")
-    sign = F.when(s.startswith("-"), F.lit("-")).otherwise(F.lit(""))
-    body = F.regexp_replace(s, "^-", "")
-    mant = F.split_part(body, F.lit("E"), F.lit(1))
-    exp = F.split_part(body, F.lit("E"), F.lit(2)).cast("int")
-    ipart = F.split_part(mant, F.lit("."), F.lit(1))  # single digit (Java norm)
-    frac0 = F.split_part(mant, F.lit("."), F.lit(2))
-    frac = F.when(frac0 == F.lit("0"), F.lit("")).otherwise(frac0)
-    digits = F.concat(ipart, frac)
-    flen = F.length(frac)
-
-    def zeros(n: Column) -> Column:
-        return F.repeat(F.lit("0"), n)
-
+    s = "CAST(value AS STRING)"
+    as_long = "TRY_CAST(value AS BIGINT)"  # overflows (|v| > 2^63) → null
+    sign = f"CASE WHEN startswith({s}, '-') THEN '-' ELSE '' END"
+    body = f"regexp_replace({s}, '^-', '')"
+    mant = f"split_part({body}, 'E', 1)"
+    exp = f"CAST(split_part({body}, 'E', 2) AS INT)"
+    ipart = f"split_part({mant}, '.', 1)"  # single digit (Java norm)
+    frac0 = f"split_part({mant}, '.', 2)"
+    frac = f"CASE WHEN {frac0} = '0' THEN '' ELSE {frac0} END"
+    digits = f"concat({ipart}, {frac})"
+    flen = f"length({frac})"
     expanded = (
-        F.when(exp < 0, F.concat(F.lit("0."), zeros(-exp - F.lit(1)), digits))
-        .when(exp >= flen, F.concat(digits, zeros(exp - flen)))
-        .otherwise(
-            F.concat(
-                F.substr(digits, F.lit(1), exp + F.lit(1)),
-                F.lit("."),
-                F.substr(digits, exp + F.lit(2)),
-            )
-        )
+        f"CASE WHEN {exp} < 0 THEN concat('0.', repeat('0', -{exp} - 1), {digits}) "
+        f"WHEN {exp} >= {flen} THEN concat({digits}, repeat('0', {exp} - {flen})) "
+        f"ELSE concat(substr({digits}, 1, {exp} + 1), '.', substr({digits}, {exp} + 2)) END"
     )
     return (
-        F.when(F.isnan(value), F.lit("NaN"))
-        .when(value == F.lit(float("inf")), F.lit("+Inf"))
-        .when(value == F.lit(float("-inf")), F.lit("-Inf"))
-        .when(s == F.lit("-0.0"), F.lit("-0"))
-        .when(value.cast("double") == as_long.cast("double"), as_long.cast("string"))
-        .when(s.contains("E"), F.concat(sign, expanded))
-        .otherwise(s)
+        "CASE WHEN isnan(value) THEN 'NaN' "
+        f"WHEN value = {num(math.inf)} THEN '+Inf' "
+        f"WHEN value = {num(-math.inf)} THEN '-Inf' "
+        f"WHEN {s} = '-0.0' THEN '-0' "
+        f"WHEN CAST(value AS DOUBLE) = CAST({as_long} AS DOUBLE) THEN CAST({as_long} AS STRING) "
+        f"WHEN contains({s}, 'E') THEN concat({sign}, {expanded}) "
+        f"ELSE {s} END"
     )
+
+
+_FORMAT_FLOAT = _format_float_sql()
 
 
 def _py_simple_math(name: str, v: float) -> float:

@@ -12,17 +12,101 @@ histogram's buckets co-locate.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+import math
 
-from metric_store_release_spark.datamodel import NAME_LABEL, sig
+from pyspark.sql import DataFrame
+
+from metric_store_release_spark.datamodel import NAMELESS_SIG, aggregate, nameless_sql, num
 
 
-def _le_to_double(le: Column) -> Column:
+#: SQL text: the `le` label as a bucket bound
+_LE = (
+    "CASE WHEN labels['le'] IN ('+Inf', 'Inf', 'inf') THEN double('Infinity') "
+    "WHEN labels['le'] IN ('-Inf', '-inf') THEN double('-Infinity') "
+    "ELSE CAST(labels['le'] AS DOUBLE) END"
+)
+
+#: coalesce buckets sharing a numeric upper bound — le="0.2" / "2e-1" /
+#: "2.0e-1" are ONE bucket whose counts add (quantile.go:316-333)
+_COALESCED = """
+    aggregate(
+        bk,
+        cast(array() as array<struct<le:double,value:double>>),
+        (acc, x) -> if(
+            size(acc) > 0 and try_element_at(acc, -1).le = x.le,
+            concat(
+                slice(acc, 1, size(acc) - 1),
+                array(named_struct(
+                    'le', x.le,
+                    'value', try_element_at(acc, -1).value + x.value
+                ))
+            ),
+            concat(acc, array(x))
+        )
+    )
+"""
+
+#: monotonicity repair: running max of counts (quantile.go:369-379)
+_MONOTONIC = f"""
+    aggregate(
+        {_COALESCED},
+        cast(array() as array<struct<le:double,value:double>>),
+        (acc, x) -> concat(
+            acc,
+            array(named_struct(
+                'le', x.le,
+                'value', greatest(x.value,
+                                  coalesce(try_element_at(acc, -1).value, x.value))
+            ))
+        )
+    )
+"""
+
+
+def _bucket_index(q: float) -> str:
+    """SQL text: the 1-based index in the sorted bucket array `bk` of the
+    bucket quantile q falls in — the first among buckets[0..n-2] whose
+    count reaches q·observations; Go sort.Search returns n-1 when none
+    does (quantile.go:103)."""
+    rank = f"{num(q)} * try_element_at(bk, -1).value"
+    idxs = (
+        "filter(transform(bk, (x, i) -> struct(i + 1 as i, x.value as v)), "
+        f"s -> s.v >= {rank} AND s.i < size(bk))"
+    )
+    return f"coalesce(try_element_at({idxs}, 1).i, size(bk))"
+
+
+def _bucket_quantile(q: float) -> str:
+    """SQL text: quantile q of the sorted bucket array `bk`, whose bucket
+    `b` it falls in (quantile.go:74-124 bucketQuantile)."""
+    if math.isnan(q):
+        return num(math.nan)
+    if q < 0:
+        return num(-math.inf)
+    if q > 1:
+        return num(math.inf)
+    n = "size(bk)"
+    last = "try_element_at(bk, -1)"
+    observations = f"{last}.value"
+    rank = f"({num(q)} * {observations})"
+    bucket = "try_element_at(bk, CAST(b AS INT))"
+    prev_bucket = "try_element_at(bk, CAST(greatest(b - 1, 1) AS INT))"
+    bucket_start = f"CASE WHEN b > 1 THEN {prev_bucket}.le ELSE 0.0D END"
+    prev_count = f"CASE WHEN b > 1 THEN {prev_bucket}.value ELSE 0.0D END"
+    count = f"({bucket}.value - {prev_count})"
+    adj_rank = f"({rank} - {prev_count})"
+    interpolated = (
+        f"({bucket_start}) + ({bucket}.le - {bucket_start}) * ({adj_rank} / {count})"
+    )
+    second_highest = f"try_element_at(bk, CAST(({n} - 1) AS INT)).le"
+    nan = num(math.nan)
     return (
-        F.when(le.isin("+Inf", "Inf", "inf"), F.lit(float("inf")))
-        .when(le.isin("-Inf", "-inf"), F.lit(float("-inf")))
-        .otherwise(le.cast("double"))
+        f"CASE WHEN {last}.le != {num(math.inf)} THEN {nan} "
+        f"WHEN {n} < 2 THEN {nan} "
+        f"WHEN {observations} = 0 THEN {nan} "
+        f"WHEN b = {n} THEN {second_highest} "
+        f"WHEN b = 1 AND {bucket}.le <= 0 THEN {bucket}.le "
+        f"ELSE {interpolated} END"
     )
 
 
@@ -33,108 +117,38 @@ def histogram_quantile(vector_df: DataFrame, q: float) -> DataFrame:
     (functions.go:1098-1102 ignores unparsable le as of newer versions; we
     require a parsable le).
     """
-    df = vector_df.filter(F.col("labels").getItem("le").isNotNull())
-    le = _le_to_double(F.col("labels").getItem("le"))
     # group by labels minus `le` ONLY — the metric name stays in the
     # grouping signature (functions.go:1098 BytesWithoutLabels(le)), and is
     # dropped from the OUTPUT labels below; two same-labeled histograms
     # under different names then collide post-drop and trip the engine's
     # same-labelset check (histograms.test eval_fail, prometheus#9910)
-    group_labels = F.map_filter(F.col("labels"), lambda k, _: k != F.lit("le"))
-    df = (
-        df.withColumn("le", le)
-        .filter(~F.isnan("le"))
-        .withColumn("labels", group_labels)
-        .withColumn("sig", sig(F.col("labels")))
-    )
-    grouped = df.groupBy("t", "sig").agg(
-        F.any_value("labels").alias("labels"),
-        F.array_sort(F.collect_list(F.struct("le", "value"))).alias("bk"),
-    )
-
-    # coalesce buckets sharing a numeric upper bound — le="0.2" / "2e-1" /
-    # "2.0e-1" are ONE bucket whose counts add (quantile.go:316-333)
-    coalesced = F.expr(
-        """
-        aggregate(
-            bk,
-            cast(array() as array<struct<le:double,value:double>>),
-            (acc, x) -> if(
-                size(acc) > 0 and try_element_at(acc, -1).le = x.le,
-                concat(
-                    slice(acc, 1, size(acc) - 1),
-                    array(named_struct(
-                        'le', x.le,
-                        'value', try_element_at(acc, -1).value + x.value
-                    ))
-                ),
-                concat(acc, array(x))
-            )
-        )
-        """
-    )
-    grouped = grouped.withColumn("bk", coalesced)
-
-    # monotonicity repair: running max of counts (quantile.go:369-379)
-    mono = F.expr(
-        """
-        aggregate(
-            bk,
-            cast(array() as array<struct<le:double,value:double>>),
-            (acc, x) -> concat(
-                acc,
-                array(named_struct(
-                    'le', x.le,
-                    'value', greatest(x.value,
-                                      coalesce(try_element_at(acc, -1).value, x.value))
-                ))
-            )
-        )
-        """
-    )
-    grouped = grouped.withColumn("bk", mono)
-
-    n = F.size("bk")
-    last = F.try_element_at(F.col("bk"), F.lit(-1))
-    observations = last.getField("value")
-    rank = F.lit(q) * observations
-
-    # first index (1-based) among buckets[0..n-2] with count >= rank;
-    # Go sort.Search returns n-1 when none match (quantile.go:103)
-    idxs = F.filter(
-        F.expr("transform(bk, (x, i) -> struct(i + 1 as i, x.value as v))"),
-        lambda s: (s.getField("v") >= rank) & (s.getField("i") < n),
-    )
-    b = F.coalesce(F.try_element_at(idxs, F.lit(1)).getField("i"), n)
-
-    bucket = F.try_element_at(F.col("bk"), b.cast("int"))
-    prev_bucket = F.try_element_at(F.col("bk"), F.greatest(b - 1, F.lit(1)).cast("int"))
-    bucket_start = F.when(b > 1, prev_bucket.getField("le")).otherwise(F.lit(0.0))
-    prev_count = F.when(b > 1, prev_bucket.getField("value")).otherwise(F.lit(0.0))
-    count = bucket.getField("value") - prev_count
-    adj_rank = rank - prev_count
-    interpolated = bucket_start + (bucket.getField("le") - bucket_start) * (
-        adj_rank / count
-    )
-
-    second_highest = F.try_element_at(F.col("bk"), (n - 1).cast("int")).getField("le")
-    value = (
-        F.when(F.lit(q != q), F.lit(float("nan")))  # q is NaN
-        .when(F.lit(q < 0), F.lit(float("-inf")))
-        .when(F.lit(q > 1), F.lit(float("inf")))
-        .when(last.getField("le") != F.lit(float("inf")), F.lit(float("nan")))
-        .when(n < 2, F.lit(float("nan")))
-        .when(observations == 0, F.lit(float("nan")))
-        .when(b == n, second_highest)
-        .when((b == 1) & (bucket.getField("le") <= 0), bucket.getField("le"))
-        .otherwise(interpolated)
-    )
-    out_labels = F.map_filter(
-        F.col("labels"), lambda k, _: k != F.lit(NAME_LABEL)
-    )
-    return grouped.select(
+    bounded = vector_df.filter(
+        f"labels['le'] IS NOT NULL AND NOT isnan({_LE})"
+    ).selectExpr(
         "t",
-        out_labels.alias("labels"),
-        sig(out_labels).alias("sig"),
-        value.alias("value"),
+        "map_filter(labels, (k, v) -> k != 'le') AS labels",
+        "filter(sig, e -> e.key != 'le') AS sig",
+        "value",
+        f"{_LE} AS le",
+    )
+    grouped = aggregate(
+        bounded,
+        ["t", "sig"],
+        [
+            "any_value(labels) AS labels",
+            "array_sort(collect_list(struct(le, value))) AS bk",
+        ],
+    )
+    # the bucket index gets its own projection: the quantile refers to it
+    # a dozen times, and each copy inline would be analysed, and evaluated,
+    # anew
+    return (
+        grouped.selectExpr("t", "sig", "labels", f"{_MONOTONIC} AS bk")
+        .selectExpr("*", f"{_bucket_index(q)} AS b")
+        .selectExpr(
+            "t",
+            f"{nameless_sql('labels')} AS labels",
+            f"{NAMELESS_SIG} AS sig",
+            f"{_bucket_quantile(q)} AS value",
+        )
     )

@@ -5,48 +5,50 @@ Each evaluates as groupBy(t, sig) over the range frame — every step of the
 query in ONE hash aggregation, versus the reference's per-step re-slicing
 (matrixIterSlice). Order-dependent math (counter resets, changes) is hoisted
 to per-sample lag columns computed once per series BEFORE the window fan-out,
-so no per-window sorting is needed — see selectors._with_order_cols.
+so no per-window sorting is needed — see selectors.ORDER_COLS.
 """
 
 from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
-from metric_store_release_spark.datamodel import NAME_LABEL, sig
+from metric_store_release_spark.datamodel import NAMELESS_SIG, aggregate, num
 from metric_store_release_spark.engine.results import RangeFrame
 
 __all__ = ["RANGE_FUNCS", "NEEDS_ORDER_COLS", "apply_range_func"]
 
 
-def _strip_name(df: DataFrame) -> DataFrame:
-    labels = F.map_filter(F.col("labels"), lambda k, _: k != F.lit(NAME_LABEL))
-    return df.withColumn("labels", labels).withColumn("sig", sig(F.col("labels")))
+def _grouped(
+    frame: RangeFrame,
+    aggs: list[str],
+    value: str,
+    where: str | None = None,
+    keep_name: bool = False,
+) -> DataFrame:
+    """groupBy(t, sig) over the window rows with `aggs`, kept where
+    `where` holds, as (t, labels, sig, value): all SQL text.
 
-
-def _grouped(frame: RangeFrame, *aggs: Column, keep_name: bool = False) -> DataFrame:
-    # labels == map_from_entries(sig) on every frame (base_scan invariant):
-    # rebuilding post-agg instead of carrying a map-typed any_value keeps the
-    # aggregation buffers primitive, so pure-expression functions get
-    # HashAggregate instead of SortAggregate (collect_list-based ones use
-    # ObjectHashAggregate either way)
-    out = (
-        frame.df.groupBy("t", "sig")
-        .agg(*aggs)
-        .withColumn("labels", F.map_from_entries("sig"))
+    labels == map_from_entries(sig) on every frame (base_scan invariant):
+    rebuilding post-agg instead of carrying a map-typed any_value keeps the
+    aggregation buffers primitive, so pure-expression functions get
+    HashAggregate instead of SortAggregate (collect_list-based ones use
+    ObjectHashAggregate either way)"""
+    out = aggregate(frame.df, ["t", "sig"], aggs)
+    if where is not None:
+        out = out.filter(where)
+    sig = "sig" if keep_name else NAMELESS_SIG
+    return out.selectExpr(
+        "t", f"map_from_entries({sig}) AS labels", f"{sig} AS sig", f"{value} AS value"
     )
-    return out if keep_name else _strip_name(out)
 
 
-def _simple(agg_fn):
-    """agg_fn: () -> Column — lazily built (Columns need an active session)."""
+def _simple(agg: str):
+    """One aggregate expression (SQL text) is the whole function."""
 
     def handler(frame: RangeFrame, params: list[float]) -> DataFrame:
-        return _grouped(frame, agg_fn().alias("value")).select(
-            "t", "labels", "sig", "value"
-        )
+        return _grouped(frame, [f"{agg} AS value"], "value")
 
     return handler
 
@@ -56,33 +58,27 @@ def _simple(agg_fn):
 #: identically to the naive sum — just 600 binary orders of magnitude lower
 _AVG_DOWN, _AVG_UP = 2.0 ** -600, 2.0 ** 600
 
-
-def _avg_over_time() -> Column:
-    """funcAvgOverTime (functions.go:453-510) computes an incremental mean
-    precisely so that values near ±MaxFloat64 don't overflow the sum into
-    ±Inf. Same outcome, one aggregation pass: use the naive sum/count unless
-    the sum overflowed, then fall back to the exponent-shifted sum (exact
-    power-of-two rescale). A genuine ±Inf sample makes BOTH sums infinite —
-    result ±Inf/NaN exactly like the reference's fold."""
-    total = F.sum("value")
-    cnt = F.count(F.lit(1)).cast("double")
-    scaled = F.sum(F.col("value") * F.lit(_AVG_DOWN))
-    return F.when(
-        F.abs(total) == F.lit(float("inf")), scaled / cnt * F.lit(_AVG_UP)
-    ).otherwise(total / cnt)
+#: funcAvgOverTime (functions.go:453-510) computes an incremental mean
+#: precisely so that values near ±MaxFloat64 don't overflow the sum into
+#: ±Inf. Same outcome, one aggregation pass: use the naive sum/count unless
+#: the sum overflowed, then fall back to the exponent-shifted sum (exact
+#: power-of-two rescale). A genuine ±Inf sample makes BOTH sums infinite —
+#: result ±Inf/NaN exactly like the reference's fold.
+_AVG_OVER_TIME = (
+    f"CASE WHEN abs(sum(value)) = {num(math.inf)} "
+    f"THEN sum(value * {num(_AVG_DOWN)}) / CAST(count(1) AS DOUBLE) * {num(_AVG_UP)} "
+    "ELSE sum(value) / CAST(count(1) AS DOUBLE) END"
+)
 
 
-def _nan_aware_min() -> Column:
+def nan_aware_agg(fn: str) -> str:
     # functions.go:584-595 — NaN only if every sample is NaN. Spark orders
     # NaN above all doubles, so plain min already skips NaN; all-NaN groups
     # yield NaN naturally.
-    non_nan = F.min(F.when(~F.isnan("value"), F.col("value")))
-    return F.coalesce(non_nan, F.lit(float("nan")))
-
-
-def _nan_aware_max() -> Column:
-    non_nan = F.max(F.when(~F.isnan("value"), F.col("value")))
-    return F.coalesce(non_nan, F.lit(float("nan")))
+    return (
+        f"coalesce({fn}(CASE WHEN NOT isnan(value) THEN value END), "
+        f"{num(math.nan)})"
+    )
 
 
 def _extrapolated_rate(
@@ -96,60 +92,56 @@ def _extrapolated_rate(
     half an average interval), with counters additionally clamped at their
     extrapolated zero crossing.
     """
-    rng_s = frame.range_ms / 1000.0
     # scalar min_by/max_by per field, NOT one min_by over a struct: struct
     # aggregation buffers demote the whole group-by to SortAggregate, while
     # primitive buffers keep HashAggregate (ts is unique per series, so the
     # independent extremum picks all land on the same sample)
-    drop_col = F.col("drop") if is_counter else F.lit(0.0)
-    grouped = _grouped(
-        frame,
-        F.min("ts").alias("first_ts"),
-        F.min_by("value", "ts").alias("first_v"),
-        F.min_by(drop_col, "ts").alias("first_drop"),
-        F.max("ts").alias("last_ts"),
-        F.max_by("value", "ts").alias("last_v"),
-        F.count(F.lit(1)).alias("cnt"),
-        F.sum(drop_col).alias("dropsum"),
-    ).filter(F.col("cnt") >= 2)
-
-    first_t = F.col("first_ts") + F.lit(frame.offset_ms)
-    last_t = F.col("last_ts") + F.lit(frame.offset_ms)
+    drop = "drop" if is_counter else "0.0D"
+    aggs = [
+        "min(ts) AS first_ts",
+        "min_by(value, ts) AS first_v",
+        f"min_by({drop}, ts) AS first_drop",
+        "max(ts) AS last_ts",
+        "max_by(value, ts) AS last_v",
+        "count(1) AS cnt",
+        f"sum({drop}) AS dropsum",
+    ]
+    first_t = f"(first_ts + {num(frame.offset_ms)})"
+    last_t = f"(last_ts + {num(frame.offset_ms)})"
     # window geometry relative to the evaluation reference: the output step
     # t normally, or the pinned @ time (engine.go rangeStart/rangeEnd use
     # enh.Ts, which @ fixes; offset shifts sample service times instead)
-    eval_ref = F.lit(frame.at_ms) if frame.at_ms is not None else F.col("t")
-    range_start = eval_ref - F.lit(frame.range_ms)
-    range_end = eval_ref
+    range_end = "t" if frame.at_ms is None else num(frame.at_ms)
+    range_start = f"({range_end} - {num(frame.range_ms)})"
 
-    result = F.col("last_v") - F.col("first_v")
+    result = "(last_v - first_v)"
     if is_counter:
         # dropsum includes the first sample's adjustment whose prev sample
         # lies before the window — subtract it back out
-        result = result + (F.col("dropsum") - F.col("first_drop"))
+        result = f"({result} + (dropsum - first_drop))"
 
-    dur_to_start = (first_t - range_start).cast("double") / 1000.0
-    dur_to_end = (range_end - last_t).cast("double") / 1000.0
-    sampled = (last_t - first_t).cast("double") / 1000.0
-    avg_gap = sampled / (F.col("cnt") - 1).cast("double")
+    to_start = f"(CAST(({first_t} - {range_start}) AS DOUBLE) / 1000.0D)"
+    to_end = f"(CAST(({range_end} - {last_t}) AS DOUBLE) / 1000.0D)"
+    sampled = f"(CAST(({last_t} - {first_t}) AS DOUBLE) / 1000.0D)"
+    avg_gap = f"({sampled} / CAST((cnt - 1) AS DOUBLE))"
 
     if is_counter:
-        dur_to_zero = F.when(
-            (result > 0) & (F.col("first_v") >= 0),
-            sampled * (F.col("first_v") / result),
-        ).otherwise(F.lit(float("inf")))
-        dur_to_start = F.least(dur_to_start, dur_to_zero)
+        to_zero = (
+            f"CASE WHEN {result} > 0 AND first_v >= 0 "
+            f"THEN {sampled} * (first_v / {result}) ELSE {num(math.inf)} END"
+        )
+        to_start = f"least({to_start}, {to_zero})"
 
-    threshold = avg_gap * 1.1
+    threshold = f"({avg_gap} * 1.1D)"
     extrap = (
-        sampled
-        + F.when(dur_to_start < threshold, dur_to_start).otherwise(avg_gap / 2)
-        + F.when(dur_to_end < threshold, dur_to_end).otherwise(avg_gap / 2)
+        f"({sampled} "
+        f"+ CASE WHEN {to_start} < {threshold} THEN {to_start} ELSE {avg_gap} / 2 END "
+        f"+ CASE WHEN {to_end} < {threshold} THEN {to_end} ELSE {avg_gap} / 2 END)"
     )
-    factor = extrap / sampled
+    factor = f"({extrap} / {sampled})"
     if is_rate:
-        factor = factor / F.lit(rng_s)
-    return grouped.select("t", "labels", "sig", (result * factor).alias("value"))
+        factor = f"({factor} / {num(frame.range_ms / 1000.0)})"
+    return _grouped(frame, aggs, f"{result} * {factor}", where="cnt >= 2")
 
 
 def _instant_value(frame: RangeFrame, is_rate: bool) -> DataFrame:
@@ -161,72 +153,46 @@ def _instant_value(frame: RangeFrame, is_rate: bool) -> DataFrame:
     """
     # scalar max_bys (see _extrapolated_rate): primitive buffers keep the
     # HashAggregate; all picks resolve to the window's last sample
-    grouped = _grouped(
-        frame,
-        F.max("ts").alias("last_ts"),
-        F.max_by("value", "ts").alias("last_v"),
-        F.max_by("prev_ts", "ts").alias("last_prev_ts"),
-        F.max_by("prev_value", "ts").alias("last_prev_v"),
-    )
-    eval_ref = F.lit(frame.at_ms) if frame.at_ms is not None else F.col("t")
-    window_start = eval_ref - F.lit(frame.offset_ms) - F.lit(frame.range_ms)
+    aggs = [
+        "max(ts) AS last_ts",
+        "max_by(value, ts) AS last_v",
+        "max_by(prev_ts, ts) AS last_prev_ts",
+        "max_by(prev_value, ts) AS last_prev_v",
+    ]
+    eval_ref = "t" if frame.at_ms is None else num(frame.at_ms)
+    window_start = f"{eval_ref} - {num(frame.offset_ms)} - {num(frame.range_ms)}"
     ok = (
-        F.col("last_prev_ts").isNotNull()
-        & (F.col("last_prev_ts") >= window_start)
-        & (F.col("last_ts") != F.col("last_prev_ts"))
+        f"last_prev_ts IS NOT NULL AND last_prev_ts >= ({window_start}) "
+        "AND last_ts != last_prev_ts"
     )
-    diff = F.col("last_v") - F.col("last_prev_v")
+    value = "(last_v - last_prev_v)"
     if is_rate:
-        raw = F.when(
-            F.col("last_v") < F.col("last_prev_v"), F.col("last_v")
-        ).otherwise(diff)
-        value = raw / ((F.col("last_ts") - F.col("last_prev_ts")).cast("double") / 1000.0)
-    else:
-        value = diff
-    return grouped.filter(ok).select("t", "labels", "sig", value.alias("value"))
+        value = (
+            f"CASE WHEN last_v < last_prev_v THEN last_v ELSE {value} END "
+            "/ (CAST((last_ts - last_prev_ts) AS DOUBLE) / 1000.0D)"
+        )
+    return _grouped(frame, aggs, value, where=ok)
 
 
-def _deriv_cols() -> tuple[Column, Column]:
-    """Least-squares slope/intercept vs ts seconds — functions.go:891-950.
-
-    The reference centers x at the first sample's ts for numeric stability;
-    regr_slope is mathematically identical (covariance/variance form).
-    """
-    x = F.col("ts").cast("double") / 1000.0
-    y = F.col("value")
-    slope = F.expr("regr_slope(value, ts / 1000.0)")
-    avg_x = F.avg(x)
-    avg_y = F.avg(y)
-    return slope, avg_y - slope * avg_x  # intercept at x=0
+#: least-squares slope vs ts seconds — functions.go:891-950. The reference
+#: centers x at the first sample's ts for numeric stability; regr_slope is
+#: mathematically identical (covariance/variance form).
+_SLOPE = "regr_slope(value, ts / 1000.0)"
 
 
 def _deriv(frame: RangeFrame, params: list[float]) -> DataFrame:
-    slope, _ = _deriv_cols()
-    return (
-        _grouped(frame, slope.alias("value"), F.count(F.lit(1)).alias("cnt"))
-        .filter(F.col("cnt") >= 2)
-        .select("t", "labels", "sig", "value")
+    return _grouped(
+        frame, [f"{_SLOPE} AS value", "count(1) AS cnt"], "value", where="cnt >= 2"
     )
 
 
 def _predict_linear(frame: RangeFrame, params: list[float]) -> DataFrame:
-    horizon = params[0]
-    slope, intercept = _deriv_cols()
-    out = _grouped(
-        frame,
-        slope.alias("slope"),
-        intercept.alias("intercept"),
-        F.count(F.lit(1)).alias("cnt"),
-    ).filter(F.col("cnt") >= 2)
+    intercept = f"avg(value) - {_SLOPE} * avg(CAST(ts AS DOUBLE) / 1000.0D)"
+    aggs = [f"{_SLOPE} AS slope", f"{intercept} AS intercept", "count(1) AS cnt"]
     # funcPredictLinear: linearRegression(samples, enh.Ts) — the intercept
     # sits at the raw eval time t, regardless of offset/@ on the selector
-    pred_x = F.col("t").cast("double") / 1000.0 + F.lit(horizon)
-    return out.select(
-        "t",
-        "labels",
-        "sig",
-        (F.col("intercept") + F.col("slope") * pred_x).alias("value"),
-    )
+    pred_x = f"(CAST(t AS DOUBLE) / 1000.0D + {num(params[0])})"
+    return _grouped(frame, aggs, f"intercept + slope * {pred_x}", where="cnt >= 2")
 
 
 def _changes(frame: RangeFrame, params: list[float]) -> DataFrame:
@@ -242,39 +208,30 @@ def _resets(frame: RangeFrame, params: list[float]) -> DataFrame:
 
 
 def _sum_minus_first(col: str, frame: RangeFrame) -> DataFrame:
-    grouped = _grouped(
-        frame,
-        F.sum(col).alias("total"),
-        F.min_by(F.col(col), "ts").alias("first_contrib"),
-    )
-    return grouped.select(
-        "t",
-        "labels",
-        "sig",
-        (F.col("total") - F.col("first_contrib")).cast("double").alias("value"),
-    )
+    aggs = [f"sum({col}) AS total", f"min_by({col}, ts) AS first_contrib"]
+    return _grouped(frame, aggs, "CAST((total - first_contrib) AS DOUBLE)")
 
 
 def _quantile_over_time(frame: RangeFrame, params: list[float]) -> DataFrame:
     q = params[0]
     if math.isnan(q):
-        value = F.lit(float("nan"))
+        value = num(math.nan)
     elif q < 0:
-        value = F.lit(float("-inf"))
+        value = num(-math.inf)
     elif q > 1:
-        value = F.lit(float("inf"))
+        value = num(math.inf)
     else:
         # promql/quantile.go:387-402 — rank = q·(n−1), linear interpolation:
         # exactly SQL percentile()'s continuous interpolation
-        value = F.expr(f"percentile(value, {q!r})")
-    return _grouped(frame, value.alias("value")).select("t", "labels", "sig", "value")
+        value = f"percentile(value, {num(q)})"
+    return _grouped(frame, [f"{value} AS value"], "value")
 
 
 def _holt_winters(frame: RangeFrame, params: list[float]) -> DataFrame:
     """functions.go:302-348 double exponential smoothing.
 
     Genuinely sequential, but the recurrence folds cleanly with
-    ``F.aggregate`` over the sorted per-window value array — an interpreted
+    ``aggregate`` over the sorted per-window value array — an interpreted
     JVM higher-order function, no Python serialization. Windows are bounded
     (samples-per-window), so the interpreted fold is cheap.
 
@@ -284,48 +241,30 @@ def _holt_winters(frame: RangeFrame, params: list[float]) -> DataFrame:
     which is exactly the Go loop with its i==1 no-trend-update special case
     (b is seeded from the first difference).
     """
-    sf_, tf_ = params
-    grouped = _grouped(
+    sf, tf = (num(float(p)) for p in params)
+    vals = "transform(pts, p -> p.value)"
+    init = f"named_struct('s0', 0.0D, 's1', element_at({vals}, 1), 'b', 0.0D, 'i', 1)"
+    nb = (
+        "CASE WHEN acc.i = 1 THEN v - acc.s1 "
+        f"ELSE {tf} * (acc.s1 - acc.s0) + (1.0D - {tf}) * acc.b END"
+    )
+    step = (
+        f"(acc, v) -> named_struct('s0', acc.s1, "
+        f"'s1', {sf} * v + (1.0D - {sf}) * (acc.s1 + {nb}), 'b', {nb}, 'i', acc.i + 1)"
+    )
+    value = f"aggregate(slice({vals}, 2, size({vals}) - 1), {init}, {step}, acc -> acc.s1)"
+    return _grouped(
         frame,
-        F.array_sort(F.collect_list(F.struct("ts", "value"))).alias("pts"),
-    ).filter(F.size("pts") >= 2)
-
-    sf_c, tf_c = F.lit(float(sf_)), F.lit(float(tf_))
-    vals = F.transform(F.col("pts"), lambda p: p.getField("value"))
-    init = F.struct(
-        F.lit(0.0).alias("s0"),
-        F.element_at(vals, 1).alias("s1"),
-        F.lit(0.0).alias("b"),
-        F.lit(1).alias("i"),
+        ["array_sort(collect_list(struct(ts, value))) AS pts"],
+        value,
+        where="size(pts) >= 2",
     )
 
-    def step(acc: Column, v: Column) -> Column:
-        nb = F.when(acc.getField("i") == 1, v - acc.getField("s1")).otherwise(
-            tf_c * (acc.getField("s1") - acc.getField("s0"))
-            + (F.lit(1.0) - tf_c) * acc.getField("b")
-        )
-        s1 = sf_c * v + (F.lit(1.0) - sf_c) * (acc.getField("s1") + nb)
-        return F.struct(
-            acc.getField("s1").alias("s0"),
-            s1.alias("s1"),
-            nb.alias("b"),
-            (acc.getField("i") + F.lit(1)).alias("i"),
-        )
 
-    value = F.aggregate(
-        F.slice(vals, 2, F.size(vals) - 1),
-        init,
-        step,
-        lambda acc: acc.getField("s1"),
-    )
-    return grouped.select("t", "labels", "sig", value.alias("value"))
-
-
-def _ts_seconds(frame: RangeFrame, params: list[float]) -> DataFrame:
+def _last_over_time(frame: RangeFrame, params: list[float]) -> DataFrame:
     # last_over_time keeps the metric name (it returns the sample itself);
     # scalar max_by keeps the aggregation hash-based
-    grouped = _grouped(frame, F.max_by("value", "ts").alias("value"), keep_name=True)
-    return grouped.select("t", "labels", "sig", "value")
+    return _grouped(frame, ["max_by(value, ts) AS value"], "value", keep_name=True)
 
 
 RANGE_FUNCS = {
@@ -334,15 +273,15 @@ RANGE_FUNCS = {
     "delta": lambda f, p: _extrapolated_rate(f, False, False),
     "irate": lambda f, p: _instant_value(f, True),
     "idelta": lambda f, p: _instant_value(f, False),
-    "sum_over_time": _simple(lambda: F.sum("value")),
-    "avg_over_time": _simple(_avg_over_time),
-    "min_over_time": _simple(_nan_aware_min),
-    "max_over_time": _simple(_nan_aware_max),
-    "count_over_time": _simple(lambda: F.count(F.lit(1)).cast("double")),
-    "last_over_time": _ts_seconds,
-    "present_over_time": _simple(lambda: F.lit(1.0)),
-    "stddev_over_time": _simple(lambda: F.coalesce(F.stddev_pop("value"), F.lit(0.0))),
-    "stdvar_over_time": _simple(lambda: F.coalesce(F.var_pop("value"), F.lit(0.0))),
+    "sum_over_time": _simple("sum(value)"),
+    "avg_over_time": _simple(_AVG_OVER_TIME),
+    "min_over_time": _simple(nan_aware_agg("min")),
+    "max_over_time": _simple(nan_aware_agg("max")),
+    "count_over_time": _simple("CAST(count(1) AS DOUBLE)"),
+    "last_over_time": _last_over_time,
+    "present_over_time": _simple("1.0D"),
+    "stddev_over_time": _simple("coalesce(stddev_pop(value), 0.0D)"),
+    "stdvar_over_time": _simple("coalesce(var_pop(value), 0.0D)"),
     "quantile_over_time": _quantile_over_time,
     "deriv": _deriv,
     "predict_linear": _predict_linear,

@@ -13,7 +13,7 @@ PromQL's four value types (vendor promql/value.go) map to:
                       sample_ts long   original sample timestamp (selectors
                                        only; used by timestamp())
   Range vector   → RangeFrame (internal to function eval): DataFrame
-                      t, sig, labels, ts, value (one row per sample per window)
+                      t, ts, value, sig (one row per sample per window)
 
 The step grid is a *column*, not a driver loop: all steps of a range query
 evaluate in one Spark job (the reference iterates steps in
@@ -71,7 +71,7 @@ class VectorResult:
 class RangeFrame:
     """Samples grouped into per-step windows, plus window geometry."""
 
-    df: DataFrame  # t, sig, labels, ts, value [, drop, reset, change]
+    df: DataFrame  # t, ts, value, sig [, prev_value, prev_ts, drop, change, reset]
     range_ms: int
     offset_ms: int
     at_ms: int | None = None  # @-pinned evaluation time (window geometry)

@@ -1,4 +1,4 @@
-"""Instant-vector (element-wise) functions → pyspark.sql.functions.
+"""Instant-vector (element-wise) functions → Spark SQL expressions.
 
 Semantics source: vendor/.../promql/functions.go:349-878,1215-1355 and the
 function registry at functions.go:1414-1498. All of these stay inside
@@ -12,99 +12,100 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+from metric_store_release_spark.datamodel import num
 
-def _go_log(fn):
+_NAN, _INF, _NEG_INF = num(math.nan), num(math.inf), num(-math.inf)
+
+
+def _go_log(fn: str):
     """Go math.Log/Log2/Log10: log(0) = -Inf, log(x<0) = NaN. Spark's SQL
     log family returns NULL for non-positive input — map the NULLs back to
     the IEEE values PromQL expects (functions.go funcLn/funcLog2/funcLog10
     delegate to Go's math package)."""
 
-    def wrapped(value: Column) -> Column:
+    def wrapped(value: str) -> str:
         return (
-            F.when(F.isnan(value) | (value < 0), F.lit(float("nan")))
-            .when(value == 0.0, F.lit(float("-inf")))
-            .otherwise(fn(value))
+            f"CASE WHEN isnan({value}) OR {value} < 0 THEN {_NAN} "
+            f"WHEN {value} = 0.0D THEN {_NEG_INF} ELSE {fn}({value}) END"
         )
 
     return wrapped
 
 
-# value-in, value-out; NaN/Inf propagate exactly as in Go's math package
+def _sql_fn(fn: str):
+    return lambda value: f"{fn}({value})"
+
+
+# value-in, value-out SQL text; NaN/Inf propagate exactly as in Go's math
+# package
 SIMPLE_MATH = {
-    "abs": F.abs,
-    "ceil": F.ceil,  # returns double for double input
-    "floor": F.floor,
-    "exp": F.exp,
-    "sqrt": F.sqrt,
-    "ln": _go_log(F.log),
-    "log2": _go_log(F.log2),
-    "log10": _go_log(F.log10),
-    "sgn": F.signum,
-    "sin": F.sin,
-    "cos": F.cos,
-    "tan": F.tan,
-    "asin": F.asin,
-    "acos": F.acos,
-    "atan": F.atan,
-    "sinh": F.sinh,
-    "cosh": F.cosh,
-    "tanh": F.tanh,
-    "asinh": F.asinh,
-    "acosh": F.acosh,
-    "atanh": F.atanh,
-    "deg": F.degrees,
-    "rad": F.radians,
+    "abs": _sql_fn("abs"),
+    # ceil/floor return BIGINT for a double: back to double
+    "ceil": lambda value: f"CAST(ceil({value}) AS DOUBLE)",
+    "floor": lambda value: f"CAST(floor({value}) AS DOUBLE)",
+    "exp": _sql_fn("exp"),
+    "sqrt": _sql_fn("sqrt"),
+    "ln": _go_log("ln"),
+    "log2": _go_log("log2"),
+    "log10": _go_log("log10"),
+    "sgn": _sql_fn("signum"),
+    "sin": _sql_fn("sin"),
+    "cos": _sql_fn("cos"),
+    "tan": _sql_fn("tan"),
+    "asin": _sql_fn("asin"),
+    "acos": _sql_fn("acos"),
+    "atan": _sql_fn("atan"),
+    "sinh": _sql_fn("sinh"),
+    "cosh": _sql_fn("cosh"),
+    "tanh": _sql_fn("tanh"),
+    "asinh": _sql_fn("asinh"),
+    "acosh": _sql_fn("acosh"),
+    "atanh": _sql_fn("atanh"),
+    "deg": _sql_fn("degrees"),
+    "rad": _sql_fn("radians"),
 }
 
 
-def apply_simple_math(name: str, value: Column) -> Column:
-    out = SIMPLE_MATH[name](value)
-    if name in ("ceil", "floor"):
-        out = out.cast("double")
-    return out
+def apply_simple_math(name: str, value: str) -> str:
+    return SIMPLE_MATH[name](value)
 
 
-def promql_round(value: Column, to_nearest: float) -> Column:
+def promql_round(value: str, to_nearest: float) -> str:
     """functions.go:410-430 — round half away from zero? No: Prometheus
     rounds *up* on ties (floor(v/n + 0.5) · n)."""
-    inv = 1.0 / to_nearest
-    return F.floor(value * F.lit(inv) + F.lit(0.5)).cast("double") / F.lit(inv)
+    inv = num(1.0 / to_nearest)
+    return f"CAST(floor({value} * {inv} + 0.5D) AS DOUBLE) / {inv}"
 
 
-def promql_clamp(value: Column, mn: Column, mx: Column) -> Column:
+def promql_clamp(value: str, mn: float, mx: float) -> str:
     """functions.go:367-382 — math.Max(min, math.Min(max, v)): Go's
     Max/Min propagate NaN from EITHER argument, so a NaN value OR a NaN
     bound yields NaN (clamp(v, 0, NaN) is all-NaN, functions.test). The
     max < min → empty-vector case is the caller's (it drops rows).
     least/greatest must not swallow NaN inputs, so use explicit whens."""
-    any_nan = F.isnan(value) | F.isnan(mn) | F.isnan(mx)
-    clamped = F.when(value > mx, mx).when(value < mn, mn).otherwise(value)
-    return F.when(any_nan, F.lit(float("nan"))).otherwise(clamped)
+    lo, hi = num(mn), num(mx)
+    return (
+        f"CASE WHEN isnan({value}) OR isnan({lo}) OR isnan({hi}) THEN {_NAN} "
+        f"ELSE CASE WHEN {value} > {hi} THEN {hi} WHEN {value} < {lo} THEN {lo} "
+        f"ELSE {value} END END"
+    )
 
 
-def date_part(name: str, value: Column) -> Column:
+def date_part(name: str, value: str) -> str:
     """functions.go:1358-1413 — value is epoch seconds; parts computed in
     UTC (session timezone is pinned to UTC by session.get_spark)."""
-    ts = F.timestamp_seconds(value)
-    if name == "minute":
-        return F.minute(ts).cast("double")
-    if name == "hour":
-        return F.hour(ts).cast("double")
-    if name == "day_of_week":
-        return (F.dayofweek(ts) - 1).cast("double")  # Prometheus: Sunday = 0
-    if name == "day_of_month":
-        return F.dayofmonth(ts).cast("double")
-    if name == "day_of_year":
-        return F.dayofyear(ts).cast("double")
-    if name == "days_in_month":
-        return F.dayofmonth(F.last_day(ts)).cast("double")
-    if name == "month":
-        return F.month(ts).cast("double")
-    if name == "year":
-        return F.year(ts).cast("double")
-    raise KeyError(name)
+    ts = f"timestamp_seconds({value})"
+    part = {
+        "minute": f"minute({ts})",
+        "hour": f"hour({ts})",
+        "day_of_week": f"(dayofweek({ts}) - 1)",  # Prometheus: Sunday = 0
+        "day_of_month": f"dayofmonth({ts})",
+        "day_of_year": f"dayofyear({ts})",
+        "days_in_month": f"dayofmonth(last_day({ts}))",
+        "month": f"month({ts})",
+        "year": f"year({ts})",
+    }[name]
+    return f"CAST({part} AS DOUBLE)"
 
 
 DATE_FUNCS = {
@@ -119,55 +120,44 @@ DATE_FUNCS = {
 }
 
 
-def ieee_compare(lhs: Column, rhs: Column, op: str) -> Column:
-    """IEEE-754 comparison semantics (Go float64 ==, <, …).
+def ieee_compare(lhs: str, rhs: str, op: str) -> str:
+    """IEEE-754 comparison semantics (Go float64 ==, <, …), as SQL text.
 
     Spark SQL deviates from IEEE: NaN = NaN is TRUE and NaN sorts above all
     doubles. PromQL needs Go semantics: every comparison with NaN is false
     except '!=' which is true (vendor promql/engine.go:2456-2521 uses plain
     Go operators).
     """
-    either_nan = F.isnan(lhs) | F.isnan(rhs)
-    if op == "==":
-        return F.when(either_nan, F.lit(False)).otherwise(lhs == rhs)
-    if op == "!=":
-        return F.when(either_nan, F.lit(True)).otherwise(lhs != rhs)
-    plain = {
-        ">": lhs > rhs,
-        "<": lhs < rhs,
-        ">=": lhs >= rhs,
-        "<=": lhs <= rhs,
-    }[op]
-    return F.when(either_nan, F.lit(False)).otherwise(plain)
+    sql_op = "=" if op == "==" else op
+    on_nan = "true" if op == "!=" else "false"
+    return (
+        f"CASE WHEN isnan({lhs}) OR isnan({rhs}) THEN {on_nan} "
+        f"ELSE {lhs} {sql_op} {rhs} END"
+    )
 
 
-def arith_op(lhs: Column, rhs: Column, op: str) -> Column:
-    """PromQL arithmetic — Go float64 ops (engine.go:2456-2482)."""
-    if op == "+":
-        return lhs + rhs
-    if op == "-":
-        return lhs - rhs
-    if op == "*":
-        return lhs * rhs
+def arith_op(lhs: str, rhs: str, op: str) -> str:
+    """PromQL arithmetic — Go float64 ops (engine.go:2456-2482), as SQL
+    text."""
+    if op in ("+", "-", "*"):
+        return f"{lhs} {op} {rhs}"
     if op == "/":
         # Go: x/0 = ±Inf, 0/0 = NaN. Spark double division by zero → NULL,
         # so emulate IEEE explicitly. The divisor's zero may be NEGATIVE
         # (-0.0): Spark's `rhs == 0.0` is true for both zeros, so recover the
         # sign via the string cast ("-0.0" vs "0.0") — x / -0 must be -Inf
         # for positive x per IEEE-754 / Go.
-        neg_zero = rhs.cast("string").startswith("-")
-        inf = F.when(
-            (lhs > 0) != neg_zero, F.lit(float("inf"))
-        ).otherwise(F.lit(float("-inf")))
-        return F.when(
-            rhs == 0.0,
-            F.when(F.isnan(lhs) | (lhs == 0.0), F.lit(float("nan"))).otherwise(inf),
-        ).otherwise(lhs / rhs)
+        neg_zero = f"startswith(CAST({rhs} AS STRING), '-')"
+        inf = f"CASE WHEN ({lhs} > 0) != {neg_zero} THEN {_INF} ELSE {_NEG_INF} END"
+        return (
+            f"CASE WHEN {rhs} = 0.0D THEN CASE WHEN isnan({lhs}) OR {lhs} = 0.0D "
+            f"THEN {_NAN} ELSE {inf} END ELSE {lhs} / {rhs} END"
+        )
     if op == "%":
         # Go math.Mod — result keeps the dividend's sign; x%0 = NaN
-        return F.when(rhs == 0.0, F.lit(float("nan"))).otherwise(lhs % rhs)
+        return f"CASE WHEN {rhs} = 0.0D THEN {_NAN} ELSE {lhs} % {rhs} END"
     if op == "^":
-        return F.pow(lhs, rhs)
+        return f"power({lhs}, {rhs})"
     if op == "atan2":
-        return F.atan2(lhs, rhs)
+        return f"atan2({lhs}, {rhs})"
     raise KeyError(op)

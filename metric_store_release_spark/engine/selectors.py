@@ -26,7 +26,13 @@ import os
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from metric_store_release_spark.datamodel import NAME_LABEL, sig
+from metric_store_release_spark.datamodel import (
+    NAME_LABEL,
+    aggregate,
+    memo_column,
+    num,
+    sig_sql,
+)
 from metric_store_release_spark.promql.ast import LabelMatcher, MatchOp, VectorSelector
 
 #: Engine-wide CONTRACT: the samples frame holds at most one row per
@@ -40,7 +46,8 @@ from metric_store_release_spark.promql.ast import LabelMatcher, MatchOp, VectorS
 DEBUG_ASSERT_UNIQUE_TS = os.environ.get("MSRS_ASSERT_UNIQUE_TS", "") == "1"
 
 
-def matcher_condition(m: LabelMatcher, promoted: set[str] = frozenset()) -> Column:
+@memo_column
+def matcher_condition(m: LabelMatcher, promoted: frozenset[str] = frozenset()) -> Column:
     """One label matcher → boolean Column over the samples schema.
 
     Absent labels match as "" (PromQL semantics); regexes are fully anchored
@@ -69,39 +76,57 @@ def matcher_condition(m: LabelMatcher, promoted: set[str] = frozenset()) -> Colu
     return ~target.rlike(anchored)
 
 
+_DAY_MS = 86_400_000
+
+#: SQL text: the stored label map with the metric name folded in as __name__
+LABELED = (
+    f"map_concat(map_filter(labels, (k, v) -> k != '{NAME_LABEL}'), "
+    f"map('{NAME_LABEL}', name))"
+)
+
+
+@memo_column
+def _name_is(name: str) -> Column:
+    return F.col("name") == F.lit(name)
+
+
+def scan_condition(
+    samples: DataFrame, selector: VectorSelector, min_ts: int, max_ts: int
+) -> Column:
+    """Matcher + time-bound predicate over the samples columns."""
+    cols = samples.columns
+    promoted = frozenset(cols) - {"ts", "name", "value", "labels", "stale", "date"}
+    bounds = f"ts >= {num(min_ts)} AND ts <= {num(max_ts)}"
+    if "date" in cols:
+        # date-partitioned store (24 h shard analog): derive the partition
+        # predicate from the time bounds so Catalyst prunes whole shards
+        # (influx_adapter.go:372-389 forTimestampRange equivalent); the
+        # bounds are the UTC days of min_ts and max_ts
+        lo, hi = (f"date_from_unix_date({num(ms // _DAY_MS)})" for ms in (min_ts, max_ts))
+        bounds = f"{bounds} AND date BETWEEN {lo} AND {hi}"
+    cond = F.expr(bounds)
+    if selector.name is not None:
+        cond = cond & _name_is(selector.name)
+    for m in selector.matchers:
+        cond = cond & matcher_condition(m, promoted)
+    return cond
+
+
 def base_scan(
     samples: DataFrame,
     selector: VectorSelector,
     min_ts: int,
     max_ts: int,
 ) -> DataFrame:
-    """Matcher + time-bound filtered scan with __name__ folded into labels."""
-    df = samples
-    if "stale" not in df.columns:
-        df = df.withColumn("stale", F.lit(False))
-    promoted = set(df.columns) - {"ts", "name", "value", "labels", "stale", "date"}
-    cond = (F.col("ts") >= F.lit(min_ts)) & (F.col("ts") <= F.lit(max_ts))
-    if "date" in df.columns:
-        # date-partitioned store (24 h shard analog): derive the partition
-        # predicate from the time bounds so Catalyst prunes whole shards
-        # (influx_adapter.go:372-389 forTimestampRange equivalent)
-        import datetime as _dt
-
-        lo = _dt.datetime.utcfromtimestamp(min_ts / 1000).date()
-        hi = _dt.datetime.utcfromtimestamp(max_ts / 1000).date()
-        cond = cond & F.col("date").between(F.lit(str(lo)), F.lit(str(hi)))
-    if selector.name is not None:
-        cond = cond & (F.col("name") == F.lit(selector.name))
-    for m in selector.matchers:
-        cond = cond & matcher_condition(m, promoted)
-    df = df.filter(cond)
-    labeled = F.map_concat(
-        F.map_filter(F.col("labels"), lambda k, _: k != F.lit(NAME_LABEL)),
-        F.create_map(F.lit(NAME_LABEL), F.col("name")),
-    )
-    out = df.withColumn("labels", labeled).withColumn("sig", sig(F.col("labels")))
+    """Matcher + time-bound filtered scan, in the samples' own columns."""
+    out = samples.filter(scan_condition(samples, selector, min_ts, max_ts))
     if DEBUG_ASSERT_UNIQUE_TS:
-        dup = out.groupBy("sig", "ts").count().filter(F.col("count") > 1)
+        dup = (
+            out.selectExpr(f"{sig_sql(LABELED)} AS sig", "ts")
+            .groupBy("sig", "ts")
+            .count()
+            .filter("count > 1")
+        )
         if not dup.isEmpty():
             raise AssertionError(
                 "duplicate (series, ts) samples reached the engine — dedup "
@@ -111,35 +136,40 @@ def base_scan(
     return out
 
 
-def _explode_to_steps(
-    df: DataFrame,
-    start_ms: int,
-    end_ms: int,
-    step_ms: int,
-    lo_expr: Column,
-    hi_expr: Column,
-) -> DataFrame:
-    """Map-side fan-out: each sample row → one row per grid step it serves.
+def _stale(samples: DataFrame) -> str:
+    """SQL text of the staleness marker (stores without one never mark)."""
+    return "stale" if "stale" in samples.columns else "false AS stale"
 
-    Serves steps t in [lo, hi] ∩ grid. Double arithmetic is exact here
-    (|ts| < 2^53). An empty range produces no rows (sequence guard).
-    """
-    k0 = F.greatest(
-        F.lit(0), F.ceil((lo_expr - F.lit(start_ms)) / F.lit(step_ms)).cast("long")
-    )
+
+def step_span(
+    start_ms: int, end_ms: int, step_ms: int, lo: str, hi: str
+) -> tuple[str, str]:
+    """SQL text of the first and last grid-step indexes a sample serves:
+    steps t in [lo, hi] ∩ grid. Double arithmetic is exact here
+    (|ts| < 2^53)."""
     n_steps = (end_ms - start_ms) // step_ms
-    k1 = F.least(
-        F.lit(n_steps),
-        F.floor((hi_expr - F.lit(start_ms)) / F.lit(step_ms)).cast("long"),
+    k0 = (
+        f"greatest(0L, CAST(ceil(({lo} - {num(start_ms)}) / {num(step_ms)}) "
+        "AS BIGINT))"
     )
-    return (
-        df.withColumn("__k0", k0)
-        .withColumn("__k1", k1)
-        .filter(F.col("__k0") <= F.col("__k1"))
-        .withColumn("__k", F.explode(F.sequence(F.col("__k0"), F.col("__k1"))))
-        .withColumn("t", (F.lit(start_ms) + F.col("__k") * F.lit(step_ms)).cast("long"))
-        .drop("__k0", "__k1", "__k")
+    k1 = (
+        f"least({num(n_steps)}, CAST(floor(({hi} - {num(start_ms)}) / "
+        f"{num(step_ms)}) AS BIGINT))"
     )
+    return k0, k1
+
+
+def _steps(start_ms: int, step_ms: int, k0: str, k1: str) -> str:
+    """SQL text: one row per grid step t from step index k0 to k1 (callers
+    keep k0 <= k1: a descending sequence would not be empty)."""
+    first = f"{num(start_ms)} + {k0} * {num(step_ms)}"
+    last = f"{num(start_ms)} + {k1} * {num(step_ms)}"
+    return f"explode(sequence({first}, {last}, {num(step_ms)})) AS t"
+
+
+def _whole_grid(start_ms: int, end_ms: int, step_ms: int) -> str:
+    """SQL text: every row onto every grid step (@-pinned evaluation)."""
+    return _steps(start_ms, step_ms, "0L", num((end_ms - start_ms) // step_ms))
 
 
 def instant_vector(
@@ -159,82 +189,47 @@ def instant_vector(
     off = selector.offset_ms
     if selector.at_ms is not None:
         # @ pins evaluation: evaluate once at at_ms, replicate across steps.
-        pinned = _instant_at(samples, selector, selector.at_ms - off, lookback_ms)
-        return _replicate_over_grid(pinned, start_ms, end_ms, step_ms).select(
-            "t", "labels", "sig", "value", "sample_ts"
+        ref_ms = selector.at_ms - off
+        cond = scan_condition(samples, selector, ref_ms - lookback_ms, ref_ms)
+        points = samples.filter(cond).selectExpr(
+            f"{sig_sql(LABELED)} AS sig", "value", _stale(samples), "ts"
         )
-    min_ts = start_ms - off - lookback_ms
-    max_ts = end_ms - off
-    base = base_scan(samples, selector, min_ts, max_ts)
+        return _pick_latest(points, ["sig"], [_whole_grid(start_ms, end_ms, step_ms)])
     # valid iff ts >= t-off-lookback (NON-strict, engine.go:1906) — sample
     # serves eval times t in [ts+off, ts+off+lookback]
-    exploded = _explode_to_steps(
-        base,
-        start_ms,
-        end_ms,
-        step_ms,
-        F.col("ts") + F.lit(off),
-        F.col("ts") + F.lit(off + lookback_ms),
+    k0, k1 = step_span(
+        start_ms, end_ms, step_ms, f"ts + {num(off)}", f"ts + {num(off + lookback_ms)}"
     )
-    # Aggregate PRIMITIVES only (max_by's buffer carries the value expr): a
-    # struct-of-map buffer forces SortAggregate — two sorts per exchange
-    # side — while primitive buffers keep HashAggregate. `labels` is exactly
-    # map_from_entries(sig), so it never needs to ride the aggregation.
-    # (ts is unique per series by the ingest contract, so the independent
-    # max_bys all pick the same sample.)
-    picked = (
-        exploded.groupBy("t", "sig")
-        .agg(
-            F.max_by("value", "ts").alias("value"),
-            F.max_by("stale", "ts").alias("stale"),
-            F.max("ts").alias("sample_ts"),
-        )
-        .filter(~F.coalesce(F.col("stale"), F.lit(False)))
-        .select(
-            "t",
-            F.map_from_entries("sig").alias("labels"),
-            "sig",
-            "value",
-            "sample_ts",
-        )
+    cond = scan_condition(samples, selector, start_ms - off - lookback_ms, end_ms - off)
+    points = samples.filter(cond & F.expr(f"{k0} <= {k1}")).selectExpr(
+        _steps(start_ms, step_ms, k0, k1),
+        f"{sig_sql(LABELED)} AS sig",
+        "value",
+        _stale(samples),
+        "ts",
     )
-    return picked
+    return _pick_latest(points, ["t", "sig"], [])
 
 
-def _instant_at(
-    samples: DataFrame, selector: VectorSelector, ref_ms: int, lookback_ms: int
-) -> DataFrame:
-    base = base_scan(samples, selector, ref_ms - lookback_ms, ref_ms)
-    # primitive-buffer aggregation (see instant_vector): HashAggregate, not
-    # SortAggregate; labels rebuilt from the sig grouping key
-    return (
-        base.groupBy("sig")
-        .agg(
-            F.max_by("value", "ts").alias("value"),
-            F.max_by("stale", "ts").alias("stale"),
-            F.max("ts").alias("sample_ts"),
-        )
-        .filter(~F.coalesce(F.col("stale"), F.lit(False)))
-        .select(
-            F.map_from_entries("sig").alias("labels"),
-            "sig",
-            "value",
-            "sample_ts",
-        )
+def _pick_latest(points: DataFrame, keys: list[str], grid: list[str]) -> DataFrame:
+    """Per `keys` group the latest sample, unless it is a staleness marker,
+    as (t, labels, sig, value, sample_ts); `grid` fans a step-less pick
+    out onto the steps.
+
+    Aggregate PRIMITIVES only (max_by's buffer carries the value expr): a
+    struct-of-map buffer forces SortAggregate — two sorts per exchange
+    side — while primitive buffers keep HashAggregate. `labels` is exactly
+    map_from_entries(sig), so it never needs to ride the aggregation.
+    (ts is unique per series by the ingest contract, so the independent
+    max_bys all pick the same sample.)
+    """
+    latest = aggregate(
+        points,
+        keys,
+        ["max_by(value, ts) AS value", "max_by(stale, ts) AS stale", "max(ts) AS sample_ts"],
     )
-
-
-def _replicate_over_grid(
-    df: DataFrame, start_ms: int, end_ms: int, step_ms: int
-) -> DataFrame:
-    """@-pinned evaluation: copy every row of `df` onto every grid step
-    (adds the step column t; callers pick the columns they keep)."""
-    n_steps = (end_ms - start_ms) // step_ms
-    grid = F.sequence(F.lit(0), F.lit(n_steps))
-    return (
-        df.withColumn("__k", F.explode(grid))
-        .withColumn("t", (F.lit(start_ms) + F.col("__k") * F.lit(step_ms)).cast("long"))
-        .drop("__k")
+    return latest.filter("NOT coalesce(stale, false)").selectExpr(
+        *(grid or ["t"]), "map_from_entries(sig) AS labels", "sig", "value", "sample_ts"
     )
 
 
@@ -257,13 +252,12 @@ def range_frame(
         min_ts, max_ts = selector.at_ms - off - range_ms, selector.at_ms - off
     else:
         min_ts, max_ts = start_ms - off - range_ms, end_ms - off
-    base = base_scan(samples, selector, min_ts, max_ts)
-    base = base.filter(~F.coalesce(F.col("stale"), F.lit(False)))
-    if pinned:
-        base = base.select("sig", "labels", "ts", "value")
+    cond = scan_condition(samples, selector, min_ts, max_ts)
+    if "stale" in samples.columns:
+        cond = cond & F.expr("NOT coalesce(stale, false)")
     return window_frame(
-        base, range_ms, off, start_ms, end_ms, step_ms,
-        pinned=pinned, order_cols=order_cols,
+        samples, range_ms, off, start_ms, end_ms, step_ms,
+        pinned=pinned, order_cols=order_cols, sig=sig_sql(LABELED), where=cond,
     )
 
 
@@ -277,70 +271,62 @@ def window_frame(
     *,
     pinned: bool,
     order_cols: bool,
+    sig: str = "sig",
+    where: Column | None = None,
 ) -> DataFrame:
-    """Fan the points of a range vector (one row per sample: sig, labels,
-    ts, value — from a matrix selector's scan or a subquery's inner grid)
-    out to one row per (window t, sample).
+    """Fan the points of a range vector (ts, value and a series signature:
+    a matrix selector's scan or a subquery's inner grid) out to one row
+    per (window t, sample). `sig` is the SQL text of the points'
+    signature, `where` their own filter.
 
-    pinned (@): `points` already holds exactly the pinned window, so every
-    point serves every step. Otherwise v0.47 windows are CLOSED
+    pinned (@): the points are exactly the pinned window, so every point
+    serves every step. Otherwise v0.47 windows are CLOSED
     [t-off-range, t-off] (engine.go:2056 t >= mint; changed to left-open
     only in Prometheus 3.x) — a sample serves windows
       ts + off <= t <= ts + off + range
 
     order_cols=True precomputes order-dependent per-sample columns ONCE
-    (before the fan-out) — see _with_order_cols.
+    (before the fan-out) — see ORDER_COLS.
     """
+    cols = ["ts", "value", sig if sig == "sig" else f"{sig} AS sig"]
     if order_cols:
-        points = _with_order_cols(points)
+        if where is not None:
+            points = points.filter(where)
+        if sig != "sig":
+            points = points.selectExpr(*cols)
+        points = points.selectExpr("*", *LAG_COLS)
+        cols, where = ["ts", "value", "sig", *ORDER_COLS], None
     if pinned:
-        return _replicate_over_grid(points, start_ms, end_ms, step_ms)
-    return _explode_to_steps(
-        points,
-        start_ms,
-        end_ms,
-        step_ms,
-        F.col("ts") + F.lit(offset_ms),
-        F.col("ts") + F.lit(offset_ms + range_ms),
-    )
-
-
-def _with_order_cols(base: DataFrame) -> DataFrame:
-    """Per-sample columns from a lag window over each series:
-      prev_value, prev_ts — previous sample of the series (global order)
-      drop  — reset adjustment: prev_value if value < prev_value else 0
-              (rate/increase add the pre-reset level, functions.go:107-112)
-      change — 1 if value differs from prev (changes()), reset — 1 on drop
-    Window sums then subtract the first-in-window sample's contribution,
-    whose prev lies outside the window.
-    """
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("sig").orderBy("ts")
-    prev_v = F.lag("value").over(w)
-    prev_t = F.lag("ts").over(w)
-    return (
-        base.withColumn("prev_value", prev_v)
-        .withColumn("prev_ts", prev_t)
-        .withColumn(
-            "drop",
-            F.when(F.col("value") < F.col("prev_value"), F.col("prev_value")).otherwise(
-                F.lit(0.0)
-            ),
+        grid = _whole_grid(start_ms, end_ms, step_ms)
+    else:
+        k0, k1 = step_span(
+            start_ms, end_ms, step_ms,
+            f"ts + {num(offset_ms)}", f"ts + {num(offset_ms + range_ms)}",
         )
-        .withColumn(
-            "change",
-            F.when(
-                F.col("prev_value").isNull(), F.lit(0)
-            ).when(
-                (F.col("value") != F.col("prev_value"))
-                & ~(F.isnan("value") & F.isnan("prev_value")),
-                F.lit(1),
-            ).otherwise(F.lit(0)),
-        )
-        .withColumn(
-            "reset",
-            F.when(F.col("value") < F.col("prev_value"), F.lit(1)).otherwise(F.lit(0)),
-        )
-    )
+        span = F.expr(f"{k0} <= {k1}")
+        where = span if where is None else where & span
+        grid = _steps(start_ms, step_ms, k0, k1)
+    if where is not None:
+        points = points.filter(where)
+    return points.selectExpr(grid, *cols)
 
+
+#: SQL text: each sample's predecessor in its series (global order)
+LAG_COLS = [
+    "lag(value) OVER (PARTITION BY sig ORDER BY ts) AS prev_value",
+    "lag(ts) OVER (PARTITION BY sig ORDER BY ts) AS prev_ts",
+]
+#: SQL text of the per-sample columns the predecessor gives:
+#:   drop  — reset adjustment: prev_value if value < prev_value else 0
+#:           (rate/increase add the pre-reset level, functions.go:107-112)
+#:   change — 1 if value differs from prev (changes()), reset — 1 on drop
+#: Window sums then subtract the first-in-window sample's contribution,
+#: whose prev lies outside the window.
+ORDER_COLS = [
+    "prev_value",
+    "prev_ts",
+    "CASE WHEN value < prev_value THEN prev_value ELSE 0.0D END AS drop",
+    "CASE WHEN prev_value IS NULL THEN 0 WHEN value != prev_value AND "
+    "NOT (isnan(value) AND isnan(prev_value)) THEN 1 ELSE 0 END AS change",
+    "CASE WHEN value < prev_value THEN 1 ELSE 0 END AS reset",
+]

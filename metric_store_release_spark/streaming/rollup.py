@@ -19,8 +19,12 @@ here either; callers may add `withWatermark` to bound streaming state).
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from metric_store_release_spark.datamodel import memo_column, sql_string
 
 #: app/nozzle.go:115-126
 DEFAULT_ROLLUP_TAGS = (
@@ -63,20 +67,27 @@ def _tag_cols(tags: tuple[str, ...]) -> list[Column]:
     return [F.col("tags").getItem(t).alias(t) for t in tags]
 
 
+@memo_column
 def _labels_from_tags(tags: tuple[str, ...], node_index: str | None) -> Column:
-    entries = []
-    for t in tags:
-        entries.append(
-            F.map_filter(
-                F.create_map(F.lit(t), F.col(t)), lambda _, v: v.isNotNull()
-            )
-        )
-    base = F.create_map(F.lit("source_id"), F.col("source_id"))
+    """The point's label map: source_id, node_index, then every tag column
+    that is not null — one SQL expression, memoized, so a micro-batch
+    builds it with no JVM round trip once the first batch has."""
+    base = ["'source_id', source_id"]
     if node_index is not None:
-        base = F.map_concat(
-            base, F.create_map(F.lit("node_index"), F.lit(node_index))
-        )
-    return F.map_concat(base, *entries) if entries else base
+        base.append(f"'node_index', {sql_string(node_index)}")
+    base_map = f"map({', '.join(base)})"
+    if not tags:
+        return F.expr(base_map)
+    entries = ", ".join(f"{sql_string(t)}, {_column_ref(t)}" for t in tags)
+    return F.expr(
+        f"map_concat({base_map}, map_filter(map({entries}), (k, v) -> v IS NOT NULL))"
+    )
+
+
+def _column_ref(name: str) -> str:
+    if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", name):
+        raise ValueError(f"not a tag column name: {name!r}")
+    return f"`{name}`"
 
 
 def rollup_counters(
@@ -107,7 +118,7 @@ def rollup_counters(
         F.unix_millis(F.col("w.end")).alias("ts"),
         F.lit("http_total").alias("name"),
         F.sum("win_count").over(cum).alias("value"),
-        _labels_from_tags(tags, node_index).alias("labels"),
+        _labels_from_tags(tuple(tags), node_index).alias("labels"),
     )
 
 
@@ -270,7 +281,7 @@ def stateful_rollup_counters(
         "ts",
         F.lit("http_total").alias("name"),
         "value",
-        _labels_from_tags(tags, node_index).alias("labels"),
+        _labels_from_tags(tuple(tags), node_index).alias("labels"),
     )
 
 

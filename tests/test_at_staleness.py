@@ -36,6 +36,15 @@ def test_at_negative_offset(engine, metric):
         assert got == {(10 * S, "1"): 5.0, (10 * S, "2"): 10.0}, q
 
 
+def test_at_over_a_month_of_hourly_steps(engine, metric):
+    """A pinned selector copies its sample onto every step; step times past
+    2^31 ms from the start (24.8 days) must not overflow."""
+    hour = 3600 * S
+    out = engine.query_range(metric, 'metric{job="1"} @ 100', 0, 720 * hour, hour)
+    got = rows_to_dict(out, ["job"])
+    assert got == {(k * hour, "1"): 10.0 for k in range(721)}
+
+
 def test_at_unary(engine, metric):
     got = rows_to_dict(engine.query_instant(metric, "-metric @ 100", 10 * S), ["job"])
     assert got == {(10 * S, "1"): -10.0, (10 * S, "2"): -20.0}

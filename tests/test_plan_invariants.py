@@ -11,6 +11,9 @@ series.
 
 from __future__ import annotations
 
+import importlib.util
+import pathlib
+
 import pytest
 
 from metric_store_release_spark import EngineConfig, PromQLEngine
@@ -164,6 +167,53 @@ def test_dashboard_plans_skip_only_vacuous_assertions(
     plan = _plan(out)
     assert plan.count("Exchange") == exchanges, (query, skipped)
     assert plan.count("raise_error(") == kept, plan
+
+
+def _build_counter():
+    """scripts/build_profile.py's counter of py4j commands and analysed
+    DataFrames."""
+    path = pathlib.Path(__file__).resolve().parents[1] / "scripts" / "build_profile.py"
+    spec = importlib.util.spec_from_file_location("build_profile", path)
+    module = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(module)
+    return module.BuildCounter()
+
+
+@pytest.mark.parametrize(
+    "query, range_min, commands, frames",
+    [
+        ("sum by (source_id) (rate(http_total[5m]))", 60, 223, 14),
+        ('sum by (source_id) (rate(http_total{status_code="500"}[5m]))'
+         " / sum by (source_id) (rate(http_total[5m]))", 60, 492, 32),
+        ("histogram_quantile(0.99, sum by (le) "
+         "(rate(http_duration_seconds_bucket[5m])))", 60, 310, 20),
+        ('avg_over_time(cpu{source_id="a"}[10m])', 60, 104, 7),
+        ("sum(count_over_time(cpu[2h]))", 0, 154, 9),
+        ("topk(5, memory)", 0, 198, 14),
+        ("cpu / ignoring(unit) memory", 30, 457, 27),
+    ],
+)
+def test_dashboard_build_budget(spark, dashboard, query, range_min, commands, frames):
+    """Plan construction is a few JVM calls per operator: each operator
+    adds its plan nodes with one DataFrame call apiece, structural
+    expressions as SQL text. The budgets are the counts of that design plus
+    a quarter, so construction cost cannot creep back unnoticed. Counted
+    on a second build of each shape, the one a refreshing dashboard pays."""
+    end = 90 * MIN
+    eng = PromQLEngine(spark)
+
+    def build():
+        if range_min:
+            return eng.query_range(dashboard, query, end - range_min * MIN, end, MIN)
+        return eng.query_instant(dashboard, query, end)
+
+    build()
+    counter = _build_counter()
+    with counter.counting():
+        build()
+    print(f"{query!r}: {counter.commands} py4j commands, {counter.frames} DataFrames")
+    assert counter.commands <= commands, counter.commands
+    assert counter.frames <= frames, counter.frames
 
 
 # ---------------------------------------------------------------------------

@@ -85,6 +85,30 @@ def test_sig_collision_free(spark):
     assert sigs.count() == 3
 
 
+def test_sig_is_array_sort_order_without_lambda(spark):
+    """`sig` sorts with `sort_array`, whose order (key, then value) is the
+    default-comparator `array_sort`'s, and plans no comparator lambda."""
+    df = spark.createDataFrame(
+        [
+            ({"b": "1", "a": "2"},),
+            ({"zeta": "x", "ünï": "y", "a": "z"},),
+            ({"a": None, "b": "v"},),
+            ({},),
+        ],
+        "labels map<string,string>",
+    )
+    rows = df.select(
+        sig(F.col("labels")).alias("s"),
+        F.array_sort(F.map_entries("labels")).alias("ref"),
+    ).collect()
+    for r in rows:
+        assert r["s"] == r["ref"], r
+    assert [e["key"] for e in rows[1]["s"]] == ["a", "zeta", "ünï"]
+    assert rows[3]["s"] == []
+    expr = df.select(sig(F.col("labels")))._jdf.queryExecution().analyzed().toString()
+    assert "lambdafunction" not in expr, expr
+
+
 def test_parse_point_lines(spark, engine):
     from metric_store_release_spark.sources.ingest import parse_point_lines
 
