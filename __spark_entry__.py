@@ -44,21 +44,9 @@ def _prepare(spark: SparkSession) -> SparkSession:
 
 
 def _engine(spark: SparkSession, lookback_ms: int = LOOKBACK):
-    """Session-lifetime engine memo: PromQLEngine carries the split
-    evaluation PLAN cache, which only pays off if repeated queries reach
-    the SAME engine instance — the query-frontend shape (plans are
-    memoized, results recompute from the source on every action). The
-    per-lookback dict lives on the session itself, so it dies with the
-    session: a module-level map keyed by the session would pin it, since
-    every engine holds a strong reference back to its session."""
     from metric_store_release_spark import EngineConfig, PromQLEngine
 
-    per_session = spark.__dict__.setdefault("_msrs_engines", {})
-    eng = per_session.get(lookback_ms)
-    if eng is None:
-        eng = PromQLEngine(spark, EngineConfig(lookback_ms=lookback_ms))
-        per_session[lookback_ms] = eng
-    return eng
+    return PromQLEngine(spark, EngineConfig(lookback_ms=lookback_ms))
 
 
 def _samples(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -165,10 +153,10 @@ def _promql_split_cached(
     q: str, split_ms: int
 ) -> Callable[[SparkSession, str], DataFrame]:
     """Split evaluation through the per-chunk RESULT CACHE
-    (engine.query_range_split_cached): absolute-aligned chunk boundaries,
-    full chunks persisted as parquet and reused across queries. Must be
-    bit-identical to the unsplit evaluation, so it shares the unsplit
-    query's oracle."""
+    (engine.query_range_split with cache_dir): absolute-aligned chunk
+    boundaries, full chunks persisted as parquet and reused across
+    queries. Must be bit-identical to the unsplit evaluation, so it shares
+    the unsplit query's oracle."""
 
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         import tempfile
@@ -177,8 +165,9 @@ def _promql_split_cached(
             sf_dir, tempfile.mkdtemp(prefix="msrs-splitcache-")
         )
         eng = _engine(spark)
-        out = eng.query_range_split_cached(
-            _samples(spark, sf_dir), q, START, END, STEP, split_ms, root
+        out = eng.query_range_split(
+            _samples(spark, sf_dir), q, START, END, STEP, split_ms,
+            cache_dir=root,
         )
         return out.select("t", F.round(F.col("value"), 6).alias("value"))
 

@@ -68,82 +68,6 @@ class PromQLEngine:
             )
 
             self._active_log = ActiveQueryLog(self.config.active_query_log_path)
-        # Split-evaluation PLAN cache (round 11): a dashboard re-issuing
-        # the same sharded query rebuilds N identical chunk subplans —
-        # pure driver-side py4j construction (~0.6 s/chunk measured on
-        # the split rate query) for a plan Spark then re-executes from
-        # the source anyway. Key: the query shape (promql, bounds, step,
-        # split, prune, lookback knobs); a hit is honoured only when the
-        # incoming source is PLAN-IDENTICAL to the cached one
-        # (DataFrame.sameSemantics — exact canonicalized-plan equality,
-        # not a hash), so a filtered/mutated source can never serve a
-        # stale plan. Plans are not results: every action on the cached
-        # frame recomputes from the source. Bounded FIFO.
-        self._split_plan_cache: dict[tuple, tuple] = {}
-        # guards the check-then-mutate sequences below: the engine allows
-        # max_concurrent_queries driver threads, and an unguarded
-        # pop(next(iter(...))) can KeyError under two concurrent puts
-        # (advisor r11)
-        self._split_plan_lock = threading.Lock()
-
-    _SPLIT_PLAN_CACHE_MAX = 32
-
-    def _plan_config_key(self) -> tuple:
-        """Every EngineConfig field that changes a BUILT PLAN, folded into
-        the split plan-cache key (advisor r11: keying on lookback/subquery
-        step alone let a caller who mutates e.g. max_samples between
-        identical queries be served a plan built WITHOUT the admission
-        guard). Execution-time knobs (timeout, gate size, query log) do
-        not shape the plan and stay out of the key."""
-        c = self.config
-        return (
-            c.lookback_ms,
-            c.default_subquery_step_ms,
-            c.max_samples,
-        )
-
-    def invalidate_split_plans(self) -> None:
-        """Drop every cached split plan. Required after in-place mutation
-        of a FILE-BACKED samples source (append/compact under the same
-        path): path-equal file sources are sameSemantics-equal, so the
-        cache cannot detect that mutation itself (see query_range_split's
-        staleness caveat)."""
-        with self._split_plan_lock:
-            self._split_plan_cache.clear()
-
-    def _split_plan_get(self, key: tuple, samples: DataFrame):
-        with self._split_plan_lock:
-            hit = self._split_plan_cache.get(key)
-        if hit is None:
-            return None
-        src, out, paths = hit
-        import os
-
-        if any(not os.path.isdir(p) for p in paths):
-            # a result-cache chunk was invalidated (caller dropped the
-            # directory) — the cached plan reads dead paths; rebuild. Pop
-            # only the entry read above: a concurrent put may have
-            # refreshed the key since, and its entry is valid
-            with self._split_plan_lock:
-                if self._split_plan_cache.get(key) is hit:
-                    del self._split_plan_cache[key]
-            return None
-        try:
-            same = samples.sameSemantics(src)
-        except Exception:
-            same = False
-        return out if same else None
-
-    def _split_plan_put(
-        self, key: tuple, samples: DataFrame, out: DataFrame, paths=()
-    ) -> None:
-        with self._split_plan_lock:
-            cache = self._split_plan_cache
-            # overwriting an existing key must not evict an unrelated
-            # entry (advisor r11)
-            if key not in cache and len(cache) >= self._SPLIT_PLAN_CACHE_MAX:
-                cache.pop(next(iter(cache)), None)
-            cache[key] = (samples, out, tuple(paths))
 
     def query_range(
         self,
@@ -161,8 +85,7 @@ class PromQLEngine:
 
         CONTRACT: `samples` must hold at most one row per (series, ts) —
         union replica frames through FederatedStore (which dedups) rather
-        than raw unionByName; see selectors.DEBUG_ASSERT_UNIQUE_TS for an
-        eager check.
+        than raw unionByName.
 
         `query_bounds` is for split evaluation (query_range_split): the
         ORIGINAL query's (start, end), against which `@ start()`/`@ end()`
@@ -235,30 +158,6 @@ class PromQLEngine:
     ) -> DataFrame:
         return self.query_range(samples, promql, time_ms, time_ms, 1)
 
-    def query_range_tiered(
-        self,
-        raw: DataFrame,
-        tiers: dict,
-        promql: str,
-        start_ms: int,
-        end_ms: int,
-        step_ms: int,
-        raw_retention_ms: int | None = None,
-        now_ms: int | None = None,
-    ) -> DataFrame:
-        """Range query routed through read-path tier selection
-        (sources.storage.tiered_samples): coarse steps and ranges older
-        than raw retention are served from the matching downsample rollup
-        tier, everything else from raw — decided at plan time from the
-        (range, step) alone. ``tiers`` maps bucket width (ms) →
-        downsample_samples output."""
-        from metric_store_release_spark.sources.storage import tiered_samples
-
-        samples, _ = tiered_samples(
-            raw, tiers, start_ms, end_ms, step_ms, raw_retention_ms, now_ms
-        )
-        return self.query_range(samples, promql, start_ms, end_ms, step_ms)
-
     def query_range_split(
         self,
         samples: DataFrame,
@@ -267,21 +166,21 @@ class PromQLEngine:
         end_ms: int,
         step_ms: int,
         split_ms: int,
-        prune_source: bool = True,
+        cache_dir: str | None = None,
     ) -> DataFrame:
         """Split-by-interval horizontal query sharding (the Cortex/Thanos
         query-frontend shape, applied inside one Spark plan).
 
-        The step grid is cut into contiguous chunks of ~`split_ms`; each
-        chunk is evaluated as an independent subplan whose SOURCE SCAN is
-        pre-filtered to exactly the time slice that chunk can observe
-        (chunk bounds widened by the query's maximum selector scan-back,
-        derived statically from the AST: range + subquery depth + offset,
-        or the lookback window for instant selectors). The union of chunks
-        is bit-identical to the unsplit evaluation — PromQL range results
-        are per-step independent and the subquery grid is epoch-aligned
-        (evaluator.py eval_subquery_frame), so chunking cannot move any
-        evaluation point.
+        The step grid is cut into chunks of `split_ms`: a grid point t
+        belongs to chunk (t - origin) // split_ms. Each chunk is evaluated
+        as an independent subplan whose SOURCE SCAN is pre-filtered to
+        exactly the time slice that chunk can observe (chunk bounds widened
+        by the query's maximum selector scan-back, derived statically from
+        the AST: range + subquery depth + offset, or the lookback window
+        for instant selectors). The union of chunks is bit-identical to the
+        unsplit evaluation — PromQL range results are per-step independent
+        and the subquery grid is epoch-aligned (evaluator.py
+        eval_subquery_frame), so chunking cannot move any evaluation point.
 
         Why this matters at 100 TB: a month-long range query over a raw
         store otherwise plans ONE scan spanning the whole month and every
@@ -294,67 +193,89 @@ class PromQLEngine:
         src/internal/routing; time-sharding is the missing axis its
         node-sharding doesn't cover).
 
+        Without `cache_dir` the chunks start at `start_ms` (origin =
+        start_ms: fewest chunks). With it, `cache_dir` is a per-chunk
+        RESULT CACHE (Cortex results cache): chunks are aligned to absolute
+        multiples of `split_ms` (origin = 0), so a dashboard re-issuing the
+        query over a sliding window reuses every previously computed full
+        chunk and evaluates only the new tail. Only chunks the query covers
+        completely are cached — partial head/tail chunks are evaluated
+        fresh, as they would poison reuse. Cache key: (promql, step, grid
+        phase, chunk bounds, lookback, subquery step — plus the query
+        bounds when the promql uses @ start()/end(), whose results depend
+        on them). Each cached chunk is one parquet directory under
+        `cache_dir`, filled eagerly at plan-build time; the returned frame
+        reads it. `cache_dir` is scoped to ONE logical samples source and
+        callers own invalidation (drop the directory when the store
+        mutates), the same contract as the reference's query windows being
+        immutable once their shard closes (sources/storage.py).
+
         Selectors anchored to a fixed time (`@`, including `@ start()` /
         `@ end()`) read outside their chunk's slice, so source pruning is
         disabled for such queries (the split itself remains valid because
         `query_bounds` pins start()/end() to the parent query).
-
-        Plan-cache staleness caveat (advisor r11): a cache hit requires
-        the incoming source to be PLAN-EQUAL to the cached one
-        (sameSemantics). For FILE-BACKED sources, plan equality is by
-        root path — a fresh ``spark.read.parquet(path)`` issued AFTER
-        files were appended to / compacted under ``path`` is plan-equal
-        to the cached source, yet the cached plan executes against the
-        file listing captured when it was built. Callers whose parquet
-        source mutates in place own invalidation, exactly like the
-        ``_cached`` variant's directory contract: call
-        :meth:`invalidate_split_plans` after mutating the store (or
-        construct a fresh engine). In-memory / view / filtered sources
-        are unaffected — any plan change misses the cache and rebuilds.
         """
+        import hashlib
+        import os
+
         if split_ms <= 0:
             raise ValueError("split_ms must be positive")
         if end_ms < start_ms or step_ms <= 0:
             raise ValueError("bad query range")
-        plan_key = (
-            "split", promql, start_ms, end_ms, step_ms, split_ms,
-            prune_source, self._plan_config_key(),
-        )
-        cached = self._split_plan_get(plan_key, samples)
-        if cached is not None:
-            return cached
-        back_ms, fwd_ms, prune, _ = self._scan_bounds(promql, prune_source)
-
+        back_ms, fwd_ms, prune, has_at_pre = self._scan_bounds(promql)
+        origin = start_ms if cache_dir is None else 0
+        phase = start_ms % step_ms
+        # chunk ids from the grid points themselves — iterating every
+        # chunk in [start, end] would walk millions of empty chunks when
+        # split_ms << step_ms
         n_steps = (end_ms - start_ms) // step_ms + 1
-        steps_per_chunk = max(1, split_ms // step_ms)
-        bounds = [
-            (
-                start_ms + i0 * step_ms,
-                start_ms
-                + min(i0 + steps_per_chunk, n_steps) * step_ms
-                - step_ms,
-            )
-            for i0 in range(0, n_steps, steps_per_chunk)
-        ]
+        chunk_ids = sorted(
+            {(start_ms + j * step_ms - origin) // split_ms for j in range(n_steps)}
+        )
 
-        def _build_chunk(b: tuple[int, int]) -> DataFrame:
-            cs, ce = b
+        def eval_chunk(cs: int, ce: int) -> DataFrame:
             src = samples
             if prune:
                 src = samples.filter(
                     F.col("ts").between(cs - back_ms, ce + fwd_ms)
                 )
             return self.query_range(
-                src, promql, cs, ce, step_ms,
-                query_bounds=(start_ms, end_ms),
+                src, promql, cs, ce, step_ms, query_bounds=(start_ms, end_ms)
             )
 
-        parts = self._build_parts(bounds, _build_chunk)
+        def chunk_part(c: int) -> DataFrame:
+            lo = origin + c * split_ms
+            hi = lo + split_ms - 1
+            # first/last step-grid points inside the chunk
+            g0 = lo + (phase - lo) % step_ms
+            g1 = hi - (hi - phase) % step_ms
+            cs, ce = max(g0, start_ms), min(g1, end_ms)
+            if cache_dir is None or (cs, ce) != (g0, g1):
+                return eval_chunk(cs, ce)
+            key_src = "|".join(
+                str(x)
+                for x in (
+                    promql, step_ms, phase, cs, ce,
+                    self.config.lookback_ms,
+                    self.config.default_subquery_step_ms,
+                )
+                + ((start_ms, end_ms) if has_at_pre else ())
+            )
+            path = os.path.join(
+                cache_dir, hashlib.md5(key_src.encode()).hexdigest()
+            )
+            if not os.path.isdir(path):
+                # cache fill runs at build time from the chunk's own
+                # builder thread (_build_parts); paths are per-chunk, so
+                # concurrent fills never collide
+                eval_chunk(cs, ce).write.mode("overwrite").parquet(path)
+            return self.spark.read.parquet(path)
+
+        parts = self._build_parts(chunk_ids, chunk_part)
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
         out._msrs_promql = promql
-        self._split_plan_put(plan_key, samples, out)
         return out
 
     @staticmethod
@@ -377,9 +298,7 @@ class PromQLEngine:
         with ThreadPoolExecutor(max_workers=min(8, len(items))) as pool:
             return list(pool.map(build, items))
 
-    def _scan_bounds(
-        self, promql: str, prune_source: bool = True
-    ) -> tuple[int, int, bool, bool]:
+    def _scan_bounds(self, promql: str) -> tuple[int, int, bool, bool]:
         """Static AST analysis for split evaluation: (max scan-back ms,
         max scan-forward ms, source pruning allowed, uses @ start()/end()).
         Pruning is disallowed when any selector is @-anchored (it reads a
@@ -388,7 +307,7 @@ class PromQLEngine:
         from metric_store_release_spark.promql.ast import walk as _walk
 
         node = parse(promql)
-        back_ms, fwd_ms, prune = 0, 0, prune_source
+        back_ms, fwd_ms = 0, 0
         for sel, window_ms, extra in _selector_scans(
             node, self.config.lookback_ms
         ):
@@ -397,132 +316,10 @@ class PromQLEngine:
         has_at_pre = any(
             getattr(n, "at_preprocessor", None) for n in _walk(node)
         )
-        if has_at_pre or any(
-            getattr(n, "at_ms", None) is not None for n in _walk(node)
-        ):
-            prune = False
+        prune = not has_at_pre and all(
+            getattr(n, "at_ms", None) is None for n in _walk(node)
+        )
         return back_ms, fwd_ms, prune, has_at_pre
-
-    def query_range_split_cached(
-        self,
-        samples: DataFrame,
-        promql: str,
-        start_ms: int,
-        end_ms: int,
-        step_ms: int,
-        split_ms: int,
-        cache_dir: str,
-        prune_source: bool = True,
-    ) -> DataFrame:
-        """Split evaluation with a per-chunk RESULT CACHE — the second half
-        of the query-frontend shape (Cortex results cache): chunk
-        boundaries are aligned to ABSOLUTE multiples of ``split_ms`` (not
-        to the query's start), so a dashboard re-issuing the same query
-        over a sliding window reuses every previously-computed full chunk
-        and only evaluates the new tail.
-
-        A chunk is cached only when the query covers it completely
-        (partial head/tail chunks are evaluated fresh, uncached — they
-        would poison reuse). Cache key: (promql, step, grid phase, chunk
-        bounds, lookback, subquery step — plus the query bounds when the
-        promql uses @ start()/end(), whose results legitimately depend on
-        them). Each cached chunk is one parquet directory under
-        ``cache_dir``; fills happen eagerly at plan-build time and the
-        returned frame READS the cache, so repeated queries scan a few
-        small result files instead of the raw store.
-
-        ``cache_dir`` is scoped to ONE logical samples source — callers
-        own invalidation (drop the directory when the store mutates), the
-        same contract as the reference's query windows being immutable
-        once their shard closes (shard analog: sources/storage.py).
-        """
-        import hashlib
-        import os
-
-        if split_ms <= 0:
-            raise ValueError("split_ms must be positive")
-        if end_ms < start_ms or step_ms <= 0:
-            raise ValueError("bad query range")
-        plan_key = (
-            "split_cached", promql, start_ms, end_ms, step_ms, split_ms,
-            cache_dir, prune_source, self._plan_config_key(),
-        )
-        cached = self._split_plan_get(plan_key, samples)
-        if cached is not None:
-            return cached
-        back_ms, fwd_ms, prune, has_at_pre = self._scan_bounds(
-            promql, prune_source
-        )
-        phase = start_ms % step_ms
-
-        def grid_in(chunk: int) -> tuple[int, int]:
-            """First/last step-grid points inside absolute chunk."""
-            lo, hi = chunk * split_ms, (chunk + 1) * split_ms - 1
-            g0 = lo + (phase - lo) % step_ms
-            g1 = hi - (hi - phase) % step_ms
-            return g0, g1
-
-        def eval_chunk(cs: int, ce: int) -> DataFrame:
-            src = samples
-            if prune:
-                src = samples.filter(
-                    F.col("ts").between(cs - back_ms, ce + fwd_ms)
-                )
-            return self.query_range(
-                src, promql, cs, ce, step_ms, query_bounds=(start_ms, end_ms)
-            )
-
-        # chunk ids from the grid points themselves — iterating every
-        # absolute chunk in [start//split, end//split] would walk millions
-        # of empty chunks when split_ms << step_ms
-        n_steps = (end_ms - start_ms) // step_ms + 1
-        chunk_ids = sorted(
-            {(start_ms + j * step_ms) // split_ms for j in range(n_steps)}
-        )
-
-        cache_paths: list[str] = []
-
-        def _chunk_part(c: int) -> DataFrame | None:
-            g0, g1 = grid_in(c)
-            cs, ce = max(g0, start_ms), min(g1, end_ms)
-            if cs > ce:
-                return None  # unreachable for grid-derived ids; guard
-            full = cs == g0 and ce == g1
-            if not full:
-                return eval_chunk(cs, ce)
-            key_src = "|".join(
-                str(x)
-                for x in (
-                    promql, step_ms, phase, cs, ce,
-                    self.config.lookback_ms,
-                    self.config.default_subquery_step_ms,
-                )
-                + ((start_ms, end_ms) if has_at_pre else ())
-            )
-            path = os.path.join(
-                cache_dir, hashlib.md5(key_src.encode()).hexdigest()
-            )
-            if not os.path.isdir(path):
-                # cache fill runs at build time from the chunk's own
-                # builder thread (_build_parts); paths are per-chunk, so
-                # concurrent fills never collide
-                eval_chunk(cs, ce).write.mode("overwrite").parquet(path)
-            cache_paths.append(path)  # list.append is atomic under the GIL
-            return self.spark.read.parquet(path)
-
-        parts = [
-            p for p in self._build_parts(chunk_ids, _chunk_part)
-            if p is not None
-        ]
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        out._msrs_promql = promql
-        # plan reuse is only valid while every chunk-result directory the
-        # plan reads still exists — _split_plan_get re-checks them per hit
-        # (the caller-owns-invalidation contract)
-        self._split_plan_put(plan_key, samples, out, cache_paths)
-        return out
 
     def execute(
         self,

@@ -24,6 +24,7 @@ built once per distinct string (`datamodel.memo_column`).
 from __future__ import annotations
 
 import math
+import re
 from dataclasses import dataclass, replace
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -252,13 +253,18 @@ class Evaluator:
                 raise PromQLEvalError("vector() expects a scalar")
             return VectorResult(self._scalar_to_vector(s, self.ctx))
         if name == "timestamp":
-            vec = self._vector_arg(node.args[0])
-            src = "sample_ts" if "sample_ts" in vec.df.columns else "t"
-            # the output is a COMPUTED vector: its samples exist at eval
-            # time, so sample_ts must not leak (timestamp(timestamp(v @ 10))
-            # is the eval step, not 10 — at_modifier.test)
+            # engine.go rangeEvalTimestampFunctionOverVectorSelector: the
+            # sample time only for a (parenthesised) vector selector; the
+            # samples of any computed vector exist at the eval step
+            # (timestamp(timestamp(v @ 10)) is the step, not 10 —
+            # at_modifier.test)
+            arg = node.args[0]
+            while isinstance(arg, ParenExpr):
+                arg = arg.expr
+            vec = self._vector_arg(arg)
+            src = "sample_ts" if isinstance(arg, VectorSelector) else "t"
             return self._drop_name(
-                vec.df, vec.unique, f"CAST({src} AS DOUBLE) / 1000.0D", sample_ts=False
+                vec.df, vec.unique, f"CAST({src} AS DOUBLE) / 1000.0D"
             )
         if name in ("sort", "sort_desc"):
             vec = self._vector_arg(node.args[0])
@@ -383,8 +389,6 @@ class Evaluator:
         return F.create_map(*entries) if entries else F.expr(EMPTY_LABELS)
 
     def _eval_label_replace(self, node: Call) -> VectorResult:
-        import re as _re
-
         vec = self._vector_arg(node.args[0])
         dst = self._const_string(node.args[1])
         repl = self._const_string(node.args[2])
@@ -392,17 +396,19 @@ class Evaluator:
         regex = self._const_string(node.args[4])
         # functions.go:1215-1245: invalid regex / destination name are errors
         try:
-            _re.compile(regex)
-        except _re.error as e:
+            pattern = re.compile(regex)
+        except re.error as e:
             raise PromQLEvalError(f"invalid regular expression in label_replace(): {e}")
-        if not _re.fullmatch(r"[a-zA-Z_][a-zA-Z0-9_]*", dst):
+        if not re.fullmatch(r"[a-zA-Z_][a-zA-Z0-9_]*", dst):
             raise PromQLEvalError(
                 f"invalid destination label name in label_replace(): {dst!r}"
             )
         anchored = f"^(?:{regex})$"
         src_val = F.coalesce(F.col("labels").getItem(src), F.lit(""))
         matched = src_val.rlike(anchored)
-        expansion = F.regexp_replace(src_val, anchored, repl)
+        expansion = F.regexp_replace(
+            src_val, anchored, F.lit(_java_replacement(repl, pattern))
+        )
         without_dst = F.map_filter(F.col("labels"), lambda k, _: k != F.lit(dst))
         new_labels = (
             F.when(
@@ -417,12 +423,10 @@ class Evaluator:
         )
 
     def _eval_label_join(self, node: Call) -> VectorResult:
-        import re as _re
-
         vec = self._vector_arg(node.args[0])
         dst = self._const_string(node.args[1])
         sep = self._const_string(node.args[2])
-        if not _re.fullmatch(r"[a-zA-Z_][a-zA-Z0-9_]*", dst):
+        if not re.fullmatch(r"[a-zA-Z_][a-zA-Z0-9_]*", dst):
             raise PromQLEvalError(
                 f"invalid destination label name in label_join(): {dst!r}"
             )
@@ -784,25 +788,21 @@ class Evaluator:
         df: DataFrame,
         unique: UniqueSeries | None = None,
         value: str = "value",
-        sample_ts: bool = True,
     ) -> VectorResult:
         """`df` with `value` (SQL text) as its value, __name__ dropped from
         series identity (function/operator output), asserting that no two
         series collapse onto the same labelset (e.g.
         ceil({__name__=~'a|b'}), collision.test). A `unique` proof of the
         input makes both steps no-ops: its series carry no __name__, and
-        the proof carries over to the output. `sample_ts`: keep the input's
-        sample times, if it has them."""
-        extra = ["sample_ts"] if sample_ts and "sample_ts" in df.columns else []
+        the proof carries over to the output."""
         if unique is not None:
-            out = df.selectExpr("t", "labels", "sig", f"{value} AS value", *extra)
+            out = df.selectExpr("t", "labels", "sig", f"{value} AS value")
             return VectorResult(out, unique=unique)
         out = df.selectExpr(
             "t",
             f"{nameless_sql('labels')} AS labels",
             f"{NAMELESS_SIG} AS sig",
             f"{value} AS value",
-            *extra,
         )
         return VectorResult(_assert_one_row_per(out, "sig", _SAME_LABELSET))
 
@@ -891,6 +891,39 @@ def _assert_one_row_per(df: DataFrame, key: str, message: str) -> DataFrame:
         for c in cols
     ]
     return assert_rows(grouped, "__n <= 1", sql_string(message)).selectExpr(*out)
+
+
+#: one piece of a Go Regexp.Expand template: `$$`, `${name}`, `$name`, or
+#: a character a Java replacement string would read as syntax
+_GO_TEMPLATE = re.compile(r"\$(?:(\$)|\{(\w+)\}|(\w+))|([\\$0-9])")
+
+
+def _java_replacement(template: str, pattern: re.Pattern) -> str:
+    """Go Regexp.Expand template → java.util.regex replacement string.
+
+    Go reads `$$` as "$", and `$name` / `${name}` as a group reference,
+    where name is the longest run of letters, digits and `_` (so `$1x`
+    names group "1x"; Python's `\\w` also takes a few numerals Go does
+    not, such as "²"); an all-digit name is a group number. A group the
+    regex lacks expands to "", and a `$` that starts no reference stays
+    literal. Java would fail on an unknown group instead, so each
+    reference is resolved against the compiled `pattern` and written as
+    `$n`; literal `\\`, `$` and digits are escaped, so that a digit after
+    a reference cannot extend its group number."""
+
+    def piece(m: re.Match) -> str:
+        literal = m.group(1) or m.group(4)
+        if literal:
+            return "\\" + literal
+        name = m.group(2) or m.group(3)
+        if name.isascii() and name.isdigit():
+            # Go rejects leading zeros: "01" is a (missing) group name
+            idx = int(name) if name == "0" or name[0] != "0" else None
+        else:
+            idx = pattern.groupindex.get(name)
+        return f"${idx}" if idx is not None and idx <= pattern.groups else ""
+
+    return _GO_TEMPLATE.sub(piece, template)
 
 
 def _name_pinned(node: ast.Node) -> bool:

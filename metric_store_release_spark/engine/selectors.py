@@ -21,8 +21,6 @@ every series over the grid.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -35,15 +33,12 @@ from metric_store_release_spark.datamodel import (
 )
 from metric_store_release_spark.promql.ast import LabelMatcher, MatchOp, VectorSelector
 
-#: Engine-wide CONTRACT: the samples frame holds at most one row per
-#: (series signature, ts). The scalar max_by/min_by picks in instant
-#: selection and range functions rely on it — with duplicate-ts rows their
-#: independently-picked fields (value / stale / prev) could mix rows.
-#: FederatedStore._dedup_replicas restores the invariant on the replicated
-#: path; set MSRS_ASSERT_UNIQUE_TS=1 (tests / staging) to assert it eagerly
-#: at every selector scan (one extra aggregation job per selector — never
-#: in production paths).
-DEBUG_ASSERT_UNIQUE_TS = os.environ.get("MSRS_ASSERT_UNIQUE_TS", "") == "1"
+# Engine-wide CONTRACT: the samples frame holds at most one row per
+# (series signature, ts). The scalar max_by/min_by picks in instant
+# selection and range functions rely on it — with duplicate-ts rows their
+# independently-picked fields (value / stale / prev) could mix rows.
+# FederatedStore._dedup_replicas restores the invariant on the replicated
+# path.
 
 
 @memo_column
@@ -119,21 +114,7 @@ def base_scan(
     max_ts: int,
 ) -> DataFrame:
     """Matcher + time-bound filtered scan, in the samples' own columns."""
-    out = samples.filter(scan_condition(samples, selector, min_ts, max_ts))
-    if DEBUG_ASSERT_UNIQUE_TS:
-        dup = (
-            out.selectExpr(f"{sig_sql(LABELED)} AS sig", "ts")
-            .groupBy("sig", "ts")
-            .count()
-            .filter("count > 1")
-        )
-        if not dup.isEmpty():
-            raise AssertionError(
-                "duplicate (series, ts) samples reached the engine — dedup "
-                "replica unions (FederatedStore._dedup_replicas) before "
-                "querying"
-            )
-    return out
+    return samples.filter(scan_condition(samples, selector, min_ts, max_ts))
 
 
 def _stale(samples: DataFrame) -> str:

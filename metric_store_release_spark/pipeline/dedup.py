@@ -1284,199 +1284,6 @@ def ngram_containment_pairs(
     return out
 
 
-def ngram_containment_pairs_prefix(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int = 3,
-    threshold: float = 0.8,
-) -> DataFrame:
-    """:func:`ngram_containment_pairs` with prefix-filtered candidates
-    (Chaudhuri et al. ICDE'06 SSJoin; Xiao et al. WWW'08 ppjoin):
-    identical output — proven pair-for-pair in tests/test_containment.py
-    — but NOT the declared scale path on this repo's fixtures. Kept as a
-    correct, tested implementation and a measured negative result.
-
-    The principle: order each contained-side doc's shingles by ascending
-    global document frequency (rarest first, ties by shingle text) and
-    probe only the first ⌊(1−t)·|S_A|⌋+1. If C(A→B) ≥ t then A misses at
-    most (1−t)·|S_A| of B's shingles, so at least one probe shingle is
-    in B — probes joined against the FULL index are a provable candidate
-    superset (no ordering needed on the B side). Candidates are then
-    verified by exploding each pair's A-shingles against B's set.
-
-    WHY IT LOSES HERE (SCALING.md finding 16): prefix filtering pays off
-    only when rarest-token collisions are rare — Zipfian natural text.
-    The synthetic fixture is low-entropy word salad over small
-    per-replica vocabularies, so even the globally-rarest shingles have
-    df 2–25; candidates ≈ all co-occurring pairs, and the per-candidate
-    |S_A| explode multiplies that into ~1e9 verify rows at sf10 (39 GB
-    of shuffle spill before the disk filled — vs the exact verifier's
-    one 131M-row aggregation finishing in ~50 s). The exact verifier
-    stays the declared entry (`dedup_containment`); this one documents
-    that the textbook optimization was implemented, equality-proven, and
-    REJECTED on measurement.
-    """
-    inv_raw, sizes, inv = _shingle_index(df, text_col, id_col, shingle_n)
-    # global document frequency — the prefix ORDER (computed from the
-    # pre-hot-filter index so the order is a pure corpus statistic)
-    dfreq = inv_raw.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-    inv_df = inv.join(dfreq, "shingle")
-    # per-doc prefix: rarest ⌊(1-t)|S_A|⌋+1 shingles. collect_list per doc
-    # is bounded by the doc's shingle count (small by construction); the
-    # sort+slice runs map-side after one doc-keyed shuffle.
-    prefix = (
-        inv_df.groupBy(id_col)
-        .agg(
-            F.slice(
-                F.array_sort(
-                    F.collect_list(F.struct(F.col("df"), F.col("shingle")))
-                ),
-                1,
-                # ⌊(1−t)·|S_A|⌋+1 probes; +0.01 absorbs float error in
-                # (1−t)·n (e.g. 0.2*40 = 7.999…98 would floor a probe
-                # away exactly at the c = t boundary) and mirrors the
-                # 5e-7 slack the verify filter gives the threshold —
-                # over-including a probe is harmless (candidate superset)
-                (
-                    F.floor((1.0 - threshold) * F.count(F.lit(1)) + 0.01) + 1
-                ).cast("int"),
-            ).alias("probes")
-        )
-        .select(
-            F.col(id_col).alias("id_a"),
-            F.explode("probes").alias("p"),
-        )
-        .select("id_a", F.col("p.shingle").alias("shingle"))
-    )
-    # candidate pairs: probe shingle ∈ B's set (full index side)
-    cand = (
-        prefix.join(
-            inv.select(F.col(id_col).alias("id_b"), "shingle"), "shingle"
-        )
-        .filter(F.col("id_a") != F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    # exact intersection counts, candidates only: A's shingles semi-matched
-    # against B's (id, shingle) pairs
-    a_sh = cand.join(
-        inv.select(F.col(id_col).alias("id_a"), "shingle"), "id_a"
-    )
-    inter = (
-        a_sh.join(
-            inv.select(F.col(id_col).alias("id_b"), "shingle"),
-            ["id_b", "shingle"],
-        )
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("set_size").alias("size_a"))
-    out = (
-        inter.join(sa, "id_a")
-        .select(
-            F.col("id_a").alias("contained_id"),
-            F.col("id_b").alias("container_id"),
-            (F.col("inter") / F.col("size_a")).alias("c"),
-        )
-        .filter(F.col("c") >= threshold - 5e-7)
-        .select(
-            "contained_id", "container_id", F.round("c", 6).alias("containment")
-        )
-    )
-    # caller-owned pinned shingle index — dedup.release_index_cache
-    out._index_cache = inv_raw
-    return out
-
-
-def ngram_containment_pairs_capped(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int = 3,
-    threshold: float = 0.8,
-    df_cap: int = 5,
-) -> DataFrame:
-    """:func:`ngram_containment_pairs` with a POSTING-DF CAP on candidate
-    generation: only shingles whose document frequency is ≤ ``df_cap``
-    generate candidate pairs; verification (the exact intersection count)
-    still runs over ALL non-hot shingles, so every emitted pair's
-    containment value is exact and the output is a SUBSET of the uncapped
-    operator's (never a superset — pytest-proven).
-
-    The knob the literature applies to Zipfian web corpora: a genuinely
-    near-duplicate pair there almost always shares a RARE shingle, so
-    dropping the hot posting lists from candidate generation cuts the
-    d·(d−1)/2 co-occurrence blowup of mid-frequency shingles at ~zero
-    recall cost. It is a RECALL TRADE, not an equivalence: a pair whose
-    every shared shingle has df > df_cap is silently lost.
-
-    MEASURED NEGATIVE RESULT on this repo's fixture (round 9, the ppjoin
-    precedent, SCALING #16/#27): the synthetic corpus is low-entropy word
-    salad, so true containment pairs routinely share ONLY mid-df
-    shingles. At sf1 (13.2M co-occurrence triples, 4 740 true undirected
-    pairs): cap=3 → 11 260 candidates but 6% recall; cap=5 → 176k / 38%;
-    cap=10 → 4.2M candidates (a third of the uncapped mass) and STILL
-    misses 110 true pairs. No cap value offers full recall with material
-    reduction here, so `dedup_containment` keeps the exact verifier as
-    its declared path; this variant stays in-tree, tested, for corpora
-    with real Zipfian tails."""
-    inv_raw, sizes, inv = _shingle_index(df, text_col, id_col, shingle_n)
-    dfreq = inv_raw.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-    rare = inv.join(
-        dfreq.filter(F.col("df") <= df_cap).select("shingle"), "shingle"
-    )
-    a, b = rare.alias("a"), rare.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .distinct()
-    )
-    # exact verify on candidates only — identical to the prefix variant's
-    a_sh = cand.join(
-        inv.select(F.col(id_col).alias("id_a"), "shingle"), "id_a"
-    )
-    inter = (
-        a_sh.join(
-            inv.select(F.col(id_col).alias("id_b"), "shingle"),
-            ["id_b", "shingle"],
-        )
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    sa = sizes.select(
-        F.col(id_col).alias("id_a"), F.col("set_size").alias("size_a")
-    )
-    sb = sizes.select(
-        F.col(id_col).alias("id_b"), F.col("set_size").alias("size_b")
-    )
-    both = inter.join(sa, "id_a").join(sb, "id_b")
-    directed = both.select(
-        F.col("id_a").alias("contained_id"),
-        F.col("id_b").alias("container_id"),
-        (F.col("inter") / F.col("size_a")).alias("c"),
-    ).unionByName(
-        both.select(
-            F.col("id_b").alias("contained_id"),
-            F.col("id_a").alias("container_id"),
-            (F.col("inter") / F.col("size_b")).alias("c"),
-        )
-    )
-    out = directed.filter(F.col("c") >= threshold - 5e-7).select(
-        "contained_id", "container_id", F.round("c", 6).alias("containment")
-    )
-    # caller-owned pinned shingle index — dedup.release_index_cache
-    out._index_cache = inv_raw
-    return out
-
-
 def keep_best_per_cluster(
     df: DataFrame,
     pairs: DataFrame,

@@ -58,21 +58,6 @@ def _norm(a: Column) -> Column:
     )
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return _dot(a, b) / (_norm(a) * _norm(b))
-
-
-def _sq_dist(vec: Column, centroid: list[float]) -> Column:
-    """Squared L2 to a literal centroid — left-to-right fold, so the
-    floating-point sum order is reproducible in any engine."""
-    c = F.array(*[F.lit(float(x)) for x in centroid])
-    return F.aggregate(
-        F.zip_with(vec, c, lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
 def _double_array_sql(vals: list[float]) -> str:
     """SQL text for a double-array literal. repr() is the shortest
     round-trip form and Spark's string→double cast (Double.parseDouble)
@@ -81,11 +66,12 @@ def _double_array_sql(vals: list[float]) -> str:
 
 
 def _sq_dist_sql(vec_sql: str, centroid: list[float]) -> str:
-    """SQL text equivalent of :func:`_sq_dist` — same zip_with + fold, same
-    left-to-right order, so results are bit-identical. Exists because the
-    Column route costs one py4j round-trip PER literal element (~0.4 ms
-    each): a k=8 × dim=64 centroid matrix is ~0.45 s of driver time per
-    plan build, vs ONE F.expr parse for the whole expression."""
+    """Squared L2 to a literal centroid as SQL text — a left-to-right
+    zip_with fold, so the floating-point sum order is reproducible in any
+    engine. SQL text, not Columns: the Column route costs one py4j
+    round-trip PER literal element (~0.4 ms each), so a k=8 × dim=64
+    centroid matrix would be ~0.45 s of driver time per plan build, vs ONE
+    F.expr parse for the whole expression."""
     return (
         f"aggregate(zip_with({vec_sql}, {_double_array_sql(centroid)}, "
         "(x, y) -> (x - y) * (x - y)), cast(0.0 as double), "
@@ -263,49 +249,6 @@ def brute_force_topk(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias("cvec")
     ).withColumn("__cn", _norm(F.col("cvec")))
     scored = c.join(F.broadcast(q)).select(
-        query_id_col,
-        id_col,
-        F.round(
-            _dot(F.col("qvec"), F.col("cvec")) / (F.col("__qn") * F.col("__cn")), 6
-        ).alias("cos_sim"),
-    )
-    return _ranked_topk(scored, k, id_col, query_id_col)
-
-
-def hyperplane_lsh_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    planes: list[list[float]],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-) -> DataFrame:
-    """Approximate top-k: random-hyperplane signature bucketing.
-
-    `planes` is a fixed list of hyperplane normals (caller supplies a
-    deterministic set). Sign pattern of <v, plane_i> forms the bucket key;
-    only same-bucket candidates are scored. Recall grows with fewer planes /
-    multiple tables; this single-table variant is the building block.
-    """
-    def signature(vec: Column) -> Column:
-        bits = [
-            F.when(
-                _dot(vec, F.array(*[F.lit(float(x)) for x in p])) >= 0, F.lit(1)
-            ).otherwise(F.lit(0))
-            for p in planes
-        ]
-        return F.concat_ws("", *[b.cast("string") for b in bits])
-
-    c = corpus.select(
-        F.col(id_col),
-        F.col(vec_col).cast("array<double>").alias("cvec"),
-    ).withColumns({"bucket": signature(F.col("cvec")), "__cn": _norm(F.col("cvec"))})
-    q = queries.select(
-        F.col(query_id_col),
-        F.col(vec_col).cast("array<double>").alias("qvec"),
-    ).withColumns({"bucket": signature(F.col("qvec")), "__qn": _norm(F.col("qvec"))})
-    scored = c.join(F.broadcast(q), "bucket").select(
         query_id_col,
         id_col,
         F.round(
@@ -1328,77 +1271,6 @@ def top_principal_component(
             _dot(F.col(vec_col).cast("array<double>"), vlit), 6
         ).alias("pc1_score"),
     )
-
-
-def hard_negative_mining(
-    corpus: DataFrame,
-    centroids: list[list[float]],
-    k: int = 3,
-    n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-    query_pred: Column | None = None,
-) -> DataFrame:
-    """IVF-bucketed variant of :func:`hard_negative_mining_simhash`,
-    for callers that already hold TRAINED centroids (kmeans_centroids
-    on a hash sample, nlist grown with the corpus).
-
-    NOTE (judge round-6 finding): with a FIXED small centroid list and
-    both sides corpus-scale, the list_id equi-join concentrates the
-    corpus onto |centroids| keys and candidate pairs grow ~O(N²/nlist)
-    — measured 8.2× cost for 10× data at nlist=8. The declared
-    `embedding_hard_negatives` query therefore uses the SimHash variant
-    above, whose bucket count scales with N automatically. Keep this
-    form only when nlist is scaled ≈√N or better by the caller.
-
-    Self-matches are excluded by id; ties break (cos_sim DESC, id ASC)
-    like every top-k in this module.
-    """
-    c = corpus.select(
-        id_col, label_col, F.col(vec_col).cast("array<double>").alias("cvec")
-    )
-    index = c.withColumns(
-        {
-            "list_id": _nearest_lists("cvec", centroids, 1)[0].getField(
-                "list_id"
-            ),
-            "__cn": _norm(F.col("cvec")),
-        }
-    )
-    qsrc = corpus if query_pred is None else corpus.filter(query_pred)
-    q = qsrc.select(
-        F.col(id_col).alias("__qid"),
-        F.col(label_col).alias("__qlabel"),
-        F.col(vec_col).cast("array<double>").alias("qvec"),
-    ).withColumns(
-        {
-            "probe": F.explode(
-                F.transform(
-                    _nearest_lists("qvec", centroids, n_probe),
-                    lambda s: s.getField("list_id"),
-                )
-            ),
-            "__qn": _norm(F.col("qvec")),
-        }
-    )
-    scored = (
-        index.join(q, index["list_id"] == q["probe"])
-        .filter(
-            (F.col("__qid") != F.col(id_col))
-            & (F.col("__qlabel") != F.col(label_col))
-        )
-        .select(
-            F.col("__qid").alias("query_id"),
-            id_col,
-            F.round(
-                _dot(F.col("qvec"), F.col("cvec"))
-                / (F.col("__qn") * F.col("__cn")),
-                6,
-            ).alias("cos_sim"),
-        )
-    )
-    return _ranked_topk(scored, k, id_col, "query_id")
 
 
 def scalar_quant_stats(

@@ -55,6 +55,3 @@ def samples_from_events(
         )
     raise ValueError(granularity)
 
-
-def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")

@@ -95,6 +95,23 @@ def test_at_start_end(engine, metric):
     assert got == {(0,): 10.0, (50 * S,): 10.0, (100 * S,): 10.0}
 
 
+def test_timestamp_of_selector_vs_computed_vector(engine, spark):
+    # engine.go: the sample time only when the argument, parens unwrapped,
+    # is a vector selector; a computed vector's samples sit at the step
+    df = corpus.load(spark, 60 * S, ['x{a="1"} 0+1x40'])
+    t = 630 * S
+    for q, want in [
+        ("timestamp(x)", 600.0),
+        ("timestamp((x))", 600.0),
+        ("timestamp(x @ 70)", 60.0),
+        ("timestamp(abs(x))", 630.0),
+        ("timestamp(x * 2)", 630.0),
+        ("timestamp(-x)", 630.0),
+        ("timestamp(timestamp(x @ 10))", 630.0),
+    ]:
+        assert rows_to_dict(engine.query_instant(df, q, t), []) == {(t,): want}, q
+
+
 def test_staleness_sequence(engine, spark):
     df = corpus.load(spark, 10 * S, ["metric 0 1 stale 2"])
     assert rows_to_dict(engine.query_instant(df, "metric", 10 * S), []) == {

@@ -47,6 +47,30 @@ def test_label_replace(engine, spark):
     assert all(k[2] == "original-destination-value" for k in got)
 
 
+@pytest.mark.parametrize(
+    "repl,want",
+    [
+        # Go Regexp.Expand: an unknown group expands to ""
+        ("a${x}b", "ab"),
+        # the name is the longest word run: group "1x", not group 1 + "x"
+        ("<$1x>", "<>"),
+        ("<${1}x>", "<s1x>"),
+        ("${1}0", "s10"),
+        ("$$1 $$", "$1 $"),
+        # a `$` that starts no reference stays literal
+        ("$-${1", "$-${1"),
+        ("a\\\\b$1", "a\\bs1"),
+        ("$0!", "s1!"),
+    ],
+)
+def test_label_replace_go_template(engine, spark, repl, want):
+    df = corpus.load(spark, 5 * MIN, ['testmetric{src="s1"} 0'])
+    out = engine.query_instant(
+        df, f'label_replace(testmetric, "dst", "{repl}", "src", "(.*)")', 0
+    ).collect()
+    assert [r["labels"].get("dst") for r in out] == [want]
+
+
 def test_label_join(engine, spark):
     df = corpus.load(
         spark, 5 * MIN, ['m{a="x",b="y"} 1']

@@ -315,31 +315,6 @@ def test_substr_disjoint_repeats_leave_gap_tokens(spark):
 
 # ------------------------------------------------- hard-negative mining
 
-def test_hard_negative_mining_excludes_self_and_same_label(spark):
-    from metric_store_release_spark.pipeline.similarity import (
-        hard_negative_mining,
-    )
-
-    # two clear clusters on the x axis; labels split WITHIN each cluster
-    # so the nearest different-label vector is a cluster-mate
-    rows = [
-        (1, [1.0, 0.0], 0), (2, [0.9, 0.1], 1), (3, [0.95, 0.05], 0),
-        (4, [-1.0, 0.0], 0), (5, [-0.9, -0.1], 1), (6, [-0.95, 0.05], 1),
-    ]
-    emb = spark.createDataFrame(rows, ["vec_id", "embedding", "label"])
-    cents = [[1.0, 0.0], [-1.0, 0.0]]
-    got = {
-        (r["query_id"], r["rank"]): r["vec_id"]
-        for r in hard_negative_mining(emb, cents, k=2, n_probe=1).collect()
-    }
-    # query 1 (label 0, right cluster): only different-label mate is 2
-    assert got[(1, 1)] == 2 and (1, 2) not in got
-    # query 2 (label 1): negatives are 3 then 1 (cosine order)
-    assert got[(2, 1)] == 3 and got[(2, 2)] == 1
-    # query 4 (label 0, left cluster): negatives among {5, 6}
-    assert {got[(4, 1)], got[(4, 2)]} == {5, 6}
-
-
 def test_top_pc_recovers_dominant_axis(spark):
     """Power iteration must find the dominant variance direction: on
     data spread 30x wider along axis 0 than axis 1, the loadings
@@ -444,27 +419,6 @@ def test_hard_negative_mining_simhash_probe_widens_candidates(spark):
         emb, k=5, n_probe=3, dim=3, query_pred=pred
     ).count()
     assert n3 >= n1
-
-
-def test_hard_negative_mining_probe_widens_candidates(spark):
-    from metric_store_release_spark.pipeline.similarity import (
-        hard_negative_mining,
-    )
-    from pyspark.sql import functions as F
-
-    # query sits in list 0; its only different-label neighbor lives in
-    # list 1 -> n_probe=1 finds nothing, n_probe=2 finds it
-    rows = [
-        (1, [1.0, 0.0], 0), (2, [0.8, 0.2], 0),
-        (3, [-1.0, 0.1], 1),
-    ]
-    emb = spark.createDataFrame(rows, ["vec_id", "embedding", "label"])
-    cents = [[1.0, 0.0], [-1.0, 0.0]]
-    pred = F.col("vec_id") == 1
-    n1 = hard_negative_mining(emb, cents, k=3, n_probe=1, query_pred=pred)
-    n2 = hard_negative_mining(emb, cents, k=3, n_probe=2, query_pred=pred)
-    assert n1.count() == 0
-    assert [r["vec_id"] for r in n2.collect()] == [3]
 
 
 # ------------------------------------------------ label propagation (r9)

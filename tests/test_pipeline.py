@@ -165,25 +165,6 @@ def test_brute_force_topk(spark):
     assert out[0]["cos_sim"] == pytest.approx(1.0)
 
 
-def test_hyperplane_lsh_topk(spark):
-    from metric_store_release_spark.pipeline.similarity import hyperplane_lsh_topk
-
-    corpus_rows = [
-        (10, [1.0, 0.0]),
-        (11, [0.9, 0.1]),
-        (12, [-1.0, 0.0]),
-    ]
-    corpus = spark.createDataFrame(corpus_rows, "vec_id long, embedding array<float>")
-    queries = spark.createDataFrame(
-        [(0, [1.0, 0.05])], "query_id long, embedding array<float>"
-    )
-    planes = [[1.0, 0.0], [0.0, 1.0]]
-    out = hyperplane_lsh_topk(corpus, queries, planes, k=5).collect()
-    ids = {r["vec_id"] for r in out}
-    assert 10 in ids and 11 in ids
-    assert 12 not in ids  # opposite bucket pruned
-
-
 def test_multimodal_features(spark):
     from metric_store_release_spark.pipeline.multimodal import (
         extract_media_features,

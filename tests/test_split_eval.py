@@ -141,8 +141,9 @@ def test_cached_matches_unsplit(engine, metric, tmp_path):
         engine.query_range(metric, expr, 0, 600 * S, 10 * S), ["instance"]
     )
     got = rows_to_dict(
-        engine.query_range_split_cached(
-            metric, expr, 0, 600 * S, 10 * S, 200 * S, str(tmp_path)
+        engine.query_range_split(
+            metric, expr, 0, 600 * S, 10 * S, 200 * S,
+            cache_dir=str(tmp_path),
         ),
         ["instance"],
     )
@@ -156,8 +157,8 @@ def test_sliding_window_reuses_full_chunks(engine, metric, tmp_path):
     root = str(tmp_path)
     # q1 covers absolute chunks 0..2 fully ([0, 600) at 200 s splits) plus
     # the single grid point t=600 in chunk 3 (partial -> uncached)
-    engine.query_range_split_cached(
-        metric, expr, 0, 600 * S, 10 * S, 200 * S, root
+    engine.query_range_split(
+        metric, expr, 0, 600 * S, 10 * S, 200 * S, cache_dir=root
     ).collect()
     first = {
         d: os.path.getmtime(os.path.join(root, d)) for d in _cache_dirs(root)
@@ -166,8 +167,8 @@ def test_sliding_window_reuses_full_chunks(engine, metric, tmp_path):
     # q2 slides forward: chunks 1..3 full, chunk 4 partial. Chunks 1-2 must
     # be REUSED (same mtime), chunk 3 newly cached.
     got = rows_to_dict(
-        engine.query_range_split_cached(
-            metric, expr, 200 * S, 810 * S, 10 * S, 200 * S, root
+        engine.query_range_split(
+            metric, expr, 200 * S, 810 * S, 10 * S, 200 * S, cache_dir=root
         ),
         [],
     )
@@ -190,8 +191,8 @@ def test_cached_at_end_keyed_by_query_bounds(engine, metric, tmp_path):
     root = str(tmp_path)
     for start, end in ((0, 600 * S), (0, 400 * S)):
         got = rows_to_dict(
-            engine.query_range_split_cached(
-                metric, expr, start, end, 10 * S, 200 * S, root
+            engine.query_range_split(
+                metric, expr, start, end, 10 * S, 200 * S, cache_dir=root
             ),
             [],
         )
@@ -206,14 +207,14 @@ def test_misaligned_grid_not_poisoned(engine, metric, tmp_path):
     expr = "sum(metric)"
     root = str(tmp_path)
     a = rows_to_dict(
-        engine.query_range_split_cached(
-            metric, expr, 0, 400 * S, 10 * S, 200 * S, root
+        engine.query_range_split(
+            metric, expr, 0, 400 * S, 10 * S, 200 * S, cache_dir=root
         ),
         [],
     )
     b = rows_to_dict(
-        engine.query_range_split_cached(
-            metric, expr, 5 * S, 405 * S, 10 * S, 200 * S, root
+        engine.query_range_split(
+            metric, expr, 5 * S, 405 * S, 10 * S, 200 * S, cache_dir=root
         ),
         [],
     )
@@ -224,89 +225,80 @@ def test_misaligned_grid_not_poisoned(engine, metric, tmp_path):
     assert b == pytest.approx(want_b)
 
 
-# ------------------------------------------------------------ split plan cache
-def test_split_plan_cache_hits_on_equal_source(engine, metric):
-    # same query shape + plan-identical source -> the SAME cached plan
-    # object comes back (no rebuild), and re-executing it recomputes the
-    # same rows (plans are cached, results are not)
-    expr = "rate(http_requests[50s])"
-    a = engine.query_range_split(metric, expr, 0, 600 * S, 10 * S, 140 * S)
-    b = engine.query_range_split(metric, expr, 0, 600 * S, 10 * S, 140 * S)
-    assert b is a
-    want = rows_to_dict(a, ["instance"])
-    assert rows_to_dict(b, ["instance"]) == pytest.approx(want)
-
-
-def test_split_plan_cache_rejects_different_source(engine, metric):
-    # a source with a DIFFERENT plan must not be served the cached plan:
-    # results must reflect the new source, not the cached one
+# ----------------------------------------------------------- fresh answers
+def test_split_follows_filtered_source(engine, metric):
+    # answers come from the source passed in, even right after the same
+    # query over a different source
     expr = "sum by(job)(http_requests)"
-    full = engine.query_range_split(metric, expr, 0, 600 * S, 10 * S, 140 * S)
+    engine.query_range_split(metric, expr, 0, 600 * S, 10 * S, 140 * S)
     filtered_src = metric.filter("labels['instance'] = '0'")
     filt = engine.query_range_split(
         filtered_src, expr, 0, 600 * S, 10 * S, 140 * S
     )
-    assert filt is not full
     want = rows_to_dict(
         engine.query_range(filtered_src, expr, 0, 600 * S, 10 * S), ["job"]
     )
     assert rows_to_dict(filt, ["job"]) == pytest.approx(want)
-    # and a fresh-but-equal source DOES hit (sameSemantics, not identity)
-    again = engine.query_range_split(
-        metric.filter("labels['instance'] = '0'"),
-        expr, 0, 600 * S, 10 * S, 140 * S,
-    )
-    assert again is filt
 
 
-def test_split_cached_plan_survives_cache_dir_wipe(engine, metric, tmp_path):
-    # the cached-variant plan reads chunk-result directories; wiping the
-    # cache dir (the caller-owned invalidation contract) must force a
-    # rebuild + refill, not a read of dead paths
+def test_split_refills_wiped_cache_dir(engine, metric, tmp_path):
+    # wiping the cache dir (the caller-owned invalidation contract) must
+    # refill it, not read dead paths
     import shutil
 
     expr = "sum(metric)"
     root = str(tmp_path)
-    a = engine.query_range_split_cached(
-        metric, expr, 0, 600 * S, 10 * S, 200 * S, root
+    want = rows_to_dict(
+        engine.query_range_split(
+            metric, expr, 0, 600 * S, 10 * S, 200 * S, cache_dir=root
+        ),
+        [],
     )
-    want = rows_to_dict(a, [])
-    hit = engine.query_range_split_cached(
-        metric, expr, 0, 600 * S, 10 * S, 200 * S, root
-    )
-    assert hit is a
     shutil.rmtree(root)
-    rebuilt = engine.query_range_split_cached(
-        metric, expr, 0, 600 * S, 10 * S, 200 * S, root
+    rebuilt = engine.query_range_split(
+        metric, expr, 0, 600 * S, 10 * S, 200 * S, cache_dir=root
     )
-    assert rebuilt is not a
     assert rows_to_dict(rebuilt, []) == pytest.approx(want)
+    assert len(_cache_dirs(root)) == 3
 
 
-def test_split_plan_get_keeps_entry_refreshed_during_dead_path_check(
-    spark, monkeypatch
-):
-    # a put that refreshes the key between _split_plan_get's read and its
-    # dead-path pop must survive: only the stale entry that was read may
-    # be dropped. The dead-path probe is where the put is made to land.
-    import os
+@pytest.mark.parametrize("cached", [False, True])
+def test_split_sees_rows_appended_to_file_store(engine, spark, tmp_path, cached):
+    # write_samples appends to a parquet store in place; a split query over
+    # a fresh read of it must see the new rows. The appended series has
+    # one sample at t=600 s, which only the partial tail chunk observes, so
+    # the cached full chunks stay valid without wiping cache_dir.
+    from metric_store_release_spark.sources.storage import (
+        read_samples,
+        write_samples,
+    )
 
-    from metric_store_release_spark import PromQLEngine
+    path = str(tmp_path / "store")
+    cache_dir = str(tmp_path / "chunks") if cached else None
+    write_samples(corpus.load(spark, 10 * S, ['m{a="1"} 1+0x60']), path)
 
-    eng = PromQLEngine(spark)
-    key = ("q",)
-    stale, fresh = object(), object()
-    eng._split_plan_put(key, stale, stale, paths=["/dead/chunk"])
+    def split():
+        return rows_to_dict(
+            engine.query_range_split(
+                read_samples(spark, path), "sum(m)", 0, 600 * S, 10 * S,
+                200 * S, cache_dir=cache_dir,
+            ),
+            [],
+        )
 
-    def isdir_after_concurrent_put(path):
-        eng._split_plan_put(key, fresh, fresh)
-        return False
-
-    monkeypatch.setattr(os.path, "isdir", isdir_after_concurrent_put)
-    assert eng._split_plan_get(key, stale) is None
-    monkeypatch.undo()
-    assert eng._split_plan_cache[key] == (fresh, fresh, ())
-    # with no put in between, the dead entry itself is dropped
-    eng._split_plan_put(key, stale, stale, paths=["/dead/chunk"])
-    assert eng._split_plan_get(key, stale) is None
-    assert key not in eng._split_plan_cache
+    assert split()[(600 * S,)] == 1.0
+    write_samples(
+        corpus.load(spark, 10 * S, ['m{a="2"} 1+0x60']).filter(
+            f"ts = {600 * S}"
+        ),
+        path,
+    )
+    got = split()
+    assert got[(600 * S,)] == 2.0
+    want = rows_to_dict(
+        engine.query_range(
+            read_samples(spark, path), "sum(m)", 0, 600 * S, 10 * S
+        ),
+        [],
+    )
+    assert got == pytest.approx(want)

@@ -478,15 +478,6 @@ def test_tiered_read_query_matches_direct_rollup_query(spark):
     routed_fine, chosen_fine = tiered_samples(raw, tiers, start, end, 60_000)
     assert chosen_fine is None and routed_fine is raw
 
-    # engine-level wrapper routes identically
-    via_engine = sorted(
-        (r["t"], r["labels"]["u"], r["value"])
-        for r in eng.query_range_tiered(
-            raw, tiers, "sum by (u) (m)", start, end, step
-        ).collect()
-    )
-    assert via_engine == want
-
 
 def test_redownsample_chain_equals_direct_rollup(spark):
     """The compaction chain: 5-min tier -> 1-h tier must equal
