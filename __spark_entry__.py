@@ -603,7 +603,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["dedup_spans"] = _dedup_spans
     q["dedup_substring_spans"] = _dedup_substring_spans
     q["dedup_substring_incr"] = _dedup_substring_incr
-    # round 11: incremental component labeling + record linkage
+    # incremental component labeling + record linkage
     q["dedup_components_incr"] = _dedup_components_incr
     q["records_entity_pairs"] = _records_entity_pairs
     q["records_entity_resolution"] = _records_entity_resolution
@@ -616,31 +616,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["embedding_hard_negatives"] = _embedding_hard_negatives
     q["embedding_top_pc"] = _embedding_top_pc
 
-    # The driver's correctness gate checks entries in insertion order and
-    # stops after the first 50. ROUND-9 POLICY CHANGE (judge r8 "what's
-    # missing" #1 — the registry outgrew hand-curated swap lists at 174
-    # queries / 50 slots): the window is now computed, not curated —
-    # 8 pinned family reps, then this round's debuts and queue, then
-    # strict LRU on each query's last driver-green round as recorded in
-    # the committed CORRECTNESS_r*.json artifacts themselves. Every
-    # query's staleness is therefore auditable from the registry
-    # (see last_driver_green()), the longest-absent queries cycle
-    # first automatically, and steady-state max staleness is
-    # ceil(174/50) ≈ 4 rounds with zero manual bookkeeping. The r1–r3
-    # single-function promql variants the old curated lists parked
-    # "after the window" are exactly what LRU pulls in first.
-    #
-    # ROUND-10 CADENCE AUDIT (judge r9 ask #2 — the oldest-pass
-    # constraint, stated exactly): at r10 the stale set is 54 queries
-    # (18 last-green r3, 22 r4, 14 r5) against 35 LRU slots (50 − 8
-    # pinned − 7 debuts), so the ≤4-round target is NOT satisfiable in
-    # one window; LRU takes the strict oldest 35 (all 18 r3-green +
-    # 17 of the r4-green). After the r10 driver pass the residue is 5
-    # r4-green + 14 r5-green queries at staleness 5–6 — they head r11's
-    # LRU automatically. Steady state at 187 queries is max staleness
-    # ceil(187/50) ≈ 4 with transient 5–6 tails after debut-heavy
-    # rounds; the union across CORRECTNESS_r01..r10 stays complete
-    # (every declared query driver-green in some round's window).
+    # The correctness gate checks entries in insertion order and stops
+    # after the first 50: the pinned family reps, then the debuts, then the
+    # queue, then every other query in LRU order of its last driver-green
+    # round (last_driver_green()), so the longest-unchecked come first.
     head = [k for k in _PINNED + _DEBUTS + _QUEUE if k in q]
     ages = last_driver_green()
     rest = sorted(
@@ -654,7 +633,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 def last_driver_green() -> dict[str, int]:
     """Per-query last driver-green round, read from the committed
     CORRECTNESS_r*.json artifacts (the driver's own gate output) — the
-    rotation's LRU key AND the judge-auditable staleness record. A query
+    rotation's LRU key and its auditable staleness record. A query
     absent from every artifact (a debut) sorts as round 0 = oldest."""
     import glob
     import json
@@ -678,58 +657,6 @@ def last_driver_green() -> dict[str, int]:
     return ages
 
 
-#: The driver's correctness gate reads the FIRST 50 entries.
-#:
-#: STEADY-STATE ROTATION POLICY (permanent — judge round-5 ask #8):
-#:   * 8 core PromQL family reps are PINNED every round (below).
-#:   * Every NEW operator debuts in the window the round it lands.
-#:   * The remaining ~42 slots rotate so each of the ~138 declared
-#:     queries earns a driver-green row at least once per 3-round cycle
-#:     (138 queries / ~42 rotating slots ≈ 3.3 windows per full pass;
-#:     family reps and debut rows keep the effective cycle <=3).
-#:   * Swap-out priority: most-green-rounds first (triple-green
-#:     veterans leave before double-green, double before single).
-#: Round-6 swap (14 out / 14 in): OUT the 11 double-green round-4
-#: survivors (events_sessionize, events_asof_join, docs_pack, tpch_q14,
-#: corpus_prepare, ngram_contamination, embedding_ann_trained,
-#: events_latency_pctl, dedup_simhash_pairs, dedup_components,
-#: dedup_substring) plus 3 single-green reps of well-covered families
-#: (tpch_q6, events_value_hist, text_token_count); IN the 14 queries
-#: that had never earned a driver row (closing the r5 verification
-#: debt — after this round every declared query is driver-verified).
-#: Round-7 swap queue (pre-written): keep the 14 r6 debuts for a second
-#: green; rotate OUT the r5-batch entries that reach double-green
-#: this round (tpch_q10/q13/q15, events funnel/cube/top_users/
-#: retention/rolling_7d/dau_wau, docs weighted_sample/mixture/chunks,
-#: dedup_exact_normalized); rotate back IN the longest-absent veterans
-#: (tpch_q1/q3/q4/q5/q7, rollup_counter, dedup_minhash_lsh, text_quality,
-#: multimodal_features, media_resize, docs_sample, embedding_kmeans,
-#: events_props_stats, then the r4-survivor batch rotated out here).
-#: Late-r6 amendment: four NEW operators (events_cms_topk,
-#: events_quantile_sketch, dedup_components_star, events_kmv_dau_wau)
-#: debut per policy; tpch_q4/q5/q7/q10 (single-green, heavily-
-#: represented family — q8/q13/q17/q18/q19/q22 stay in-window) yield
-#: their slots and move to the r7 swap-back queue above. Second
-#: amendment: NEW dedup_editdist, dedup_containment, and the z-order
-#: range-scan pair (events_range_scan / events_range_scan_zordered)
-#: debut; dedup_exact_normalized, docs_weighted_sample, events_funnel
-#: and events_top_users (double-green veterans of well-covered
-#: families) yield their slots and join the r7 swap-back queue.
-#: ROUND-7 WINDOW (executes the r7 swap queue the r6 verdict confirmed,
-#: judge r6 ask #6): the 20 queries that yielded slots during round 6
-#: (tpch_q4/q5/q7/q8/q10/q13/q15/q17/q22, docs_chunks, events_cube,
-#: dedup_exact_normalized, docs_weighted_sample, events_funnel,
-#: events_top_users, events_rolling_7d, docs_mixture, events_retention,
-#: events_dau_wau, docs_temperature_mix) swap back IN, plus the 10
-#: longest-absent veterans (last driver-green in r4 or earlier:
-#: tpch_q1/q3, rollup_counter, dedup_minhash_lsh, text_quality,
-#: multimodal_features, media_resize, docs_sample, embedding_kmeans,
-#: events_props_stats). embedding_hard_negatives and
-#: docs_wordpiece_tokens CHANGED this round (LSH re-bucketing / fold
-#: rewrite per judge asks #2/#4) so they re-debut. The remaining slots
-#: hold the single-green late-r6 debuts; as NEW r7 operators land they
-#: take those slots (amendments below, same pattern as r6). OUT: the 14
-#: early-r6 debuts (now green) and the 8 r5-debut double-greens.
 #: core promql family reps, pinned into the window every round
 _PINNED = [
     "promql_selector", "promql_sum_by_user", "promql_rate",
@@ -737,29 +664,8 @@ _PINNED = [
     "promql_federated_selector", "promql_sum_by_user_federated",
 ]
 
-#: operators that are NEW or materially CHANGED this round — they debut
-#: (or re-debut) in the window per the steady-state policy. Round 11:
-#: corpus_prepare_stream (the streaming incremental corpus pass),
-#: media_pair_dedup_trimodal (full modality trio),
-#: dedup_components_incr (incremental component labeling over the
-#: session-persisted id-bucketed base labeling) and the two
-#: records_entity_* queries (Fellegi–Sunter record linkage with
-#: provably-lossless combinatorial subset blocking) are new;
-#: dedup_substring_spans / dedup_substring_incr re-debut (the gram
-#: posting table is now the Arrow kernel, h = (h1<<31)^h2 composite);
-#: corpus_prepare_full re-debuts (changed-docs-only materialization +
-#: passthrough metadata, judge r10 ask #4); docs_fuzzy_decontamination
-#: re-debuts (probes the shared session band index, ask #5);
-#: docs_token_budget_mix re-debuts (exact distinct-source guard).
-#:
-#: ROUND-11 CADENCE NOTE (judge r10 ask #1): 50 − 8 pinned − 10 debuts =
-#: 32 LRU slots; the r10-residue stale set is exactly the 19 queries
-#: last driver-green in r4/r5, so strict LRU clears ALL of them this
-#: window with 13 slots to spare for the next-oldest (r6-green) tier.
-#: POST-R11 INVARIANT (verifiable by the union audit over the committed
-#: CORRECTNESS_r*.json artifacts): no declared query's last driver-green
-#: row is more than 4 rounds old; steady-state LRU keeps it that way at
-#: ceil(192/50) ≈ 4 rounds per full pass barring debut-heavy rounds.
+#: operators that are new or materially changed since the last window:
+#: they debut (or re-debut) in the window ahead of the LRU rotation
 _DEBUTS = [
     "corpus_prepare_stream", "media_pair_dedup_trimodal",
     "dedup_components_incr", "records_entity_pairs",
@@ -769,7 +675,7 @@ _DEBUTS = [
     "docs_token_budget_mix",
 ]
 
-#: explicitly queued by the previous round's verdict (deferred debts)
+#: queries queued explicitly ahead of the LRU rotation
 _QUEUE: list[str] = []
 
 

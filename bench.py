@@ -3,18 +3,14 @@
 Prints ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ..., "runs": N, "full": "BENCH_FULL.json"}.
 
-Output contract (judge round-6 ask #1): the driver captures only the LAST
-2000 characters of stdout, and the round-6 single line (57 entries x 4
-per-query dicts) outgrew it — `BENCH_r06.json` recorded `parsed: null` and
-the round lost its 2x-acceptance signal. Round 9 (judge r8 ask #6): the
-final line carries serving/offline TOTALS + the top-30 slowest serving
-medians only (2-decimal), asserted < 1700 chars — entry-count growth no
-longer moves the line; the full per-query map, spread bands, cold run,
-best-of-run, ingest probe and per-run raw timings go to the
-BENCH_FULL.json sidecar next to this file.
+Output contract: a caller may keep only the LAST 2000 characters of
+stdout, so the final line carries serving/offline TOTALS + the top-30
+slowest serving medians only (2-decimal), asserted < 1700 chars —
+entry-count growth does not move the line; the full per-query map, spread
+bands, cold run, best-of-run, ingest probe and per-run raw timings go to
+the BENCH_FULL.json sidecar next to this file.
 
-Methodology (judge round-5 ask #2 — make the bench statistically
-defensible): each query runs $SPARK_GRAFT_BENCH_RUNS times (default 4 =
+Methodology: each query runs $SPARK_GRAFT_BENCH_RUNS times (default 4 =
 1 cold + 3 warm). The headline per-query number ("queries", summed into
 "value") is the MEDIAN of the warm runs — robust to one-off shared-VM
 hiccups in a way best-of-2 is not. The full evidence is persisted
@@ -27,7 +23,7 @@ continuity with BENCH_r01..r05.
 Query set: the heaviest representatives of each operator family — instant
 selector fan-out + agg, rate over 1d windows, histogram_quantile, topk,
 vector-vector join, subquery, TPC-H q1/q3, MinHash LSH, ANN top-k, plus
-(round 6) the hashed-feature classifier, audio/video feature extraction,
+the hashed-feature classifier, audio/video feature extraction,
 and a streaming micro-batch ingest throughput probe.
 Baseline envelope (BASELINE.md): a ≤20e6-sample query must fit the 10-60 s
 reference timeout at sf0.1 — each of these touches well under that cap.
@@ -48,7 +44,7 @@ CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
 def _calibrate(spark) -> dict:
-    """Fixed-work box-speed anchor (judge r9 ask #3): round-over-round
+    """Fixed-work box-speed anchor: round-over-round
     absolute timings drift with the shared builder box (r9 measured every
     CPU-bound cell ~1.5-1.9x slower than r8 on identical committed code,
     rescued only by a 69-shared-entry median-ratio analysis). Recording a
@@ -119,8 +115,6 @@ def main() -> None:
         "dedup_minhash_lsh",
         "embedding_topk",
         "text_quality",
-        # added round 4 — totals are NOT comparable with BENCH_r0{1..3}
-        # without subtracting these eight entries
         "dedup_substring",
         "embedding_kmeans",
         "text_repetition",
@@ -130,7 +124,6 @@ def main() -> None:
         "ngram_contamination",
         "docs_bloom_contamination",
         "embedding_ann_trained",
-        # added driver round 4 (commits mislabeled "round-5" then)
         "dedup_simhash_pairs",
         "text_bm25",
         "text_top_ngrams",
@@ -138,55 +131,53 @@ def main() -> None:
         "events_sessionize",
         "events_asof_join",
         "events_funnel",
-        # added driver round 5: steady-state serving paths — the one-time
+        # steady-state serving paths — the one-time
         # index / bucketed-table writes are untimed setup below, so these
         # measure the amortized per-query cost (probe-only ANN;
         # Exchange-free sessionize). Compare events_sessionize_bucketed
         # against events_sessionize for the bucketing payoff.
         "embedding_ann_probe",
         "events_sessionize_bucketed",
-        # also round 5: bucket-decomposed range join, KMV distinct sketch,
+        # bucket-decomposed range join, KMV distinct sketch,
         # 8-round distributed BPE merge training (force-trains per call)
         "events_interval_join",
         "events_kmv_users",
         "docs_bpe_merges",
-        # added driver round 6: the newest operator families carry perf
-        # evidence too (judge r5 ask #7)
         "text_classifier_score",
         "audio_features",
         "video_frame_features",
-        # round 6: read-path tier selection — rollup aggregation + PromQL
+        # Read-path tier selection — rollup aggregation + PromQL
         # eval over the 5-min tier the step/5 rule routes to; compare with
         # promql_sum_by_user (raw) for what the tier saves the engine
         "promql_tiered_read",
-        # late round 6: count-min frequency sketch, bounded-sample
-        # quantile sketch (dedup_components_star moved to the offline
-        # loop in round 7 — it is an iterative job, not a serving query)
+        # count-min frequency sketch, bounded-sample quantile sketch
+        # (dedup_components_star is in the offline loop — it is an
+        # iterative job, not a serving query)
         "events_cms_topk",
         "events_quantile_sketch",
         "events_kmv_dau_wau",
-        # round 7: deterministic HLL pair — per-day distinct and the
+        # Deterministic HLL pair — per-day distinct and the
         # lossless register-merge sliding window (compare the KMV pair)
         "events_hll_users",
         "events_hll_dau_wau",
-        # round 7: the Gopher/MassiveText rule battery (pure map-side)
+        # The Gopher/MassiveText rule battery (pure map-side)
         "docs_gopher_rules",
-        # round 7: cluster-consistent train/val/test assignment (LSH
+        # Cluster-consistent train/val/test assignment (LSH
         # pairs -> components -> one hash per cluster)
         "docs_leakage_split",
-        # round 7: experiment readout (per-user hash agg + 1-row agg)
+        # Experiment readout (per-user hash agg + 1-row agg)
         "events_ab_test",
-        # late round 6: 2-D selective scan over the natural vs the
+        # 2-D selective scan over the natural vs the
         # Morton-clustered (z-ordered) events layout — the pair measures
         # what multi-column min/max pruning is worth (layout write is
         # untimed setup, same rule as the bucketed/IVF tables)
         "events_range_scan",
         "events_range_scan_zordered",
-        # round 7: the same scan over the Hilbert-curve layout — the
+        # The same scan over the Hilbert-curve layout — the
         # three-way compares natural vs Morton vs Hilbert pruning
         "events_range_scan_hilbert",
-        # late round 6: C4-style boilerplate-span removal (graph_pagerank
-        # moved to the offline loop in round 7 — iterative job)
+        # C4-style boilerplate-span removal (graph_pagerank is in the
+        # offline loop — iterative job)
         "dedup_spans",
         # skew-safe exact percentiles vs the buffered F.percentile form
         # (pair: same oracle, distribution-table plan)
@@ -197,63 +188,63 @@ def main() -> None:
         # the merge-loop tokenizer)
         "docs_wordpiece_vocab",
         "docs_wordpiece_tokens",
-        # round 7: unigram-LM (SentencePiece-style) Viterbi-EM pair —
+        # Unigram-LM (SentencePiece-style) Viterbi-EM pair —
         # force-trains per call like docs_bpe_merges
         "docs_unigram_vocab",
         "docs_unigram_tokens",
-        # round 7: top-PC projection — 4 matrix-free power-iteration
+        # Top-PC projection — 4 matrix-free power-iteration
         # rounds (one distributed agg each) + one map-side projection
         "embedding_top_pc",
         # bulk kNN join (hard-negative mining): both sides corpus-scale,
         # IVF-bucketed shuffle join — the non-broadcast retrieval shape
         "embedding_hard_negatives",
-        # round 8: IVF-PQ compressed serving — the probe scans 16 B/row
+        # IVF-PQ compressed serving — the probe scans 16 B/row
         # packed codes and reranks a 50-row shortlist against the raw
         # vectors; compare embedding_ann_probe (raw-vector lists) for
         # what the compression costs/saves at equal coarse geometry
         "embedding_ann_pq",
-        # round 8: perceptual-hash image dedup — dHash mapInPandas over
+        # Perceptual-hash image dedup — dHash mapInPandas over
         # the netpbm corpus, then the dedup_simhash_pairs banded-Hamming
         # join; multimodal near-dup at corpus scale, never all-pairs
         "media_phash_pairs",
-        # round 8: delta-sign audio fingerprint near-dup (same banded
+        # Delta-sign audio fingerprint near-dup (same banded
         # join, audio modality) and SemDeDup-style keep-one-per-cluster
         # over embedding near-dup components
         "media_audio_fp_pairs",
         "embedding_semdedup",
-        # round 8: DSIR importance-resampling selection — two LM-count
+        # DSIR importance-resampling selection — two LM-count
         # passes over the hashed-feature table + one weighted top-n
         "docs_dsir_select",
-        # round 9: ExactSubstr substring-span dedup (sliding k-gram cover
+        # ExactSubstr substring-span dedup (sliding k-gram cover
         # — compare dedup_spans for the fixed-chunk variant's cost) and
         # the incremental IVF-PQ probe over an appended index (setup =
         # train on base + append delta, untimed like the other indexes;
         # compare embedding_ann_pq for the from-scratch-index probe)
         "dedup_substring_spans",
         "embedding_ann_append",
-        # round 10: incremental ExactSubstr — the planted copies as a
+        # Incremental ExactSubstr — the planted copies as a
         # new batch against the already-deduped corpus; compare
         # dedup_substring_spans for the from-scratch cost of the same
         # fixture (the delta-proportional win is the point)
         "dedup_substring_incr",
-        # round 11: incremental component labeling — the batch's LSH
+        # Incremental component labeling — the batch's LSH
         # pairs merged into the session-persisted id-bucketed base
         # labeling through a delta-sized super-graph pass; compare
         # dedup_components_star (offline loop) for the from-scratch cost
         "dedup_components_incr",
-        # round 11: Fellegi–Sunter record linkage over the enriched part
+        # Fellegi–Sunter record linkage over the enriched part
         # catalog — combinatorial subset blocking (provably lossless for
         # the weight-derived Jaccard floor) + exact verify, then the
         # transitive-closure entity labeling on the matched pairs
         "records_entity_pairs",
         "records_entity_resolution",
-        # round 9: CCNet per-language perplexity terciles (one
+        # CCNet per-language perplexity terciles (one
         # hashed-feature agg + distribution-table thresholds) and
         # VAD-style energy segmentation over the PCM16 corpus
         "docs_ccnet_buckets",
         "audio_segments",
         "video_scene_cuts",
-        # round 9 (second batch): video delta-sign fingerprint near-dup
+        # Video delta-sign fingerprint near-dup
         # (completes the image/audio/video trio through the one factored
         # banded-Hamming join), the two-pass token-budget mixture
         # sampler, per-doc 8-gram novelty, and SQ8 scalar quantization
@@ -262,7 +253,7 @@ def main() -> None:
         "docs_token_budget_mix",
         "docs_ngram_novelty",
         "embedding_scalar_quant",
-        # round 9: MinHash fuzzy benchmark decontamination — corpus
+        # MinHash fuzzy benchmark decontamination — corpus
         # banded once, probe cost ∝ benchmark, exact-Jaccard verify on
         # candidates only (compare docs_bloom_contamination for the
         # exact-gram probe's cost)
@@ -277,35 +268,34 @@ def main() -> None:
     # state, not JVM state). Benching them after the serving loop keeps
     # every serving median out of their wake while still reporting warm
     # medians + spreads for both under the same 4-run methodology.
-    # Round 7 (judge r6 ask #7): the iterative jobs — 5-iteration
-    # PageRank and the O(log n)-round two-star connected components —
-    # move here too: they are offline passes, not serving queries, and
-    # pagerank alone was 25% of the r6 sf0.1 serving total. Serving
-    # totals are re-based accordingly (SCALING.md notes the cut).
+    # The iterative jobs — 5-iteration PageRank and the O(log n)-round
+    # two-star connected components — run here too: they are offline
+    # passes, not serving queries (SCALING.md notes the serving-total
+    # cut).
     offline_names = [
         "dedup_editdist",
         "dedup_containment",
         "graph_pagerank",
         "dedup_components_star",
-        # round 9: clamped-seed label propagation — iterative job like
+        # Clamped-seed label propagation — iterative job like
         # pagerank (3 majority-vote rounds over the same order graph)
         "graph_label_prop",
-        # round 10: the composed end-to-end corpus pass (ExactSubstr →
+        # The composed end-to-end corpus pass (ExactSubstr →
         # fuzzy decon → CCNet terciles → token budget) — a multi-job
         # offline pipeline with internal blocking materializations, not
         # a serving query; compare against the sum of its component
         # entries for the composition overhead
         "corpus_prepare_full",
-        # round 10: cross-modal pair dedup — contains the iterative
+        # Cross-modal pair dedup — contains the iterative
         # connected-components pass (dHash + caption-LSH edges through
         # one shared component labeling), offline like components_star
         "media_pair_dedup",
-        # round 11: the streaming incremental corpus pass — 90% bulk
+        # The streaming incremental corpus pass — 90% bulk
         # load + two 5% crawl updates through the parquet-state
         # foreachBatch pipeline, then the finalize tail; an end-to-end
         # BUILD (state written fresh per run), not a serving query
         "corpus_prepare_stream",
-        # round 11: the full modality trio through the shared components
+        # The full modality trio through the shared components
         # pass (image dHash + audio/video delta-sign codes + caption
         # MinHash edges); decode kernels + components rounds -> offline
         "media_pair_dedup_trimodal",
@@ -328,7 +318,7 @@ def main() -> None:
     # bench session (advisor r10: storage-pressure accumulation the in-loop
     # lease exists to prevent); the timed query needs just the tables
     entry_mod._span_index_for(spark, SF_DIR)
-    # round 11: the id-bucketed base component labeling (and the band
+    # The id-bucketed base component labeling (and the band
     # index it derives from) — the incremental-components query measures
     # the delta merge, not the one-time base labeling
     entry_mod._components_labels_for(spark, SF_DIR)
@@ -360,7 +350,7 @@ def main() -> None:
                 timings[name].append(took)
                 print(f"# run{r + 1} {name}: {took}s ({n} rows)", file=sys.stderr)
 
-    # streaming micro-batch ingest throughput (judge r5 ask #6): points/s
+    # streaming micro-batch ingest throughput: points/s
     # through nozzle→rollup→sink vs the reference's batch envelope
     # (>=64 points per 500 ms micro-batch = 128 points/s, BASELINE.md /
     # ingressclient.go:15-17). Measured once — trigger cadence, not JVM
@@ -432,15 +422,12 @@ def main() -> None:
     with open(sidecar, "w") as f:
         json.dump(full, f, indent=1)
 
-    # the driver captures only the last 2000 chars of stdout. ROUND-9
-    # RESTRUCTURE (judge r8 ask #6 — the 69-entry full map hit 1854/1900
-    # chars; the next few operators would have tripped the lossy
-    # fallback): the line now carries the serving/offline TOTALS, the
-    # entry counts, and the TOP-N slowest serving medians (the entries
-    # every envelope/regression judgement actually reads) — adding an
-    # operator no longer grows the line unless it enters the top-N. The
-    # complete per-query map, spreads and raw runs stay in the committed
-    # BENCH_FULL.json sidecar. Asserted < 1700 for headroom.
+    # a caller may keep only the last 2000 chars of stdout: the line
+    # carries the serving/offline TOTALS, the entry counts, and the TOP-N
+    # slowest serving medians — adding an operator does not grow the line
+    # unless it enters the top-N. The complete per-query map, spreads and
+    # raw runs stay in the BENCH_FULL.json sidecar. Asserted < 1700 for
+    # headroom.
     serving = {n: round(med[n], 2) for n in bench_names}
     offline = {n: round(med[n], 2) for n in offline_names}
     top_n = 30

@@ -16,7 +16,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from metric_store_release_spark.datamodel import NAME_LABEL
+from metric_store_release_spark.datamodel import NAME_LABEL, sig
 from metric_store_release_spark.engine.engine import PromQLEngine
 from metric_store_release_spark.engine.selectors import matcher_condition
 from metric_store_release_spark.promql.parser import parse
@@ -140,7 +140,7 @@ def series(
             cond = cond & matcher_condition(matcher)
         rows = (
             df.filter(cond)
-            .select("name", F.array_sort(F.map_entries("labels")).alias("sig"))
+            .select("name", sig(F.col("labels")).alias("sig"))
             .distinct()
             .collect()
         )

@@ -22,7 +22,9 @@ matchers push down to the scan.
 Series identity is the full label set; we group/join on a canonical
 *signature*: sorted array of (key, value) entries. Spark cannot group by
 MapType, but array<struct> is both groupable and joinable, and building it is
-a map-side expression (no shuffle).
+a map-side expression (no shuffle). Inside the query engine `sig` is a
+series' only identity: the `labels` map exists in storage, where the scan
+reads it, and at the engine's output, built there once from `sig`.
 
 The engine builds its plans from SQL text (`num`, `sig_sql`, `project`,
 `aggregate` below) and keeps strings from queries as literal Columns
@@ -163,34 +165,39 @@ def memo_column(build):
     return memoized
 
 
-def nameless_sql(labels: str) -> str:
-    """SQL text: a label map without __name__ (function and operator
-    output)."""
-    return f"map_filter({labels}, (k, v) -> k != '{NAME_LABEL}')"
-
-
 #: SQL text: `sig` without __name__ (sorted entries stay sorted)
 NAMELESS_SIG = f"filter(sig, e -> e.key != '{NAME_LABEL}')"
 
 
-def sig_subset(keys: Sequence[str], keep: bool) -> str | Column:
-    """The `sig` column restricted to a label subset: `keep` (by / on)
-    keeps only `keys`; otherwise (without / ignoring) drops `keys` and
-    __name__. Filtering the sorted entries keeps them sorted. Label names
-    come from the query, so non-empty `keys` give a Column holding them
-    as literals; otherwise the result is SQL text."""
+def sig_subset(
+    keys: Sequence[str], keep: bool, drop_name: bool | None = None, col: str = "sig"
+) -> str | Column:
+    """The signature column `col` restricted to a label subset: `keep`
+    (by / on) keeps only `keys`, otherwise (without / ignoring) drops them.
+    `drop_name` also drops __name__; it defaults to `not keep`, the rule of
+    grouping and matching signatures (engine.go signatureFunc), while a
+    binop's result labels drop it by operator (engine.go resultMetric).
+    Filtering the sorted entries keeps them sorted. Label names come from
+    the query, so non-empty `keys` give a Column holding them as literals;
+    otherwise the result is SQL text."""
+    if drop_name is None:
+        drop_name = not keep
+    if keep and drop_name:
+        keys = [k for k in keys if k != NAME_LABEL]
     if not keys:
-        return "filter(sig, e -> false)" if keep else NAMELESS_SIG
-    return _sig_subset(tuple(keys), keep)
+        if keep:
+            return f"filter({col}, e -> false)"
+        return f"filter({col}, e -> e.key != '{NAME_LABEL}')" if drop_name else col
+    return _sig_subset(tuple(keys), keep, drop_name, col)
 
 
 @memo_column
-def _sig_subset(keys: tuple[str, ...], keep: bool) -> Column:
+def _sig_subset(keys: tuple[str, ...], keep: bool, drop_name: bool, col: str) -> Column:
     if keep:
         names = F.array(*[F.lit(k) for k in keys])
-        return F.filter(F.col("sig"), lambda e: F.array_contains(names, e["key"]))
-    names = F.array(*[F.lit(k) for k in keys], F.lit(NAME_LABEL))
-    return F.filter(F.col("sig"), lambda e: ~F.array_contains(names, e["key"]))
+        return F.filter(F.col(col), lambda e: F.array_contains(names, e["key"]))
+    names = F.array(*[F.lit(k) for k in keys], *([F.lit(NAME_LABEL)] if drop_name else []))
+    return F.filter(F.col(col), lambda e: ~F.array_contains(names, e["key"]))
 
 
 def sanitize_metric_name(col: Column) -> Column:

@@ -134,7 +134,9 @@ class PromQLEngine:
             return out.orderBy(*order_by) if order_by else out
 
         if isinstance(res, VectorResult):
-            out = _admit(res.df.selectExpr("t", "labels", "value"), res.order_by)
+            # the one place a vector's labels are built from its sig
+            out = res.df.selectExpr("t", "map_from_entries(sig) AS labels", "value")
+            out = _admit(out, res.order_by)
         elif isinstance(res, ScalarResult):
             if res.is_const:
                 out = Evaluator(ctx).steps_df().selectExpr(

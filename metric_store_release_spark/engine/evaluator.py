@@ -12,7 +12,7 @@ Construction rule: structural expressions as SQL text, user strings as
 literals. Each operator adds its plan nodes with one DataFrame call apiece
 (`selectExpr`/`select`, `filter`, `groupBy().agg`, `join`) and writes the
 expressions in them — step grid, window fan-out, lag columns, range-function
-math, label and sig maps, assertion predicates — as SQL text, because the
+math, signature filters, assertion predicates — as SQL text, because the
 driver builds a Column tree with one py4j round trip per node, and parses a
 whole SQL expression in one. Numbers enter that text only through
 `datamodel.num`. Strings from the query — matcher values and regexes, label
@@ -34,8 +34,6 @@ from metric_store_release_spark.datamodel import (
     NAME_LABEL,
     NAMELESS_SIG,
     aggregate,
-    memo_column,
-    nameless_sql,
     num,
     project,
     sig,
@@ -346,9 +344,7 @@ class Evaluator:
     def _absent_vector(self, present: DataFrame, labels: Column) -> VectorResult:
         """One `labels` sample of value 1 at every step `present` lacks."""
         missing = self.steps_df().join(present.selectExpr("t").distinct(), "t", "left_anti")
-        return VectorResult(
-            project(missing, "t", labels.alias("labels"), sig(labels).alias("sig"), "1.0D AS value")
-        )
+        return VectorResult(project(missing, "t", sig(labels).alias("sig"), "1.0D AS value"))
 
     def _eval_absent(self, arg: ast.Node) -> VectorResult:
         vec = self._vector_arg(arg)
@@ -403,20 +399,21 @@ class Evaluator:
             raise PromQLEvalError(
                 f"invalid destination label name in label_replace(): {dst!r}"
             )
-        anchored = f"^(?:{regex})$"
-        src_val = F.coalesce(F.col("labels").getItem(src), F.lit(""))
+        anchored = selectors.anchored_regex(regex)
+        labels = F.map_from_entries(F.col("sig"))
+        src_val = F.coalesce(labels.getItem(src), F.lit(""))
         matched = src_val.rlike(anchored)
         expansion = F.regexp_replace(
             src_val, anchored, F.lit(_java_replacement(repl, pattern))
         )
-        without_dst = F.map_filter(F.col("labels"), lambda k, _: k != F.lit(dst))
+        without_dst = F.map_filter(labels, lambda k, _: k != F.lit(dst))
         new_labels = (
             F.when(
                 matched & (expansion != ""),
                 F.map_concat(without_dst, F.create_map(F.lit(dst), expansion)),
             )
             .when(matched, without_dst)
-            .otherwise(F.col("labels"))
+            .otherwise(labels)
         )
         return VectorResult(
             _assert_one_row_per(_relabel(vec.df, new_labels), "sig", _SAME_LABELSET)
@@ -431,10 +428,11 @@ class Evaluator:
                 f"invalid destination label name in label_join(): {dst!r}"
             )
         srcs = [self._const_string(a) for a in node.args[3:]]
+        labels = F.map_from_entries(F.col("sig"))
         joined = F.concat_ws(
-            sep, *[F.coalesce(F.col("labels").getItem(s), F.lit("")) for s in srcs]
+            sep, *[F.coalesce(labels.getItem(s), F.lit("")) for s in srcs]
         )
-        without_dst = F.map_filter(F.col("labels"), lambda k, _: k != F.lit(dst))
+        without_dst = F.map_filter(labels, lambda k, _: k != F.lit(dst))
         new_labels = F.when(
             joined != "", F.map_concat(without_dst, F.create_map(F.lit(dst), joined))
         ).otherwise(without_dst)
@@ -485,9 +483,7 @@ class Evaluator:
             order.append(
                 F.col("value").desc() if op == "topk" else F.col("value").asc()
             )
-            ranked = project(
-                df, "t", "labels", "sig", "value", _alias(gsig, "gsig")
-            ).selectExpr(
+            ranked = project(df, "t", "sig", "value", _alias(gsig, "gsig")).selectExpr(
                 "*",
                 "row_number() OVER (PARTITION BY t, gsig ORDER BY isnan(value) ASC, "
                 f"value {direction}) AS __rn",
@@ -495,9 +491,7 @@ class Evaluator:
             if kres.is_const:
                 k = int(kres.const)
                 if k < 1:
-                    return VectorResult(
-                        df.filter("false").selectExpr("t", "labels", "sig", "value")
-                    )
+                    return VectorResult(df.filter("false").selectExpr("t", "sig", "value"))
                 # a Column comparison with an int literal, as the optimizer's
                 # WindowGroupLimit rule matches it: the per-group limit then
                 # runs before the window's shuffle
@@ -505,7 +499,7 @@ class Evaluator:
             else:
                 kdf = kres.df.selectExpr("t", "CAST(value AS BIGINT) AS __k")
                 out = ranked.join(kdf, "t").filter("__rn <= __k")
-            out = out.selectExpr("t", "labels", "sig", "value")
+            out = out.selectExpr("t", "sig", "value")
             # the reference's heap pops in value order — the result vector
             # is SORTED (desc for topk, asc for bottomk, NaN last;
             # aggregators.test eval_ordered)
@@ -522,9 +516,6 @@ class Evaluator:
                 unique = None
             elif unique.keys is not None:
                 unique = UniqueSeries(unique.keys | {lbl})
-            # aggregate primitives only; glabels == map_from_entries(gsig),
-            # so rebuilding it post-agg keeps the buffer hash-aggregable
-            # (a map-typed any_value buffer forces SortAggregate)
             return VectorResult(
                 _aggregate(df, sig(counted), ["CAST(count(1) AS DOUBLE) AS value"]),
                 unique=unique,
@@ -672,7 +663,7 @@ class Evaluator:
             extra = r.join(
                 l.selectExpr("t", "msig").distinct(), ["t", "msig"], "left_anti"
             )
-            cols = ["t", "labels", "sig", "value", "msig"]
+            cols = ["t", "sig", "value", "msig"]
             out = l.selectExpr(*cols).unionByName(extra.selectExpr(*cols))
         return VectorResult(out.drop("msig"))
 
@@ -684,8 +675,8 @@ class Evaluator:
         mode, keys = self._match_sig(node)
         msig = _alias(sig_subset(keys, keep=mode == "on"), "msig")
 
-        l = project(lhs.df, "t", msig, "labels AS llabels", "value AS lv")
-        r = project(rhs.df, "t", msig, "labels AS rlabels", "value AS rv")
+        l = project(lhs.df, "t", msig, "sig AS lsig", "value AS lv")
+        r = project(rhs.df, "t", msig, "sig AS rsig", "value AS rv")
         # engine.go:2228-2246: the 'one' side must be unique per match group
         # (both sides for one-to-one). The aggregation on the join key is
         # the one the join's own exchange needs at shuffle-join scale.
@@ -706,23 +697,24 @@ class Evaluator:
         # side's, minus __name__ when the operation drops it, restricted
         # to the matching labels for one-to-one, plus group_x's includes
         if card == VectorMatchCard.ONE_TO_MANY:
-            base_labels, one_labels = "rlabels", "llabels"
+            base_sig, one_sig = "rsig", "lsig"
         else:
-            base_labels, one_labels = "llabels", "rlabels"
-        out_labels: str | Column = base_labels
-        if card == VectorMatchCard.ONE_TO_ONE and (mode == "on" or keys):
-            out_labels = _matched_labels(base_labels, tuple(keys), mode == "on", should_drop)
-        elif should_drop:
-            out_labels = nameless_sql(base_labels)
+            base_sig, one_sig = "lsig", "rsig"
+        if card == VectorMatchCard.ONE_TO_ONE:
+            out_sig = sig_subset(keys, mode == "on", should_drop, base_sig)
+        else:
+            out_sig = sig_subset([], False, should_drop, base_sig)
         if m and m.include:
-            out_labels = _column(out_labels)
+            out_labels = F.map_from_entries(_column(out_sig))
+            one_labels = F.map_from_entries(F.col(one_sig))
             for ln in m.include:
-                inc = F.col(one_labels).getItem(ln)
+                inc = one_labels.getItem(ln)
                 without = F.map_filter(out_labels, lambda k, _: k != F.lit(ln))
                 out_labels = F.when(
                     inc.isNotNull() & (inc != ""),
                     F.map_concat(without, F.create_map(F.lit(ln), inc)),
                 ).otherwise(without)
+            out_sig = sig(out_labels)
 
         if op in ast.COMPARE_OPS and not node.return_bool:
             # vectorElemBinop returns the ORIGINAL lhs value even under
@@ -731,11 +723,7 @@ class Evaluator:
             value = "lv"
         else:
             value = self._binop_value(node, "lv", "rv")
-        if isinstance(out_labels, str):
-            labels = [f"{out_labels} AS labels", f"{sig_sql(out_labels)} AS sig"]
-        else:
-            labels = [out_labels.alias("labels"), sig(out_labels).alias("sig")]
-        return VectorResult(project(joined, "t", *labels, f"{value} AS value"))
+        return VectorResult(project(joined, "t", _alias(out_sig, "sig"), f"{value} AS value"))
 
     # ----------------------------------------------------------------- unary
     def eval_unary(self, node: UnaryExpr):
@@ -776,12 +764,7 @@ class Evaluator:
             base, value = Evaluator(ctx).steps_df(), num(float(s.const))
         else:
             base, value = s.df, "value"
-        return base.selectExpr(
-            "t",
-            f"{EMPTY_LABELS} AS labels",
-            f"{sig_sql(EMPTY_LABELS)} AS sig",
-            f"{value} AS value",
-        )
+        return base.selectExpr("t", f"{sig_sql(EMPTY_LABELS)} AS sig", f"{value} AS value")
 
     def _drop_name(
         self,
@@ -796,14 +779,9 @@ class Evaluator:
         input makes both steps no-ops: its series carry no __name__, and
         the proof carries over to the output."""
         if unique is not None:
-            out = df.selectExpr("t", "labels", "sig", f"{value} AS value")
+            out = df.selectExpr("t", "sig", f"{value} AS value")
             return VectorResult(out, unique=unique)
-        out = df.selectExpr(
-            "t",
-            f"{nameless_sql('labels')} AS labels",
-            f"{NAMELESS_SIG} AS sig",
-            f"{value} AS value",
-        )
+        out = df.selectExpr("t", f"{NAMELESS_SIG} AS sig", f"{value} AS value")
         return VectorResult(_assert_one_row_per(out, "sig", _SAME_LABELSET))
 
 
@@ -827,38 +805,15 @@ def _alias(expr: str | Column, name: str) -> str | Column:
 def _aggregate(
     df: DataFrame, gsig: str | Column, aggs: list[str], value: str = "value"
 ) -> DataFrame:
-    """groupBy(t, gsig) with `aggs`, as (t, labels, sig, value), labels
-    rebuilt from the group signature."""
+    """groupBy(t, gsig) with `aggs`, as (t, sig, value), the group
+    signature as the series'."""
     grouped = aggregate(df, ["t", _column(gsig).alias("gsig")], aggs)
-    return grouped.selectExpr(
-        "t", "map_from_entries(gsig) AS labels", "gsig AS sig", f"{value} AS value"
-    )
-
-
-@memo_column
-def _matched_labels(
-    labels: str, keys: tuple[str, ...], on: bool, drop_name: bool
-) -> Column:
-    """The `labels` map restricted to the matching labels `keys` (`on`) or
-    to all others (`ignoring`), without __name__ when `drop_name`."""
-    names = F.array(*[F.lit(k) for k in keys])
-    return F.map_filter(
-        F.col(labels),
-        lambda k, _: (
-            (k != F.lit(NAME_LABEL) if drop_name else F.lit(True))
-            & (F.array_contains(names, k) if on else ~F.array_contains(names, k))
-        ),
-    )
+    return grouped.selectExpr("t", "gsig AS sig", f"{value} AS value")
 
 
 def _relabel(df: DataFrame, labels: Column) -> DataFrame:
-    """`df` with new `labels` and their `sig`, other columns in place."""
-    return df.select(
-        *(
-            labels.alias(c) if c == "labels" else sig(labels).alias(c) if c == "sig" else c
-            for c in df.columns
-        )
-    )
+    """`df` with the `sig` of new `labels`, other columns in place."""
+    return df.select(*(sig(labels).alias(c) if c == "sig" else c for c in df.columns))
 
 
 def assert_rows(df: DataFrame, ok: str, message: str) -> DataFrame:
@@ -878,19 +833,11 @@ def _assert_one_row_per(df: DataFrame, key: str, message: str) -> DataFrame:
     per group, first() is the identity, so passing results are
     bit-identical."""
     cols = df.columns
-    # labels == map_from_entries(sig) by construction; rebuilding it post-agg
-    # keeps the buffers primitive, so the aggregation stays a HashAggregate
-    # (a map-typed first() buffer demotes it to SortAggregate)
-    by_sig = key == "sig"
-    others = [c for c in cols if c not in ("t", key) and not (by_sig and c == "labels")]
+    others = [c for c in cols if c not in ("t", key)]
     grouped = aggregate(
         df, ["t", key], ["count(1) AS __n", *[f"first({c}) AS {c}" for c in others]]
     )
-    out = [
-        "map_from_entries(sig) AS labels" if by_sig and c == "labels" else c
-        for c in cols
-    ]
-    return assert_rows(grouped, "__n <= 1", sql_string(message)).selectExpr(*out)
+    return assert_rows(grouped, "__n <= 1", sql_string(message)).selectExpr(*cols)
 
 
 #: one piece of a Go Regexp.Expand template: `$$`, `${name}`, `$name`, or

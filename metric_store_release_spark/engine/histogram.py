@@ -16,14 +16,15 @@ import math
 
 from pyspark.sql import DataFrame
 
-from metric_store_release_spark.datamodel import NAMELESS_SIG, aggregate, nameless_sql, num
+from metric_store_release_spark.datamodel import NAMELESS_SIG, aggregate, num
 
 
 #: SQL text: the `le` label as a bucket bound
 _LE = (
-    "CASE WHEN labels['le'] IN ('+Inf', 'Inf', 'inf') THEN double('Infinity') "
-    "WHEN labels['le'] IN ('-Inf', '-inf') THEN double('-Infinity') "
-    "ELSE CAST(labels['le'] AS DOUBLE) END"
+    "CASE WHEN map_from_entries(sig)['le'] IN ('+Inf', 'Inf', 'inf') "
+    "THEN double('Infinity') "
+    "WHEN map_from_entries(sig)['le'] IN ('-Inf', '-inf') THEN double('-Infinity') "
+    "ELSE CAST(map_from_entries(sig)['le'] AS DOUBLE) END"
 )
 
 #: coalesce buckets sharing a numeric upper bound — le="0.2" / "2e-1" /
@@ -111,7 +112,7 @@ def _bucket_quantile(q: float) -> str:
 
 
 def histogram_quantile(vector_df: DataFrame, q: float) -> DataFrame:
-    """vector_df: (t, labels, sig, value) of `*_bucket` series with `le`.
+    """vector_df: (t, sig, value) of `*_bucket` series with `le`.
 
     Series lacking an `le` label are skipped, like the reference
     (functions.go:1098-1102 ignores unparsable le as of newer versions; we
@@ -119,36 +120,20 @@ def histogram_quantile(vector_df: DataFrame, q: float) -> DataFrame:
     """
     # group by labels minus `le` ONLY — the metric name stays in the
     # grouping signature (functions.go:1098 BytesWithoutLabels(le)), and is
-    # dropped from the OUTPUT labels below; two same-labeled histograms
+    # dropped from the OUTPUT signature below; two same-labeled histograms
     # under different names then collide post-drop and trip the engine's
     # same-labelset check (histograms.test eval_fail, prometheus#9910)
-    bounded = vector_df.filter(
-        f"labels['le'] IS NOT NULL AND NOT isnan({_LE})"
-    ).selectExpr(
-        "t",
-        "map_filter(labels, (k, v) -> k != 'le') AS labels",
-        "filter(sig, e -> e.key != 'le') AS sig",
-        "value",
-        f"{_LE} AS le",
-    )
+    bounded = vector_df.selectExpr(
+        "t", "filter(sig, e -> e.key != 'le') AS sig", "value", f"{_LE} AS le"
+    ).filter("le IS NOT NULL AND NOT isnan(le)")
     grouped = aggregate(
-        bounded,
-        ["t", "sig"],
-        [
-            "any_value(labels) AS labels",
-            "array_sort(collect_list(struct(le, value))) AS bk",
-        ],
+        bounded, ["t", "sig"], ["array_sort(collect_list(struct(le, value))) AS bk"]
     )
     # the bucket index gets its own projection: the quantile refers to it
     # a dozen times, and each copy inline would be analysed, and evaluated,
     # anew
     return (
-        grouped.selectExpr("t", "sig", "labels", f"{_MONOTONIC} AS bk")
+        grouped.selectExpr("t", "sig", f"{_MONOTONIC} AS bk")
         .selectExpr("*", f"{_bucket_index(q)} AS b")
-        .selectExpr(
-            "t",
-            f"{nameless_sql('labels')} AS labels",
-            f"{NAMELESS_SIG} AS sig",
-            f"{_bucket_quantile(q)} AS value",
-        )
+        .selectExpr("t", f"{NAMELESS_SIG} AS sig", f"{_bucket_quantile(q)} AS value")
     )

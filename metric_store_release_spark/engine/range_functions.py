@@ -28,20 +28,12 @@ def _grouped(
     keep_name: bool = False,
 ) -> DataFrame:
     """groupBy(t, sig) over the window rows with `aggs`, kept where
-    `where` holds, as (t, labels, sig, value): all SQL text.
-
-    labels == map_from_entries(sig) on every frame (base_scan invariant):
-    rebuilding post-agg instead of carrying a map-typed any_value keeps the
-    aggregation buffers primitive, so pure-expression functions get
-    HashAggregate instead of SortAggregate (collect_list-based ones use
-    ObjectHashAggregate either way)"""
+    `where` holds, as (t, sig, value): all SQL text."""
     out = aggregate(frame.df, ["t", "sig"], aggs)
     if where is not None:
         out = out.filter(where)
-    sig = "sig" if keep_name else NAMELESS_SIG
-    return out.selectExpr(
-        "t", f"map_from_entries({sig}) AS labels", f"{sig} AS sig", f"{value} AS value"
-    )
+    sig = "sig" if keep_name else f"{NAMELESS_SIG} AS sig"
+    return out.selectExpr("t", sig, f"{value} AS value")
 
 
 def _simple(agg: str):

@@ -7,8 +7,9 @@ PromQL's four value types (vendor promql/value.go) map to:
   String         → StringResult (literal)
   Instant vector → VectorResult: DataFrame with columns
                       t         long   step timestamp (ms)
-                      labels    map<string,string>  (includes __name__ when set)
-                      sig       array<struct<key,value>>  canonical series id
+                      sig       array<struct<key,value>>  the series'
+                                       identity: its sorted label entries,
+                                       __name__ included when set
                       value     double
                       sample_ts long   original sample timestamp (selectors
                                        only; used by timestamp())
@@ -19,6 +20,9 @@ The step grid is a *column*, not a driver loop: all steps of a range query
 evaluate in one Spark job (the reference iterates steps in
 promql/engine.go:1112-1311 — rangeEval; making t a grouping column is the
 Spark-native equivalent and removes the per-step interpretation overhead).
+
+No plan inside the engine carries a `labels` map: PromQLEngine.query_range
+builds it from `sig` once, in its output projection (t, labels, value).
 """
 
 from __future__ import annotations
@@ -26,8 +30,6 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
-
-VECTOR_COLS = ["t", "labels", "sig", "value"]
 
 
 @dataclass
@@ -58,7 +60,7 @@ class UniqueSeries:
 
 @dataclass
 class VectorResult:
-    df: DataFrame  # t, labels, sig, value [, sample_ts]
+    df: DataFrame  # t, sig, value [, sample_ts]
     #: presentation ordering from a top-level sort()/sort_desc() — carried
     #: separately so the engine can re-assert it after plan additions (e.g.
     #: the admission guard join) that void SQL ordering guarantees

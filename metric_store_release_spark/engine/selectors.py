@@ -21,6 +21,8 @@ every series over the grid.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -39,6 +41,23 @@ from metric_store_release_spark.promql.ast import LabelMatcher, MatchOp, VectorS
 # independently-picked fields (value / stale / prev) could mix rows.
 # FederatedStore._dedup_replicas restores the invariant on the replicated
 # path.
+
+
+#: the places of an RE2 regex where `(?P<` starts no group (a \Q…\E quote,
+#: an escape, a character class), and RE2's named-group opener itself
+_RE2_PIECE = re.compile(
+    r"\\Q.*?(?:\\E|$)|\\.|\[\^?\]?(?:\[:\^?\w+:\]|\\.|[^\]])*\]|(\(\?P<\w+>)", re.S
+)
+
+
+def anchored_regex(regex: str) -> str:
+    """A PromQL (RE2) regex as a fully anchored java.util.regex pattern.
+
+    RE2's named group `(?P<name>` is a syntax error in Java, so it becomes
+    a plain `(`: group numbers stay the same, and label_replace resolves
+    names to numbers itself (evaluator._java_replacement)."""
+    plain = _RE2_PIECE.sub(lambda m: "(" if m.group(1) else m.group(0), regex)
+    return f"^(?:{plain})$"
 
 
 @memo_column
@@ -65,7 +84,7 @@ def matcher_condition(m: LabelMatcher, promoted: frozenset[str] = frozenset()) -
         return target == F.lit(m.value)
     if m.op == MatchOp.NEQ:
         return target != F.lit(m.value)
-    anchored = f"^(?:{m.value})$"
+    anchored = anchored_regex(m.value)
     if m.op == MatchOp.RE:
         return target.rlike(anchored)
     return ~target.rlike(anchored)
@@ -165,7 +184,7 @@ def instant_vector(
     [t - offset - lookback, t - offset]; staleness markers end the series
     (vendor promql/engine.go:1881-1914).
 
-    Returns the VectorResult schema (t, labels, sig, value, sample_ts).
+    Returns the VectorResult schema (t, sig, value, sample_ts).
     """
     off = selector.offset_ms
     if selector.at_ms is not None:
@@ -194,15 +213,14 @@ def instant_vector(
 
 def _pick_latest(points: DataFrame, keys: list[str], grid: list[str]) -> DataFrame:
     """Per `keys` group the latest sample, unless it is a staleness marker,
-    as (t, labels, sig, value, sample_ts); `grid` fans a step-less pick
-    out onto the steps.
+    as (t, sig, value, sample_ts); `grid` fans a step-less pick out onto
+    the steps.
 
     Aggregate PRIMITIVES only (max_by's buffer carries the value expr): a
     struct-of-map buffer forces SortAggregate — two sorts per exchange
-    side — while primitive buffers keep HashAggregate. `labels` is exactly
-    map_from_entries(sig), so it never needs to ride the aggregation.
-    (ts is unique per series by the ingest contract, so the independent
-    max_bys all pick the same sample.)
+    side — while primitive buffers keep HashAggregate. (ts is unique per
+    series by the ingest contract, so the independent max_bys all pick the
+    same sample.)
     """
     latest = aggregate(
         points,
@@ -210,7 +228,7 @@ def _pick_latest(points: DataFrame, keys: list[str], grid: list[str]) -> DataFra
         ["max_by(value, ts) AS value", "max_by(stale, ts) AS stale", "max(ts) AS sample_ts"],
     )
     return latest.filter("NOT coalesce(stale, false)").selectExpr(
-        *(grid or ["t"]), "map_from_entries(sig) AS labels", "sig", "value", "sample_ts"
+        *(grid or ["t"]), "sig", "value", "sample_ts"
     )
 
 

@@ -36,6 +36,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from metric_store_release_spark.datamodel import sig
 from metric_store_release_spark.sources.storage import PARTITION_COL
 
 # no leading underscore: Spark's file listing skips `_`-prefixed dirs when
@@ -378,9 +379,8 @@ def _dedup_replicas(samples: DataFrame) -> DataFrame:
         c for c in samples.columns
         if c not in ("ts", "name", "value", "labels", PARTITION_COL)
     ]
-    sig = F.array_sort(F.map_entries(F.col("labels")))
     deduped = (
-        samples.withColumn("__sig", sig)
+        samples.withColumn("__sig", sig(F.col("labels")))
         .groupBy("ts", "name", "__sig")
         .agg(
             F.max("value").alias("value"),

@@ -17,6 +17,8 @@ from pathlib import Path
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from metric_store_release_spark.datamodel import sig
+
 PARTITION_COL = "date"
 
 
@@ -42,8 +44,6 @@ def dedup_points(points: DataFrame, order_col: str | None = None) -> DataFrame:
     holds downstream. Uniform shuffle on the series key: skew-free at any
     scale because the key includes ts.
     """
-    from metric_store_release_spark.datamodel import sig
-
     win = (
         F.max_by("value", F.struct(F.col(order_col), F.col("value")))
         if order_col
@@ -74,8 +74,6 @@ def dedup_points_stream(points: DataFrame, watermark_delay: str = "1 minute") ->
     values can genuinely differ, route conflicting series through the
     batch pass with an arrival-order column; the streaming pass is for
     the common retransmit case where duplicates are identical."""
-    from metric_store_release_spark.datamodel import sig
-
     # map columns cannot be equality keys — use the canonical sorted-entry
     # signature serialized to JSON as the dedup key
     with_time = points.withColumn(
@@ -208,10 +206,9 @@ def downsample_samples(samples: DataFrame, step_ms: int) -> DataFrame:
     the result per retention tier is how a 100 TB store keeps year-old
     data queryable at 1/N the cost; PromQL evaluates unchanged over the
     downsampled table at coarser step."""
-    sig = F.array_sort(F.map_entries(F.col("labels")))
     bucket = (F.floor(F.col("ts") / step_ms) * step_ms).cast("long")
     return (
-        samples.withColumn("__sig", sig)
+        samples.withColumn("__sig", sig(F.col("labels")))
         .groupBy(bucket.alias("ts"), F.col("name"), F.col("__sig"))
         .agg(
             F.avg("value").alias("avg_value"),
@@ -241,10 +238,9 @@ def redownsample(rollup: DataFrame, step_ms: int) -> DataFrame:
     sum(avg·n)/sum(n) — which equals downsample_samples(raw, step) up to
     float summation order. min/max/count fold losslessly. Same one-hash-
     aggregation shape as downsample_samples."""
-    sig = F.array_sort(F.map_entries(F.col("labels")))
     bucket = (F.floor(F.col("ts") / step_ms) * step_ms).cast("long")
     return (
-        rollup.withColumn("__sig", sig)
+        rollup.withColumn("__sig", sig(F.col("labels")))
         .groupBy(bucket.alias("ts"), F.col("name"), F.col("__sig"))
         .agg(
             (
@@ -399,7 +395,7 @@ def series_signature(labels: Column) -> Column:
     string)."""
     return F.array_join(
         F.transform(
-            F.array_sort(F.map_entries(labels)),
+            sig(labels),
             lambda e: F.concat(e.getField("key"), F.lit("="), e.getField("value")),
         ),
         ",",
@@ -452,7 +448,6 @@ def correlate_series(
         )
     target = ds.filter(tgt_filter).select("ts", F.col("v").alias("__x"))
     joined = ds.join(F.broadcast(target), "ts")
-    sig = F.array_sort(F.map_entries(F.col("labels")))
     # explicit moment sums instead of F.corr: under ANSI mode (Spark 4
     # default) corr() RAISES DIVIDE_BY_ZERO on a zero-variance group; the
     # guarded closed form returns null there instead — and, mirrored
@@ -464,7 +459,7 @@ def correlate_series(
     cov = n * F.col("__svx") - F.col("__sv") * F.col("__sx")
     r = F.when((dv > 0) & (dx > 0), cov / F.sqrt(dv * dx))
     out = (
-        joined.withColumn("__sig", sig)
+        joined.withColumn("__sig", sig(F.col("labels")))
         .groupBy("name", "__sig")
         .agg(
             F.count(F.lit(1)).cast("double").alias("n_buckets"),

@@ -48,25 +48,30 @@ def test_label_replace(engine, spark):
 
 
 @pytest.mark.parametrize(
-    "repl,want",
+    "repl,want,regex",
     [
         # Go Regexp.Expand: an unknown group expands to ""
-        ("a${x}b", "ab"),
+        ("a${x}b", "ab", "(.*)"),
         # the name is the longest word run: group "1x", not group 1 + "x"
-        ("<$1x>", "<>"),
-        ("<${1}x>", "<s1x>"),
-        ("${1}0", "s10"),
-        ("$$1 $$", "$1 $"),
+        ("<$1x>", "<>", "(.*)"),
+        ("<${1}x>", "<s1x>", "(.*)"),
+        ("${1}0", "s10", "(.*)"),
+        ("$$1 $$", "$1 $", "(.*)"),
         # a `$` that starts no reference stays literal
-        ("$-${1", "$-${1"),
-        ("a\\\\b$1", "a\\bs1"),
-        ("$0!", "s1!"),
+        ("$-${1", "$-${1", "(.*)"),
+        ("a\\\\b$1", "a\\bs1", "(.*)"),
+        ("$0!", "s1!", "(.*)"),
+        # RE2 named groups, by name and by number
+        ("$name", "s1", "(?P<name>.*)"),
+        ("<${name}x>", "<s1x>", "(?P<name>.*)"),
+        ("$2-$a", "1-s", "(?P<a>[a-z])(?P<b>[0-9])"),
+        ("${b}", "1", "(s)(?P<b>.*)"),
     ],
 )
-def test_label_replace_go_template(engine, spark, repl, want):
+def test_label_replace_go_template(engine, spark, repl, want, regex):
     df = corpus.load(spark, 5 * MIN, ['testmetric{src="s1"} 0'])
     out = engine.query_instant(
-        df, f'label_replace(testmetric, "dst", "{repl}", "src", "(.*)")', 0
+        df, f'label_replace(testmetric, "dst", "{repl}", "src", "{regex}")', 0
     ).collect()
     assert [r["labels"].get("dst") for r in out] == [want]
 

@@ -1,12 +1,13 @@
 """Structural invariants the physical-plan optimizations rely on.
 
-The engine rebuilds `labels` as map_from_entries(sig) after every hash
-aggregation instead of carrying the map through the aggregation buffer
-(struct/map buffers would demote group-bys to SortAggregate). That is only
-sound while every operator output keeps labels == map_from_entries(sig);
-these tests pin the invariant and the resulting plan shape so a future
-operator that breaks it fails loudly here rather than silently mislabeling
-series.
+Inside the engine a series is identified by `sig` alone, the sorted array
+of its label entries: arrays of structs can be grouped and joined on, and
+they ride aggregation buffers and shuffles where a map cannot. The `labels`
+map is built from `sig` once, in `PromQLEngine.query_range`'s output
+projection. These tests pin that shape (no operator output carries
+`labels`, and every shape's output label sets are the PromQL answer) and
+the plans it gives (hash aggregations only, few exchanges, a small build),
+so an operator that strays from it fails here.
 """
 
 from __future__ import annotations
@@ -32,18 +33,46 @@ SERIES = [
     'http_requests{job="api-server", instance="1", group="canary"} 0+20x10',
     'http_requests{job="app-server", instance="0", group="canary"} 0+30x10',
     'foo{job="api-server"} 0+40x10',
+    'latency_bucket{job="api-server", le="0.5"} 0+1x10',
+    'latency_bucket{job="api-server", le="+Inf"} 0+2x10',
 ]
 
-QUERIES = [
-    'http_requests{job="api-server"}',            # instant selector
-    "rate(http_requests[10m])",                   # range function
-    "sum by (job) (http_requests)",               # aggregation (by)
-    "sum without (instance) (http_requests)",     # aggregation (without)
-    "count_values('v', http_requests)",           # label-injecting agg
-    'label_replace(http_requests, "dst", "$1", "job", "(.*)-server")',
-    "abs(http_requests)",                         # scalar function (name drop)
-    "last_over_time(http_requests[10m])",         # keeps __name__
-]
+_API0 = {"job": "api-server", "instance": "0", "group": "production"}
+_API1 = {"job": "api-server", "instance": "1", "group": "canary"}
+_APP0 = {"job": "app-server", "instance": "0", "group": "canary"}
+_NAMED = {"__name__": "http_requests"}
+
+#: query → its output label sets over SERIES at 10m..40m
+SHAPES = {
+    'http_requests{job="api-server"}': [  # instant selector
+        {**_NAMED, **_API0}, {**_NAMED, **_API1},
+    ],
+    "rate(http_requests[10m])": [_API0, _API1, _APP0],  # range function
+    "sum by (job) (http_requests)": [  # aggregation (by)
+        {"job": "api-server"}, {"job": "app-server"},
+    ],
+    "sum without (instance) (http_requests)": [  # aggregation (without)
+        {"job": "api-server", "group": "production"},
+        {"job": "api-server", "group": "canary"},
+        {"job": "app-server", "group": "canary"},
+    ],
+    "count_values('v', http_requests)": [  # label-injecting aggregation
+        {"v": v} for v in ("20", "40", "60", "80", "120", "160", "180", "240")
+    ],
+    'label_replace(http_requests, "dst", "$1", "job", "(.*)-server")': [
+        {**_NAMED, **_API0, "dst": "api"},
+        {**_NAMED, **_API1, "dst": "api"},
+        {**_NAMED, **_APP0, "dst": "app"},
+    ],
+    "abs(http_requests)": [_API0, _API1, _APP0],  # scalar function (name drop)
+    "last_over_time(http_requests[10m])": [  # keeps __name__
+        {**_NAMED, **_API0}, {**_NAMED, **_API1}, {**_NAMED, **_APP0},
+    ],
+    "histogram_quantile(0.5, latency_bucket)": [{"job": "api-server"}],
+    'http_requests * on (job) group_left (le) latency_bucket{le="+Inf"}': [
+        {**_API0, "le": "+Inf"}, {**_API1, "le": "+Inf"},
+    ],
+}
 
 
 @pytest.fixture(scope="module")
@@ -53,8 +82,8 @@ def samples(spark):
     return df
 
 
-@pytest.mark.parametrize("query", QUERIES)
-def test_labels_match_sig(spark, samples, query):
+@pytest.mark.parametrize("query", SHAPES)
+def test_vectors_carry_sig_only(spark, samples, query):
     ctx = EvalContext(
         spark=spark,
         samples=samples,
@@ -67,12 +96,17 @@ def test_labels_match_sig(spark, samples, query):
     )
     res = Evaluator(ctx).eval(parse(query))
     assert isinstance(res, VectorResult)
-    rows = res.df.select("labels", "sig").collect()
-    assert rows, f"no output rows for {query!r}"
-    for r in rows:
-        assert dict(r["labels"]) == {e["key"]: e["value"] for e in r["sig"]}, (
-            f"labels/sig diverged for {query!r}: {r}"
-        )
+    assert "sig" in res.df.columns
+    assert "labels" not in res.df.columns, res.df.columns
+
+
+@pytest.mark.parametrize("query", SHAPES)
+def test_output_label_sets(spark, samples, query):
+    eng = PromQLEngine(spark, EngineConfig(lookback_ms=6 * MIN))
+    out = eng.query_range(samples, query, 10 * MIN, 40 * MIN, 10 * MIN)
+    assert out.columns == ["t", "labels", "value"]
+    got = {frozenset(r["labels"].items()) for r in out.collect()}
+    assert got == {frozenset(ls.items()) for ls in SHAPES[query]}
 
 
 def test_explode_labels_projection(spark, samples):

@@ -1,4 +1,5 @@
-"""Exposition parser, sanitization, label truncation, sig collision-freedom."""
+"""Exposition parser, sanitization, label truncation, sig collision-freedom,
+and `datamodel.sig` as the one signature of the storage and API paths."""
 
 from __future__ import annotations
 
@@ -6,14 +7,18 @@ import math
 
 import pytest
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from metric_store_release_spark import api
 from metric_store_release_spark.datamodel import (
+    SAMPLES_SCHEMA,
     sanitize_label_name,
     sanitize_metric_name,
     sig,
     truncate_label_values,
 )
+from metric_store_release_spark.sources import federation, storage
 
 
 def test_parse_exposition(spark, engine):
@@ -107,6 +112,50 @@ def test_sig_is_array_sort_order_without_lambda(spark):
     assert rows[3]["s"] == []
     expr = df.select(sig(F.col("labels")))._jdf.queryExecution().analyzed().toString()
     assert "lambdafunction" not in expr, expr
+
+
+#: functions outside the engine that key series by their signature: name →
+#: call over a samples frame, returning a DataFrame or collecting its own
+SERIES_USERS = {
+    "downsample_samples": lambda s: storage.downsample_samples(s, 60_000),
+    "redownsample": lambda s: storage.redownsample(
+        storage.downsample_samples(s, 60_000), 120_000
+    ),
+    "correlate_series": lambda s: storage.correlate_series(
+        s, "m", {"a": "1"}, step_ms=60_000, min_points=1
+    ),
+    "series_signature": lambda s: s.select(storage.series_signature(F.col("labels"))),
+    "_dedup_replicas": federation._dedup_replicas,
+    "api.series": lambda s: api.series(s, ["m"]),
+}
+
+
+@pytest.mark.parametrize("name", SERIES_USERS)
+def test_series_signature_users_plan_no_array_sort(spark, monkeypatch, name):
+    """They build the signature with `datamodel.sig`: no `array_sort`, whose
+    default comparator is a lambda, in the plans they analyse."""
+    rows = [
+        (ts, "m", float(ts // 60_000), {"b": "2", "a": a}, False)
+        for ts in (0, 60_000, 120_000)
+        for a in ("1", "2")
+    ]
+    samples = spark.createDataFrame(rows, SAMPLES_SCHEMA)
+    plans = []
+    cls = type(samples)
+    collect = cls.collect
+
+    def recording_collect(self):
+        plans.append(self._jdf.queryExecution().analyzed().toString())
+        return collect(self)
+
+    monkeypatch.setattr(cls, "collect", recording_collect)
+    out = SERIES_USERS[name](samples)
+    if isinstance(out, DataFrame):
+        plans.append(out._jdf.queryExecution().analyzed().toString())
+    assert plans
+    for plan in plans:
+        assert "array_sort(" not in plan, plan
+        assert "sort_array(" in plan, plan
 
 
 def test_parse_point_lines(spark, engine):

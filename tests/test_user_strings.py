@@ -137,3 +137,50 @@ def test_on_matching(engine, samples):
         ls, v = _m(i, unit="u")
         want.add((tuple(x for x in ls if x[0] != "__name__"), v * 10 * (i + 1)))
     assert got == want
+
+
+#: label values made of the pieces of RE2's named-group opener `(?P<`
+GROUP_VALUES = ["P<x>", "(P<x>", "(?P<x>", "(", "?", "P", "x", "it's"]
+
+#: RE2 regexes with named groups, and controls where `(?P<` opens no group
+NAMED_GROUPS = [
+    "(?P<g>it's)",
+    "(?P<g>P)<(?P<h>x)>",
+    "\\((?P<g>\\?)P<x>",
+    "\\(?P<x>",  # an optional literal `(`, then "P<x>"
+    "[(?P<x>]",  # one character of the class
+]
+
+
+@pytest.fixture(scope="module")
+def groups(spark):
+    rows = [(T - MIN, "g", 1.0, {"k": v}, False) for v in GROUP_VALUES]
+    df = spark.createDataFrame(rows, SAMPLES_SCHEMA)
+    df.cache().count()
+    return df
+
+
+@pytest.mark.parametrize("pattern", NAMED_GROUPS)
+def test_named_group_matchers(engine, groups, pattern):
+    """Python's `re` reads these patterns as RE2 does."""
+    def matched(query):
+        out = engine.query_instant(groups, query, T).collect()
+        return {r["labels"]["k"] for r in out}
+
+    want = {v for v in GROUP_VALUES if re.fullmatch(pattern, v)}
+    assert want
+    assert matched(f"g{{k=~{_quote(pattern)}}}") == want
+    assert matched(f"g{{k!~{_quote(pattern)}}}") == set(GROUP_VALUES) - want
+
+
+@pytest.mark.parametrize("pattern", NAMED_GROUPS)
+def test_named_group_label_replace(engine, groups, pattern):
+    query = f'label_replace(g, "dst", "<$1>", "k", {_quote(pattern)})'
+    out = engine.query_instant(groups, query, T).collect()
+    got = {r["labels"]["k"]: r["labels"].get("dst") for r in out}
+    want = {}
+    for v in GROUP_VALUES:
+        m = re.fullmatch(pattern, v)
+        want[v] = f"<{(m.group(1) if m.re.groups else None) or ''}>" if m else None
+    assert got == want
+
