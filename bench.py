@@ -350,11 +350,11 @@ def main() -> None:
                 timings[name].append(took)
                 print(f"# run{r + 1} {name}: {took}s ({n} rows)", file=sys.stderr)
 
-    # streaming micro-batch ingest throughput: points/s
-    # through nozzle→rollup→sink vs the reference's batch envelope
-    # (>=64 points per 500 ms micro-batch = 128 points/s, BASELINE.md /
-    # ingressclient.go:15-17). Measured once — trigger cadence, not JVM
-    # warm-up, dominates; the envelope check is the point.
+    # streaming micro-batch ingest throughput: points/s through
+    # `ingest_stream` (gauges, counters, timer rollups) vs the reference's
+    # batch envelope (>=64 points per 500 ms micro-batch = 128 points/s,
+    # BASELINE.md / ingressclient.go:15-17). Measured once — trigger
+    # cadence, not JVM warm-up, dominates; the envelope check is the point.
     from metric_store_release_spark.streaming.ingest_bench import (
         measure_ingest_throughput,
     )

@@ -24,7 +24,7 @@ _LE = (
     "CASE WHEN map_from_entries(sig)['le'] IN ('+Inf', 'Inf', 'inf') "
     "THEN double('Infinity') "
     "WHEN map_from_entries(sig)['le'] IN ('-Inf', '-inf') THEN double('-Infinity') "
-    "ELSE CAST(map_from_entries(sig)['le'] AS DOUBLE) END"
+    "ELSE TRY_CAST(map_from_entries(sig)['le'] AS DOUBLE) END"
 )
 
 #: coalesce buckets sharing a numeric upper bound — le="0.2" / "2e-1" /
@@ -114,9 +114,8 @@ def _bucket_quantile(q: float) -> str:
 def histogram_quantile(vector_df: DataFrame, q: float) -> DataFrame:
     """vector_df: (t, sig, value) of `*_bucket` series with `le`.
 
-    Series lacking an `le` label are skipped, like the reference
-    (functions.go:1098-1102 ignores unparsable le as of newer versions; we
-    require a parsable le).
+    Series lacking an `le` label, or whose `le` does not parse, are
+    skipped, like the reference (functions.go:1098-1102).
     """
     # group by labels minus `le` ONLY — the metric name stays in the
     # grouping signature (functions.go:1098 BytesWithoutLabels(le)), and is

@@ -1,14 +1,18 @@
-"""Streaming ingest throughput probe: nozzle → rollup → sink points/s.
+"""Streaming ingest throughput probe: `ingest_stream` points/s.
 
 BASELINE.md derives the reference's ingest envelope from its client-side
 batching: >=64 points per 500 ms micro-batch (ingressclient.go:15-17, the
 BATCH_SIZE/BATCH_INTERVAL pair) = 128 points/s sustained per nozzle. This
-module drives the repo's actual streaming path — file-source envelope
-stream with maxFilesPerTrigger backpressure, envelopes→points conversion,
-timer→counter rollup, parquet shard sink — over a deterministic synthetic
-envelope corpus and measures end-to-end points/s, so the bench records
-whether the Spark pipeline clears the reference's envelope (it should by
-orders of magnitude; the number is the evidence).
+module times `nozzle.ingest_stream`, the stream a deployment runs —
+file-source envelope stream with maxFilesPerTrigger backpressure, gauge and
+counter conversion, the `http_total` counter rollup and the
+`http_duration_seconds_{bucket,count,sum}` histogram rollup, parquet shard
+sink — over a deterministic synthetic envelope corpus and measures
+end-to-end points/s, so the bench records whether the Spark pipeline
+clears the reference's envelope (it should by orders of magnitude; the
+number is the evidence). Histogram points count: each timer series
+yields 14 per 10 s window, so figures are not comparable with runs that
+timed gauges, counters and `http_total` alone.
 
 Everything here is measurement harness, not engine: the operators under
 test live in streaming/nozzle.py, streaming/rollup.py, sources/storage.py.
@@ -66,50 +70,25 @@ def measure_ingest_throughput(
     n_files: int = 32,
     max_files_per_trigger: int = 4,
 ) -> dict:
-    """Run the nozzle→rollup→sink pipeline as a real StreamingQuery over
-    the synthetic corpus and return {"points_per_sec", "batches",
-    "points", "wall_sec"}.
+    """Run `nozzle.ingest_stream` over the synthetic corpus and return
+    {"points_per_sec", "batches", "points", "wall_sec"}.
 
-    Timed region: stream start → completion (availableNow drains every
-    file through `max_files_per_trigger`-sized micro-batches). Corpus
-    generation is untimed input setup. Each micro-batch converts
-    envelopes to points (gauges+counters), rolls timers up into the
-    10 s `http_total` counter, and appends both to a parquet shard sink
-    — the same operators the streaming entry points use.
+    Timed region: stream start → `awaitTermination()` (availableNow drains
+    every file through `max_files_per_trigger`-sized micro-batches). Corpus
+    generation is untimed input setup; the points are counted in the sink
+    afterwards.
     """
-    from metric_store_release_spark.sources.storage import write_samples
-    from metric_store_release_spark.streaming.nozzle import (
-        ENVELOPE_SCHEMA,
-        envelopes_to_points,
-    )
-    from metric_store_release_spark.streaming.rollup import rollup_counters
+    from metric_store_release_spark.streaming.nozzle import ingest_stream
 
     tmp = tempfile.mkdtemp(prefix="msr_ingest_bench_")
     env_dir = f"{tmp}/envelopes"
     sink = f"{tmp}/sink"
-    ckpt = f"{tmp}/ckpt"
     try:
         generate_envelopes(spark, env_dir, n_envelopes, n_files)
-
-        # row accounting happens once at the end (count the sink), so the
-        # per-batch work is exactly convert → rollup → append
-        def emit(batch, batch_id: int) -> None:
-            points = envelopes_to_points(batch).unionByName(
-                rollup_counters(batch).select("ts", "name", "value", "labels")
-            )
-            write_samples(points, sink)
-
-        stream = (
-            spark.readStream.schema(ENVELOPE_SCHEMA)
-            .option("maxFilesPerTrigger", str(max_files_per_trigger))
-            .parquet(env_dir)
-        )
         t0 = time.perf_counter()
-        q = (
-            stream.writeStream.foreachBatch(emit)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        q = ingest_stream(
+            spark, env_dir, sink, f"{tmp}/ckpt",
+            max_files_per_trigger=max_files_per_trigger,
         )
         q.awaitTermination()
         wall = time.perf_counter() - t0

@@ -4,8 +4,11 @@ The reference consumes Loggregator envelopes (gauges, counters, timers) and
 converts them to storage points (nozzle.go:230-400). Here envelopes are rows
 of a DataFrame — batch or Structured Streaming, the same transformations
 apply (micro-batches stand in for the reference's 500 ms / 32 KiB batching,
-batcher.go:10-60; backpressure is the source's maxOffsetsPerTrigger instead
-of drop-on-overflow diodes, nozzle.go:93-101).
+batcher.go:10-60). `envelopes_to_samples` is the one ingest rule: gauges and
+counters converted, HTTP timers rolled up (streaming/rollup.py).
+`ingest_stream` is the ingest entry point; its backpressure is both the
+source's `maxFilesPerTrigger` (the maxOffsetsPerTrigger analog) and the
+drop-oldest diode `load_shed` (nozzle.go:93-101).
 
 Envelope schema (one row per envelope):
 
@@ -36,6 +39,10 @@ from pyspark.sql.types import (
 from metric_store_release_spark.datamodel import (
     sanitize_metric_name,
     truncate_label_values,
+)
+from metric_store_release_spark.streaming.rollup import (
+    rollup_counters,
+    rollup_histograms,
 )
 
 ENVELOPE_SCHEMA = StructType(
@@ -116,8 +123,20 @@ def counters_to_points(envelopes: DataFrame) -> DataFrame:
 
 
 def envelopes_to_points(envelopes: DataFrame) -> DataFrame:
-    """Gauges + counters (timers go through the rollup pipeline instead)."""
+    """Gauges + counters only; `envelopes_to_samples` adds the timer
+    rollups."""
     return gauges_to_points(envelopes).unionByName(counters_to_points(envelopes))
+
+
+def envelopes_to_samples(envelopes: DataFrame) -> DataFrame:
+    """Every stored sample an envelope batch yields, as (ts, name, value,
+    labels): gauges and counters, plus the HTTP timer rollups `http_total`
+    and `http_duration_seconds_{bucket,count,sum}` (nozzle.go:230-400)."""
+    return (
+        envelopes_to_points(envelopes)
+        .unionByName(rollup_counters(envelopes))
+        .unionByName(rollup_histograms(envelopes))
+    )
 
 
 class NozzleMetrics:
@@ -147,7 +166,7 @@ def load_shed(
     return kept
 
 
-def nozzle_stream(
+def ingest_stream(
     spark,
     envelope_dir: str,
     out_path: str,
@@ -156,12 +175,12 @@ def nozzle_stream(
     shed_above_rows: int | None = None,
     metrics: NozzleMetrics | None = None,
 ):
-    """File-source envelope stream → points → shard store, with enforced
-    backpressure: `maxFilesPerTrigger` bounds how much each micro-batch
-    admits (the maxOffsetsPerTrigger analog for the file source), and
-    `shed_above_rows` drops the oldest envelopes beyond the cap inside
-    each batch, counting drops (the nozzle's diode alert). Returns the
-    started StreamingQuery."""
+    """File-source envelope stream → `envelopes_to_samples` → shard store,
+    with enforced backpressure: `maxFilesPerTrigger` bounds how much each
+    micro-batch admits (the maxOffsetsPerTrigger analog for the file
+    source), and `shed_above_rows` drops the oldest envelopes beyond the
+    cap inside each batch, counting drops (the nozzle's diode alert).
+    Returns the started StreamingQuery."""
     envelopes = (
         spark.readStream.schema(ENVELOPE_SCHEMA)
         .option("maxFilesPerTrigger", str(max_files_per_trigger))
@@ -175,7 +194,7 @@ def nozzle_stream(
             batch = load_shed(batch, shed_above_rows, metrics)
         elif metrics is not None:
             metrics.ingressed_envelopes_total += batch.count()
-        write_samples(envelopes_to_points(batch), out_path)
+        write_samples(envelopes_to_samples(batch), out_path)
 
     return (
         envelopes.writeStream.foreachBatch(emit)

@@ -13,10 +13,9 @@ from pyspark.sql import functions as F
 
 from metric_store_release_spark import EngineConfig, PromQLEngine
 from metric_store_release_spark.sources.storage import read_samples, write_samples
-from metric_store_release_spark.streaming.nozzle import ENVELOPE_SCHEMA
-from metric_store_release_spark.streaming.rollup import (
-    rollup_counters,
-    rollup_histograms,
+from metric_store_release_spark.streaming.nozzle import (
+    ENVELOPE_SCHEMA,
+    envelopes_to_samples,
 )
 
 NS = 1_000_000_000
@@ -68,7 +67,7 @@ def test_full_pipeline_federated(spark, tmp_path):
 
     envelopes = _mk_envelopes(spark)
     engine = PromQLEngine(spark, EngineConfig(lookback_ms=60_000))
-    pts = rollup_counters(envelopes).unionByName(rollup_histograms(envelopes))
+    pts = envelopes_to_samples(envelopes)
     fed = FederatedStore(spark, str(tmp_path / "cluster"), n_nodes=3,
                          replication_factor=2)
     down = fed.table.lookup("http_total")[0]
@@ -94,8 +93,8 @@ def test_full_pipeline(spark):
     engine = PromQLEngine(spark, EngineConfig(lookback_ms=60_000))
 
     with tempfile.TemporaryDirectory() as store:
-        # ingest: rollups → date-partitioned shard store
-        pts = rollup_counters(envelopes).unionByName(rollup_histograms(envelopes))
+        # ingest: envelopes → samples → date-partitioned shard store
+        pts = envelopes_to_samples(envelopes)
         write_samples(pts, store)
         samples = read_samples(spark, store)
 

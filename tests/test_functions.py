@@ -227,6 +227,18 @@ def test_histogram_quantile(engine, spark):
     assert got[(50 * MIN, "positive")] == math.inf
 
 
+def test_histogram_quantile_skips_unparsable_le(engine, spark):
+    """A bucket whose `le` does not parse is skipped, not an error
+    (functions.go: a ParseFloat failure drops the sample)."""
+    buckets = ['h_bucket{le="0.5"} 5', 'h_bucket{le="+Inf"} 10']
+    q = "histogram_quantile(0.5, h_bucket)"
+    with_bad = corpus.load(spark, 5 * MIN, buckets + ['h_bucket{le="abc"} 7'])
+    without = corpus.load(spark, 5 * MIN, buckets)
+    got = rows_to_dict(engine.query_instant(with_bad, q, 0), [])
+    assert got == rows_to_dict(engine.query_instant(without, q, 0), [])
+    assert got == {(0,): pytest.approx(0.5)}
+
+
 def test_histogram_quantile_of_rate(engine, spark):
     df = corpus.load(spark, 5 * MIN, HIST)
     got = rows_to_dict(

@@ -184,14 +184,14 @@ def test_gauge_and_counter_conversion(spark):
     assert by_name["_2bad_name"]["value"] == 42.0
 
 
-def test_nozzle_stream_backpressure_and_shed(spark):
+def test_ingest_stream_backpressure_and_shed(spark):
     """maxFilesPerTrigger bounds each micro-batch; load_shed drops the
     oldest envelopes over the cap and counts them (diode analog)."""
     import os
 
     from metric_store_release_spark.streaming.nozzle import (
         NozzleMetrics,
-        nozzle_stream,
+        ingest_stream,
     )
 
     with tempfile.TemporaryDirectory() as tmp:
@@ -208,7 +208,7 @@ def test_nozzle_stream_backpressure_and_shed(spark):
                 "append"
             ).parquet(src)
         metrics = NozzleMetrics()
-        q = nozzle_stream(
+        q = ingest_stream(
             spark, src, out, ckpt,
             max_files_per_trigger=1, shed_above_rows=3, metrics=metrics,
         )
@@ -224,6 +224,81 @@ def test_nozzle_stream_backpressure_and_shed(spark):
         kept_ts_ms = {r["ts"] for r in got.select("ts").collect()}
         for f in range(3):
             assert 100 * f * 1000 not in kept_ts_ms
+
+
+def test_ingest_stream_stores_every_sample(spark, timer_envelopes):
+    """One stream over one envelope directory stores the gauge and counter
+    points and every timer rollup — exactly `envelopes_to_samples` over
+    the same envelopes as a batch."""
+    import os
+
+    from metric_store_release_spark.sources.storage import read_samples
+    from metric_store_release_spark.streaming.nozzle import (
+        envelopes_to_samples,
+        ingest_stream,
+    )
+
+    others = spark.createDataFrame(
+        [
+            env_row(4, "gauge", source_id="app-1",
+                    gauges={"cpu": {"unit": "percent", "value": 12.5}}),
+            env_row(7, "counter", source_id="app-1", name="requests",
+                    total=42.0),
+        ],
+        ENVELOPE_SCHEMA,
+    )
+    envelopes = timer_envelopes.unionByName(others)
+
+    def rows(df):
+        return sorted(
+            (r["ts"], r["name"], tuple(sorted(r["labels"].items())), r["value"])
+            for r in df.select("ts", "name", "labels", "value").collect()
+        )
+
+    with tempfile.TemporaryDirectory() as tmp:
+        src = os.path.join(tmp, "src")
+        out = os.path.join(tmp, "out")
+        envelopes.coalesce(1).write.parquet(src)
+        ingest_stream(spark, src, out, os.path.join(tmp, "ckpt")).awaitTermination(120)
+        got = rows(read_samples(spark, out))
+
+    assert {name for _, name, _, _ in got} == {
+        "cpu",
+        "requests",
+        "http_total",
+        "http_duration_seconds_bucket",
+        "http_duration_seconds_count",
+        "http_duration_seconds_sum",
+    }
+    assert got == rows(envelopes_to_samples(envelopes))
+
+
+def test_envelopes_to_points_leaves_timers_to_the_rollups(spark, timer_envelopes):
+    """`envelopes_to_points` converts gauges and counters only: callers
+    that union the rollups onto it themselves (perfbench's `to_points`)
+    would otherwise store every rollup point twice. `envelopes_to_samples`
+    adds each rollup once, so it keeps one row per (series, ts)."""
+    from metric_store_release_spark.streaming.nozzle import envelopes_to_samples
+
+    envelopes = timer_envelopes.unionByName(
+        spark.createDataFrame(
+            [env_row(7, "counter", source_id="app-1", name="requests", total=42.0)],
+            ENVELOPE_SCHEMA,
+        )
+    )
+    points = envelopes_to_points(envelopes).collect()
+    assert {r["name"] for r in points} == {"requests"}
+
+    samples = envelopes_to_samples(envelopes)
+    keys = [
+        (r["name"], tuple(sorted(r["labels"].items())), r["ts"])
+        for r in samples.collect()
+    ]
+    assert len(keys) == len(set(keys))
+    n_rollups = (
+        rollup_counters(envelopes).count() + rollup_histograms(envelopes).count()
+    )
+    assert len(keys) == len(points) + n_rollups
 
 
 def test_load_shed_under_cap_is_noop(spark):
@@ -242,144 +317,18 @@ def test_load_shed_under_cap_is_noop(spark):
     assert m.dropped_envelopes_total == 0 and m.ingressed_envelopes_total == 5
 
 
-def test_stateful_rollup_accumulates_across_batches(spark):
-    """applyInPandasWithState keeps the running total across micro-batches
-    (counter.go's persistent counters map) — no reset at batch boundaries."""
-    import os
-    import time as _time
-
-    from metric_store_release_spark.streaming.nozzle import ENVELOPE_SCHEMA
-    from metric_store_release_spark.streaming.rollup import (
-        stateful_rollup_stream,
-    )
-
-    with tempfile.TemporaryDirectory() as tmp:
-        src = os.path.join(tmp, "src")
-        out = os.path.join(tmp, "out")
-        ckpt = os.path.join(tmp, "ckpt")
-        mk = lambda ts_s: env_row(
-            ts_s, "timer", name="http", start=0, stop=5_000_000,
-            tags={"status_code": "200", "app_id": "A"},
-        )
-        # window [0,10s): 3 timers — first file/batch
-        spark.createDataFrame([mk(1), mk(2), mk(3)], ENVELOPE_SCHEMA).coalesce(
-            1
-        ).write.mode("append").parquet(src)
-        _time.sleep(1.1)  # file-source ordering is by mod time
-        # window [10,20s): 1 timer — second file/batch
-        spark.createDataFrame([mk(11)], ENVELOPE_SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        envelopes = (
-            spark.readStream.schema(ENVELOPE_SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        q = stateful_rollup_stream(envelopes, out, ckpt)
-        q.awaitTermination(120)
-        from metric_store_release_spark.sources.storage import read_samples
-
-        got = read_samples(spark, out).filter(F.col("name") == "http_total")
-        vals = {r["ts"]: r["value"] for r in got.collect()}
-        # second batch's emission continues from 3 — NOT a reset to 1
-        assert vals == {10_000: 3.0, 20_000: 4.0}
-        labels = got.first()["labels"]
-        assert labels["app_id"] == "A" and labels["source_id"] == "gorouter"
-
-
-def test_stateful_rollup_late_event_stays_monotone(spark):
-    """A late envelope for an already-emitted window must NOT rewrite that
-    window with the tail-inflated running total (which would read as a
-    counter reset at the later window). The late count reaches the total,
-    emitted at the max already-emitted window."""
-    import os
-    import time as _time
-
-    from metric_store_release_spark.streaming.nozzle import ENVELOPE_SCHEMA
-    from metric_store_release_spark.streaming.rollup import (
-        stateful_rollup_stream,
-    )
-
-    with tempfile.TemporaryDirectory() as tmp:
-        src = os.path.join(tmp, "src")
-        out = os.path.join(tmp, "out")
-        ckpt = os.path.join(tmp, "ckpt")
-        mk = lambda ts_s: env_row(
-            ts_s, "timer", name="http", start=0, stop=5_000_000,
-            tags={"status_code": "200", "app_id": "A"},
-        )
-        # batch 1: windows [0,10s)=3 and [10,20s)=1 → emits w10k=3, w20k=4
-        spark.createDataFrame(
-            [mk(1), mk(2), mk(3), mk(11)], ENVELOPE_SCHEMA
-        ).coalesce(1).write.mode("append").parquet(src)
-        _time.sleep(1.1)
-        # batch 2: LATE event for window [0,10s)
-        spark.createDataFrame([mk(4)], ENVELOPE_SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        envelopes = (
-            spark.readStream.schema(ENVELOPE_SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        q = stateful_rollup_stream(envelopes, out, ckpt)
-        q.awaitTermination(120)
-        from metric_store_release_spark.sources.storage import read_samples
-
-        got = read_samples(spark, out).filter(F.col("name") == "http_total")
-        by_ts: dict[int, list[float]] = {}
-        for r in got.collect():
-            by_ts.setdefault(r["ts"], []).append(r["value"])
-        # the late count lands at the max emitted window (last write wins),
-        # never back at 10s: the as-of series stays monotone
-        assert by_ts[10_000] == [3.0]
-        assert sorted(by_ts[20_000]) == [4.0, 5.0]
-
-
-def test_stateful_rollup_matches_batch_rollup_single_batch(spark, timer_envelopes):
-    """On one batch the stateful op emits exactly rollup_counters' output."""
-    import os
-
-    from metric_store_release_spark.streaming.nozzle import ENVELOPE_SCHEMA
-    from metric_store_release_spark.streaming.rollup import (
-        rollup_counters,
-        stateful_rollup_stream,
-    )
-
-    with tempfile.TemporaryDirectory() as tmp:
-        src = os.path.join(tmp, "src")
-        out = os.path.join(tmp, "out")
-        ckpt = os.path.join(tmp, "ckpt")
-        timer_envelopes.write.parquet(src)
-        envelopes = spark.readStream.schema(ENVELOPE_SCHEMA).parquet(src)
-        q = stateful_rollup_stream(envelopes, out, ckpt)
-        q.awaitTermination(120)
-        from metric_store_release_spark.sources.storage import read_samples
-
-        def keyed(df):
-            return {
-                (r["ts"], tuple(sorted(r["labels"].items()))): r["value"]
-                for r in df.collect()
-            }
-
-        got = keyed(read_samples(spark, out))
-        want = keyed(rollup_counters(timer_envelopes))
-        assert got == want
-
-
-def test_rollup_streaming_availablenow(spark, timer_envelopes):
+def test_ingest_stream_rolls_up_timers(spark, timer_envelopes):
     """The same rollup code runs under Structured Streaming."""
     import os
 
+    from metric_store_release_spark.streaming.nozzle import ingest_stream
+
     with tempfile.TemporaryDirectory() as tmp:
         src = os.path.join(tmp, "src")
         out = os.path.join(tmp, "out")
         ckpt = os.path.join(tmp, "ckpt")
         timer_envelopes.write.parquet(src)
-        stream = spark.readStream.schema(ENVELOPE_SCHEMA).parquet(src)
-        from metric_store_release_spark.streaming.rollup import rollup_stream
-
-        q = rollup_stream(stream, out, ckpt)
+        q = ingest_stream(spark, src, out, ckpt)
         q.awaitTermination(120)
         from metric_store_release_spark.sources.storage import read_samples
 
@@ -657,7 +606,7 @@ def test_streaming_checkpoint_restart_exactly_once(spark, tmp_path):
 
 
 def test_ingest_throughput_beats_reference_envelope(spark):
-    """The end-to-end nozzle->rollup->sink streaming path must sustain more
+    """The end-to-end `ingest_stream` path must sustain more
     than the reference's client batching envelope of 128 points/s
     (>=64 points per 500 ms micro-batch, ingressclient.go:15-17 via
     BASELINE.md) — on a small corpus so the test stays quick; bench.py
