@@ -200,6 +200,12 @@ def _sig_subset(keys: tuple[str, ...], keep: bool, drop_name: bool, col: str) ->
     return F.filter(F.col(col), lambda e: ~F.array_contains(names, e["key"]))
 
 
+#: characters a metric name may not hold (point_translator.go:48-72), and
+#: the leading digit that gets a '_' prefix; both forms of the rule use these
+_METRIC_NAME_INVALID = "[^a-zA-Z0-9_:]"
+_LEADING_DIGIT = "^([0-9])"
+
+
 def sanitize_metric_name(col: Column) -> Column:
     """PromQL charset sanitization ([a-zA-Z_:][a-zA-Z0-9_:]*).
 
@@ -207,10 +213,8 @@ def sanitize_metric_name(col: Column) -> Column:
     (src/pkg/persistence/transform/point_translator.go:48-72): every invalid
     char becomes '_', and a leading digit is prefixed with '_'.
     """
-    cleaned = F.regexp_replace(col, r"[^a-zA-Z0-9_:]", "_")
-    return F.when(cleaned.rlike(r"^[0-9]"), F.concat(F.lit("_"), cleaned)).otherwise(
-        cleaned
-    )
+    cleaned = F.regexp_replace(col, _METRIC_NAME_INVALID, "_")
+    return F.regexp_replace(cleaned, _LEADING_DIGIT, "_$1")
 
 
 def sanitize_label_name(col: Column) -> Column:
@@ -228,3 +232,16 @@ def sanitize_label_name(col: Column) -> Column:
 def truncate_label_values(labels: Column, limit: int = LABEL_TRUNCATION_LENGTH) -> Column:
     """Truncate label values (appender.go:44,126-138)."""
     return F.transform_values(labels, lambda _, v: F.substring(v, 1, limit))
+
+
+def sanitize_metric_name_sql(name: str) -> str:
+    """`sanitize_metric_name` as SQL text over the SQL text of a name."""
+    return (
+        f"regexp_replace(regexp_replace({name}, '{_METRIC_NAME_INVALID}', '_'), "
+        f"'{_LEADING_DIGIT}', '_$1')"
+    )
+
+
+def truncate_label_values_sql(labels: str) -> str:
+    """`truncate_label_values` as SQL text over the SQL text of a label map."""
+    return f"transform_values({labels}, (k, v) -> substring(v, 1, {LABEL_TRUNCATION_LENGTH}))"

@@ -5,7 +5,12 @@ converts them to storage points (nozzle.go:230-400). Here envelopes are rows
 of a DataFrame — batch or Structured Streaming, the same transformations
 apply (micro-batches stand in for the reference's 500 ms / 32 KiB batching,
 batcher.go:10-60). `envelopes_to_samples` is the one ingest rule: gauges and
-counters converted, HTTP timers rolled up (streaming/rollup.py).
+counters converted, HTTP timers rolled up (streaming/rollup.py). It is
+three plan branches over one batch, each written as SQL text: the points
+(one projection that explodes each envelope's gauge entries or counter
+total), the `http_total` rollup and the histogram rollup. Each branch
+reads the batch once, so a small batch is written as one file per branch
+and date.
 `ingest_stream` is the ingest entry point; its backpressure is both the
 source's `maxFilesPerTrigger` (the maxOffsetsPerTrigger analog) and the
 drop-oldest diode `load_shed` (nozzle.go:93-101).
@@ -37,10 +42,11 @@ from pyspark.sql.types import (
 )
 
 from metric_store_release_spark.datamodel import (
-    sanitize_metric_name,
-    truncate_label_values,
+    sanitize_metric_name_sql,
+    truncate_label_values_sql,
 )
 from metric_store_release_spark.streaming.rollup import (
+    ENVELOPE_TS_MS,
     rollup_counters,
     rollup_histograms,
 )
@@ -72,60 +78,48 @@ ENVELOPE_SCHEMA = StructType(
 )
 
 
-def _finite(value):
-    return ~F.isnan(value) & (value != float("inf")) & (value != float("-inf"))
-
-
-def gauges_to_points(envelopes: DataFrame) -> DataFrame:
-    """One point per gauge metric (nozzle.go:346-376): labels = tags +
-    source_id + unit; NaN/Inf rejected (transform.IsValidFloat,
-    point_translator.go:99-101)."""
-    g = envelopes.filter(F.col("type") == "gauge").select(
-        (F.col("ts") / 1_000_000).cast("long").alias("ts"),
-        "source_id",
-        "tags",
-        F.explode("gauges").alias("gname", "g"),
-    )
-    labels = F.map_concat(
-        F.map_filter(
-            F.coalesce(F.col("tags"), F.expr("map()")),
-            lambda k, _: ~k.isin("source_id", "unit"),
-        ),
-        F.create_map(F.lit("source_id"), F.col("source_id")),
-        F.map_filter(
-            F.create_map(F.lit("unit"), F.col("g.unit")), lambda _, v: v.isNotNull()
-        ),
-    )
-    return g.filter(_finite(F.col("g.value"))).select(
-        "ts",
-        sanitize_metric_name(F.col("gname")).alias("name"),
-        F.col("g.value").alias("value"),
-        truncate_label_values(labels).alias("labels"),
+def _point(name: str, value: str, labels: str) -> str:
+    """SQL text: the (ts, name, value, labels) struct of one point of an
+    envelope row."""
+    return (
+        f"struct({ENVELOPE_TS_MS} AS ts, {sanitize_metric_name_sql(name)} AS name, "
+        f"{value} AS value, {truncate_label_values_sql(labels)} AS labels)"
     )
 
 
-def counters_to_points(envelopes: DataFrame) -> DataFrame:
-    """Counter envelope → cumulative total as float (nozzle.go:378-400)."""
-    c = envelopes.filter(F.col("type") == "counter")
-    labels = F.map_concat(
-        F.map_filter(
-            F.coalesce(F.col("tags"), F.expr("map()")),
-            lambda k, _: k != F.lit("source_id"),
-        ),
-        F.create_map(F.lit("source_id"), F.col("source_id")),
+#: SQL text: the points of one envelope row. A gauge yields one point per
+#: finite entry, NaN and ±Inf rejected (nozzle.go:346-376, transform.
+#: IsValidFloat in point_translator.go:99-101); its unit replaces any `unit`
+#: tag. A counter yields its cumulative total, NaN included
+#: (nozzle.go:378-400), and keeps its tags. A timer yields none. The
+#: envelope's source_id replaces any `source_id` tag.
+_POINTS = (
+    "CASE WHEN type = 'gauge' THEN transform(filter(map_entries(gauges), "
+    "g -> NOT isnan(g.value.value) AND abs(g.value.value) != double('Infinity')), "
+    "g -> "
+    + _point(
+        "g.key",
+        "g.value.value",
+        "map_concat(map_filter(coalesce(tags, map()), (k, v) -> k NOT IN ('source_id', 'unit')), "
+        "map('source_id', source_id), "
+        "map_filter(map('unit', g.value.unit), (k, v) -> v IS NOT NULL))",
     )
-    return c.filter(F.col("total").isNotNull()).select(
-        (F.col("ts") / 1_000_000).cast("long").alias("ts"),
-        sanitize_metric_name(F.col("name")).alias("name"),
-        F.col("total").alias("value"),
-        truncate_label_values(labels).alias("labels"),
+    + ") WHEN type = 'counter' AND total IS NOT NULL THEN array("
+    + _point(
+        "name",
+        "total",
+        "map_concat(map_filter(coalesce(tags, map()), (k, v) -> k != 'source_id'), "
+        "map('source_id', source_id))",
     )
+    + ") END"
+)
 
 
 def envelopes_to_points(envelopes: DataFrame) -> DataFrame:
-    """Gauges + counters only; `envelopes_to_samples` adds the timer
-    rollups."""
-    return gauges_to_points(envelopes).unionByName(counters_to_points(envelopes))
+    """Gauge and counter points, as (ts, name, value, labels): one
+    projection that explodes each envelope's points, so a batch is read
+    once. `envelopes_to_samples` adds the timer rollups."""
+    return envelopes.selectExpr(f"inline({_POINTS})")
 
 
 def envelopes_to_samples(envelopes: DataFrame) -> DataFrame:

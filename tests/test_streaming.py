@@ -10,9 +10,7 @@ from pyspark.sql import functions as F
 
 from metric_store_release_spark.streaming.nozzle import (
     ENVELOPE_SCHEMA,
-    counters_to_points,
     envelopes_to_points,
-    gauges_to_points,
 )
 from metric_store_release_spark.streaming.rollup import (
     rollup_counters,
@@ -155,6 +153,9 @@ def test_histogram_quantile_over_rollup(spark, engine, timer_envelopes):
 
 
 def test_gauge_and_counter_conversion(spark):
+    """The exact points of gauge, counter and timer envelopes, edge cases
+    included (nozzle.go:346-400, point_translator.go:48-101)."""
+    long_value = "x" * 300
     rows = [
         env_row(
             1,
@@ -163,25 +164,64 @@ def test_gauge_and_counter_conversion(spark):
             gauges={
                 "cpu": {"unit": "percent", "value": 12.5},
                 "memory": {"unit": "bytes", "value": float("nan")},  # rejected
+                "inf": {"unit": None, "value": float("inf")},  # rejected
+                "ninf": {"unit": None, "value": float("-inf")},  # rejected
+                "disk": {"unit": None, "value": 3.0},  # no unit label
             },
-            tags={"deployment": "cf"},
+            # the gauge's unit replaces a unit tag; the envelope's
+            # source_id replaces a source_id tag
+            tags={"deployment": "cf", "unit": "tag", "source_id": "other"},
         ),
         env_row(
             2, "counter", source_id="app-1", name="2bad.name", total=42.0,
-            tags={},
+            tags={"unit": "tag", "source_id": "other", "long": long_value},
         ),
+        env_row(3, "counter", source_id="app-1", name="nan", total=float("nan")),
+        env_row(4, "counter", source_id="app-1", name="none", total=None),
+        env_row(5, "timer", name="http", start=0, stop=NS, tags={"app_id": "A"}),
     ]
     env = spark.createDataFrame(rows, ENVELOPE_SCHEMA)
-    pts = envelopes_to_points(env).collect()
-    by_name = {r["name"]: r for r in pts}
-    assert set(by_name) == {"cpu", "_2bad_name"}  # sanitized + NaN dropped
-    cpu = by_name["cpu"]
-    assert cpu["value"] == 12.5
-    assert cpu["labels"]["unit"] == "percent"
-    assert cpu["labels"]["source_id"] == "app-1"
-    assert cpu["labels"]["deployment"] == "cf"
-    assert cpu["ts"] == 1000
-    assert by_name["_2bad_name"]["value"] == 42.0
+    got = {
+        (r["ts"], r["name"], repr(r["value"]), tuple(sorted(r["labels"].items())))
+        for r in envelopes_to_points(env).collect()
+    }
+    assert got == {
+        (1000, "cpu", "12.5",
+         (("deployment", "cf"), ("source_id", "app-1"), ("unit", "percent"))),
+        (1000, "disk", "3.0", (("deployment", "cf"), ("source_id", "app-1"))),
+        (2000, "_2bad_name", "42.0",
+         (("long", "x" * 256), ("source_id", "app-1"), ("unit", "tag"))),
+        (3000, "nan", "nan", (("source_id", "app-1"),)),
+    }
+
+
+def _plan_nodes(df) -> list[str]:
+    """The node names of `df`'s optimized logical plan."""
+    names, stack = [], [df._jdf.queryExecution().optimizedPlan()]
+    while stack:
+        node = stack.pop()
+        names.append(node.nodeName())
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return names
+
+
+def test_one_plan_branch_per_sample_family(spark, timer_envelopes, tmp_path):
+    """Each family of stored samples reads the envelopes once: the points
+    are one projection over one scan, and each rollup aggregates and
+    computes its running sums once for all the samples it emits (the
+    histogram's 12 `_bucket` rows, `_count` and `_sum` included)."""
+    path = str(tmp_path / "envelopes")
+    timer_envelopes.write.parquet(path)
+    env = spark.read.schema(ENVELOPE_SCHEMA).parquet(path)
+
+    for rollup in (rollup_counters, rollup_histograms):
+        nodes = _plan_nodes(rollup(env))
+        assert nodes.count("Aggregate") == 1, rollup.__name__
+        assert nodes.count("Window") == 1, rollup.__name__
+    points = envelopes_to_points(env)
+    assert points._jdf.queryExecution().optimizedPlan().collectLeaves().size() == 1
+    assert "Union" not in _plan_nodes(points)
 
 
 def test_ingest_stream_backpressure_and_shed(spark):
@@ -224,6 +264,34 @@ def test_ingest_stream_backpressure_and_shed(spark):
         kept_ts_ms = {r["ts"] for r in got.select("ts").collect()}
         for f in range(3):
             assert 100 * f * 1000 not in kept_ts_ms
+
+
+def test_ingest_stream_counts_every_envelope(spark, tmp_path):
+    """With metrics and no load shed, every envelope of every micro-batch
+    is counted as ingressed."""
+    from metric_store_release_spark.streaming.nozzle import (
+        NozzleMetrics,
+        ingest_stream,
+    )
+
+    src = str(tmp_path / "src")
+    for f in range(2):
+        rows = [
+            env_row(100 * f, "counter", name="c", total=1.0),
+            env_row(100 * f + 1, "gauge", gauges={"cpu": {"unit": "", "value": 1.0}}),
+            env_row(100 * f + 2, "timer", name="http", start=0, stop=NS),
+        ]
+        spark.createDataFrame(rows, ENVELOPE_SCHEMA).coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+    metrics = NozzleMetrics()
+    q = ingest_stream(
+        spark, src, str(tmp_path / "out"), str(tmp_path / "ckpt"),
+        max_files_per_trigger=1, metrics=metrics,
+    )
+    q.awaitTermination(120)
+    assert metrics.ingressed_envelopes_total == 6
+    assert metrics.dropped_envelopes_total == 0
 
 
 def test_ingest_stream_stores_every_sample(spark, timer_envelopes):
