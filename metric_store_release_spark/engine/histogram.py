@@ -124,10 +124,16 @@ def histogram_quantile(vector_df: DataFrame, q: float) -> DataFrame:
     # same-labelset check (histograms.test eval_fail, prometheus#9910)
     bounded = vector_df.selectExpr(
         "t", "filter(sig, e -> e.key != 'le') AS sig", "value", f"{_LE} AS le"
-    ).filter("le IS NOT NULL AND NOT isnan(le)")
-    grouped = aggregate(
-        bounded, ["t", "sig"], ["array_sort(collect_list(struct(le, value))) AS bk"]
     )
+    # the `le` check is the aggregation's own FILTER: as a Filter above the
+    # selector Catalyst would push it down to the scan, where it rebuilds
+    # the label map from `labels` for every sample row, outside codegen
+    grouped = aggregate(
+        bounded,
+        ["t", "sig"],
+        ["array_sort(collect_list(struct(le, value)) "
+         "FILTER (WHERE le IS NOT NULL AND NOT isnan(le))) AS bk"],
+    ).filter("size(bk) > 0")
     # the bucket index gets its own projection: the quantile refers to it
     # a dozen times, and each copy inline would be analysed, and evaluated,
     # anew

@@ -37,7 +37,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from metric_store_release_spark.datamodel import sig
-from metric_store_release_spark.sources.storage import PARTITION_COL
+from metric_store_release_spark.sources.storage import (
+    PARTITION_COL,
+    with_date,
+    write_sample_files,
+)
 
 # no leading underscore: Spark's file listing skips `_`-prefixed dirs when
 # scanning a parent, and the node dir must stay a readable scan root
@@ -149,9 +153,7 @@ class FederatedStore:
             [(n, node) for n in names for node in self.table.lookup(n)],
             f"name string, {_NODE_COL} int",
         )
-        routed = samples.join(F.broadcast(routes), "name").withColumn(
-            PARTITION_COL, F.to_date(F.timestamp_millis(F.col("ts")))
-        )
+        routed = with_date(samples.join(F.broadcast(routes), "name"))
         live = routed
         if down_nodes:
             if queued_at_ms is None:
@@ -166,8 +168,8 @@ class FederatedStore:
                     node,
                     queued_at_ms,
                 )
-        live.write.partitionBy(_NODE_COL, PARTITION_COL).mode(mode).parquet(
-            self.root
+        write_sample_files(
+            live, self.root, mode, partition_by=(_NODE_COL, PARTITION_COL)
         )
 
     @property
@@ -196,13 +198,8 @@ class FederatedStore:
             return 0
         batch_paths = [f"{log.queue_path(node)}/queued_at={b}" for b in batches]
         queued = self.spark.read.parquet(*batch_paths)
-        out = queued.withColumn(
-            PARTITION_COL, F.to_date(F.timestamp_millis(F.col("ts")))
-        )
         n = queued.count()
-        out.write.partitionBy(PARTITION_COL).mode("append").parquet(
-            self.node_path(node)
-        )
+        write_sample_files(with_date(queued), self.node_path(node))
         for p in batch_paths:
             shutil.rmtree(p)
         return n
@@ -326,8 +323,9 @@ class HandoffLog:
         return f"{self.root}/target={node}"
 
     def append(self, samples: DataFrame, node: int, queued_at_ms: int) -> None:
-        samples.write.mode("append").parquet(
-            f"{self.queue_path(node)}/queued_at={queued_at_ms}"
+        write_sample_files(
+            samples, f"{self.queue_path(node)}/queued_at={queued_at_ms}",
+            partition_by=(),
         )
 
     def disk_usage(self, node: int) -> int:

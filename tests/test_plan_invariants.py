@@ -203,6 +203,23 @@ def test_dashboard_plans_skip_only_vacuous_assertions(
     assert plan.count("raise_error(") == kept, plan
 
 
+def test_histogram_le_check_stays_above_the_scan(spark, dashboard):
+    """histogram_quantile skips buckets without a numeric `le` inside its
+    bucket aggregation. As a Filter, Catalyst would push the check through
+    the aggregations and the window to the scan, rebuilding the label map
+    to look `le` up for every sample row."""
+    end = 90 * MIN
+    query = (
+        "histogram_quantile(0.99, sum by (le) "
+        "(rate(http_duration_seconds_bucket[5m])))"
+    )
+    out = PromQLEngine(spark).query_range(dashboard, query, end - 60 * MIN, end, MIN)
+    plan = _plan(out)
+    below = plan[plan.index("Exchange"):].splitlines()
+    pushed = [ln for ln in below if "Filter" in ln and "[le]" in ln]
+    assert not pushed, pushed
+
+
 def _build_counter():
     """scripts/build_profile.py's counter of py4j commands and analysed
     DataFrames."""
